@@ -27,6 +27,7 @@ object Pipeline {
   final val DefaultThreshold = 40 // phdupes.rs:353-355
 
   private val warmedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   def session(master: String, shufflePartitions: Int = 32): SparkSession = {
     // shuffle through RAM, not container disk: local[N] is the stand-in for
@@ -65,7 +66,10 @@ object Pipeline {
         s.range(0, 10).write.mode("overwrite").parquet(p)
         s.read.parquet(p).count()
         new scala.reflect.io.Directory(f.toFile).deleteRecursively()
-      } catch { case scala.util.control.NonFatal(_) => }
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          log.warn("session warm-up failed; the first stages run cold", e)
+      }
     }
     s
   }

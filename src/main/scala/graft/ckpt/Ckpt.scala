@@ -122,6 +122,4 @@ final class Ckpt(spark: SparkSession, workDir: String) {
 
   def lineage: DataFrame = spark.read.parquet(s"$workDir/_lineage")
   def metrics: DataFrame = spark.read.parquet(s"$workDir/_metrics")
-  def partitionLineage: DataFrame =
-    spark.read.parquet(s"$workDir/_lineage_files")
 }

@@ -17,23 +17,6 @@ final case class DecodedImage(w: Int, h: Int, argb: Array[Int],
     while (i < argb.length) { out(i) = Pdq.luma601(argb(i)).toFloat; i += 1 }
     out
   }
-  /** Canonical RGBA byte stream for pixel-hashing (scanner.rs:1393-1406
-    * hashes the decoded pixel buffer so recompressed copies differ but
-    * bit-identical decodes collide). */
-  def rgbaBytes: Array[Byte] = {
-    val out = new Array[Byte](argb.length * 4)
-    var i = 0
-    while (i < argb.length) {
-      val p = argb(i)
-      out(4 * i) = ((p >> 16) & 0xff).toByte
-      out(4 * i + 1) = ((p >> 8) & 0xff).toByte
-      out(4 * i + 2) = (p & 0xff).toByte
-      out(4 * i + 3) = ((p >> 24) & 0xff).toByte
-      i += 1
-    }
-    out
-  }
-
   /** RGBA16 byte stream for pixel-hashing — the reference hashes the
     * `to_rgba16` buffer precisely so a 16-bit source and its 8-bit
     * conversion get DIFFERENT pixel hashes (scanner.rs:1393-1406). Native

@@ -46,9 +46,10 @@ import org.apache.spark.sql.functions._
  * PDQ hash (h0..h3, chunk widths 16/32) or the 64-bit DCT pHash
  * (`phash64`, widths 8/16 — HammingHash<u64> semantics,
  * hamminghash.rs:23-41). The algorithm is frozen into `_meta` at build
- * alongside the chunk width; probes verify with the matching Hamming
- * distance and expand the matching variant column (`variants` /
- * `phash_variants` — store-1/query-8 either way).
+ * alongside the chunk width and names a [[HashLayout]]; the chunker, the
+ * variant expansion (`variants` / `phash_variants` — store-1/query-8
+ * either way), the mask explode and the Hamming verify are the
+ * [[BandJoin]] core's, over that layout.
  *
  * Semantics match the full-join path including the low-quality gate
  * (scanner.rs:1579-1594): low-confidence rows are indexed and probed at
@@ -123,9 +124,6 @@ object BandIndex {
   def algoOf(spark: SparkSession, path: String): String =
     readMeta(spark, algoPath(path)).getOrElse(AlgoPdq)
 
-  private def hashBits(algo: String): Int =
-    if (algo == AlgoPhash64) 64 else 256
-
   /** True when the index has at least one committed segment. */
   def exists(spark: SparkSession, path: String): Boolean = {
     val f = fs(spark, path)
@@ -155,21 +153,14 @@ object BandIndex {
   private def bandValTyped(c: Column, chunkBits: Int) =
     if (chunkBits <= 16) c.cast("int") else c
 
-  /** The per-algorithm hash payload columns carried beside each band key
-    * (what the in-join Hamming verify needs). */
-  private def hashCols(algo: String): Seq[String] =
-    if (algo == AlgoPhash64) Seq("phash64") else Seq("h0", "h1", "h2", "h3")
-
-  private def chunksOf(algo: String, hs: Seq[Column], chunkBits: Int): Column =
-    if (algo == AlgoPhash64) BandJoin64.chunksArray64(hs.head, chunkBits)
-    else BandJoin.chunksArrayB(hs, chunkBits)
-
+  /** Radius-0 band rows carrying the layout's hash columns beside each
+    * key (what the in-join Hamming verify needs). */
   private def bandRows(sig: DataFrame, chunkBits: Int, algo: String): DataFrame = {
-    val hs = hashCols(algo)
+    val hs = HashLayout.of(algo).hashCols.map(col)
     sig.filter(col("has_pdq"))
-      .select(col("ord") +: col("low_conf") +: hs.map(col): _*)
+      .select(col("ord") +: col("low_conf") +: hs: _*)
       .select(col("*"),
-        posexplode(chunksOf(algo, hs.map(col), chunkBits))
+        posexplode(BandJoin.chunksArrayB(hs, chunkBits))
           .as(Seq("band_idx", "band_val")))
       .withColumn("band_val", bandValTyped(col("band_val"), chunkBits))
   }
@@ -324,14 +315,13 @@ object BandIndex {
     * tests can cross them with small corpora. */
   def autoBuildBits(algo: String, nConf: Long, threshold: Int,
                     wideCutoff: Long = BandJoin.AutoWideCutoff,
-                    wideCutoff64: Long = BandJoin64.AutoWideCutoff): Int =
-    if (algo == AlgoPhash64) {
-      val w = if (nConf <= wideCutoff64) BandJoin64.BitsPerChunk else 16
-      if (BandJoin.maskCount(threshold / (64 / w), w) <= BandJoin.MaxMasksPerSide) w
-      else BandJoin64.BitsPerChunk
-    } else if (nConf > wideCutoff &&
-      BandJoin.maskCount(threshold / 8, 32) <= BandJoin.MaxMasksPerSide) 32
-    else BandJoin.BitsPerChunk
+                    wideCutoff64: Long = BandJoin64.AutoWideCutoff): Int = {
+    val l = HashLayout.of(algo)
+    val cutoff = if (l == HashLayout.Phash64) wideCutoff64 else wideCutoff
+    if (nConf > cutoff && BandJoin.maskCount(threshold / l.numChunks(l.wideBits),
+      l.wideBits) <= BandJoin.MaxMasksPerSide) l.wideBits
+    else l.parityBits
+  }
 
   /** Rebuild this index at `newBits` from the corpus signatures — an
     * explicit O(corpus) maintenance operation. Protocol: build a complete
@@ -401,12 +391,10 @@ object BandIndex {
    */
   def probe(spark: SparkSession, path: String, deltaSig: DataFrame,
             threshold: Int): DataFrame = {
-    require(threshold <= 63,
-      s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
-    val algo = algoOf(spark, path)
+    val layout = HashLayout.of(algoOf(spark, path))
     val chunkBits = chunkBitsOf(spark, path)
-    val numChunks = hashBits(algo) / chunkBits
-    val tol = threshold / numChunks
+    val numChunks = layout.numChunks(chunkBits)
+    val tol = BandJoin.chunkTolerance(layout, threshold, chunkBits)
     // the index side is radius-0, so the whole probe ball sits on the
     // delta — feasibility is arithmetic-checked BEFORE any mask array
     // materializes (at 32-bit chunks this limits threshold ≤ 31:
@@ -417,37 +405,28 @@ object BandIndex {
         s"(> ${BandJoin.MaxMasksPerSide}) — rebuild the index with " +
         "narrower chunks or lower the threshold")
 
-    val hs = hashCols(algo)
-    val cAliases = hs.zipWithIndex.map { case (n, i) => col(n).as(s"c$i") }
-    val cCols = hs.indices.map(i => col(s"c$i"))
-    val vCols = hs.indices.map(i => col(s"v$i"))
+    val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
+    val vCols = vNames.map(col)
     val idx = read(spark, path)
       .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
-        col("low_conf").as("c_low") +: cAliases: _*)
+        col("low_conf").as("c_low") +:
+        layout.hashCols.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
 
     val delta = deltaSig.filter(col("has_pdq"))
-    val variantsCol = if (algo == AlgoPhash64) "phash_variants" else "variants"
-    val vFields: Seq[Column] =
-      if (algo == AlgoPhash64) Seq(col("v").as("v0"))
-      else hs.indices.map(i => col("v").getItem(i).as(s"v$i"))
     val prbBase = delta
       .select(col("ord"), col("low_conf").as("q_low"),
-        explode(col(variantsCol)).as("v"))
-      .select(col("ord") +: col("q_low") +: vFields: _*)
+        explode(col(layout.variantsCol)).as("v"))
+      .select(col("ord") +: col("q_low") +: layout.splitVariant(col("v"), vNames): _*)
 
     // F2 split (scanner.rs:1579-1594): confident rows expand the full
     // radius-tol ball; low-confidence rows match exact-only, so they probe
     // a SINGLE bucket per chunk (mask 0) instead of paying V(tol, bits)
     // exploded keys that the dist ≤ 0 filter would discard anyway
-    def expand(base: DataFrame, radius: Int): DataFrame = base
-      .select(col("*"),
-        posexplode(chunksOf(algo, vCols, chunkBits)).as(Seq("band_idx", "chunk")))
-      .withColumn("mask", explode(lit(BandJoin.masksB(radius, chunkBits))))
-      .withColumn("band_val",
-        bandValTyped(col("chunk").bitwiseXOR(col("mask")), chunkBits))
-      .drop("chunk", "mask")
-      .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
-        col("q_low") +: vCols: _*)
+    def expand(base: DataFrame, radius: Int): DataFrame =
+      BandJoin.bandKeys(base, vCols, radius, chunkBits)
+        .withColumn("band_val", bandValTyped(col("band_val"), chunkBits))
+        .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
+          col("q_low") +: vCols: _*)
     val prb = expand(prbBase.filter(!col("q_low")), tol)
       .unionByName(expand(prbBase.filter(col("q_low")), 0))
 
@@ -483,13 +462,10 @@ object BandIndex {
         idx
       }
 
-    val verify =
-      if (algo == AlgoPhash64) BandJoin64.hamming64(vCols.head, cCols.head)
-      else BandJoin.hammingCols(vCols, cCols)
     // per-side limit: either side low-confidence ⇒ exact only (F2)
     prb.hint("shuffle_hash").join(idxSide, Seq("band_idx", "band_val"))
       .where(col("q_ord") =!= col("c_ord"))
-      .withColumn("dist", verify)
+      .withColumn("dist", BandJoin.hammingCols(vCols, cNames.map(col)))
       .where(col("dist") <=
         when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
       .groupBy(col("q_ord").as("a"), col("c_ord").as("b"))

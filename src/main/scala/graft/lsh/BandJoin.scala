@@ -34,6 +34,11 @@ import org.apache.spark.sql.functions._
  *    groupBy + min instead of pairwise edges: a cluster of k byte-identical
  *    images costs k edges, not k²/2, with the same connected components.
  *  - AQE skew-join splitting is enabled session-wide for the residual skew.
+ *
+ * One core serves both hash widths (the reference's `HammingHash` for the
+ * 256-bit PDQ hash and for the u64 pHash, hamminghash.rs:23-149): every
+ * entry point takes a [[HashLayout]] naming the hash columns, the variant
+ * column and the chunk widths; [[BandJoin64]] and [[BandIndex]] bind it.
  */
 object BandJoin {
   final val NumChunks = 16
@@ -52,17 +57,7 @@ object BandJoin {
     * `chunkBits = 0` (auto). 16 = reference parity, right up to ~10⁷
     * confident rows; 32 = the ≥10⁷ setting (identical edge set by
     * pigeonhole, proven by LshSpec width-equality). */
-  def autoChunkBits(n: Long): Int = if (n <= AutoWideCutoff) BitsPerChunk else 32
-
-  /** Confident-row count for the auto knobs (width + salt): the caller's
-    * hint when it already paid for the count (Pipeline reads it back from
-    * the signatures stage metrics — round-3 VERDICT #8), else ONE count
-    * job shared by both knobs. -1 when neither knob needs it. */
-  private def resolveConfCount(conf: DataFrame, nConfHint: Long,
-                               needed: Boolean): Long =
-    if (nConfHint >= 0) nConfHint
-    else if (needed) conf.count()
-    else -1L
+  def autoChunkBits(n: Long): Int = HashLayout.Pdq.autoChunkBits(n)
 
   /** XOR masks within Hamming radius r of a 16-bit value (r ∈ 0..2 used;
     * r=3 supported for threshold 48..63, scanner.rs:1755-1767). */
@@ -104,6 +99,16 @@ object BandJoin {
     * the conservative upper bound is used instead. */
   final val BallAggBudget = 256000000L
 
+  /** Ceiling on the TARGETED-salt hot-key set: past it (≤ n·numChunks/cap
+    * keys can exceed the cap, so ~10⁸ rows at 16-bit) the InSet literal
+    * stops being cheap to ship per task and global salting takes over. */
+  final val MaxHotKeys = 100000
+
+  /** Combined (band_idx, band_val) key for hot-key membership tests —
+    * collision-free while band_val < 2³², i.e. chunkBits ≤ 32. */
+  private def combinedKey(idx: Column, value: Column): Column =
+    idx.cast("long") * lit(1L << 32) + value
+
   /** AUTO salt factor (`saltFactor = 0`): top JOIN-KEY bucket occupancy
     * over the confident rows, divided by [[SaltBucketCap]].
     *
@@ -121,22 +126,10 @@ object BandJoin {
     * for the measurement. Falls back to the conservative upper bound
     * max₀·|B(rIdx)| (over-salting is recall-neutral) if the occupancy
     * table itself is too wide for the budget. */
-  /** Ceiling on the TARGETED-salt hot-key set: past it (≤ n·numChunks/cap
-    * keys can exceed the cap, so ~10⁸ rows at 16-bit) the InSet literal
-    * stops being cheap to ship per task and global salting takes over. */
-  final val MaxHotKeys = 100000
-
-  /** Combined (band_idx, band_val) key for hot-key membership tests —
-    * collision-free while band_val < 2³², i.e. chunkBits ≤ 32. */
-  private def combinedKey(idx: Column, value: Column): Column =
-    idx.cast("long") * lit(1L << 32) + value
-
-  private[graft] def autoSaltFactor(conf: DataFrame, hs: Seq[String],
-                                    chunkBits: Int,
-                                    chunks: Seq[Column] => Column,
-                                    rIdx: Int = 0,
+  private[graft] def autoSaltFactor(layout: HashLayout, conf: DataFrame,
+                                    chunkBits: Int, rIdx: Int = 0,
                                     cap: Long = SaltBucketCap): Int =
-    autoSalt(conf, hs, chunkBits, chunks, rIdx, cap)._1
+    autoSalt(layout, conf, chunkBits, rIdx, cap)._1
 
   /** AUTO salt decision: (factor, hot-key set). The key set — join keys
     * whose ball occupancy exceeds the cap — enables TARGETED salting:
@@ -144,13 +137,11 @@ object BandJoin {
     * side pays ×S on the degenerate mass alone instead of on the whole
     * corpus. None ⇒ salt globally (set too large to ship, conservative
     * fallback path, or 64-bit chunks where keys can't be combined). */
-  private[graft] def autoSalt(conf: DataFrame, hs: Seq[String],
-                              chunkBits: Int,
-                              chunks: Seq[Column] => Column,
-                              rIdx: Int = 0,
-                              cap: Long = SaltBucketCap): (Int, Option[Array[Long]]) = {
+  private def autoSalt(layout: HashLayout, conf: DataFrame, chunkBits: Int,
+                       rIdx: Int, cap: Long): (Int, Option[Array[Long]]) = {
     val occ0 = conf
-      .select(posexplode(chunks(hs.map(col))).as(Seq("band_idx", "band_val")))
+      .select(posexplode(chunksArrayB(layout.hashCols.map(col), chunkBits))
+        .as(Seq("band_idx", "band_val")))
       .groupBy("band_idx", "band_val").agg(count(lit(1)).as("n"))
     val mc = maskCount(rIdx, chunkBits)
     def headMax(df: DataFrame): Long = {
@@ -275,8 +266,9 @@ object BandJoin {
         .bitwiseAND(lit(0xffffL)).cast("int")
     }: _*)
 
-  /** Generalized chunk extraction: 256/bits chunks of width `bits` (8, 16,
-    * 32 or 64) as longs — the MIH chunk-count knob. The reference pins 16
+  /** Generalized chunk extraction: 64·|h|/bits chunks of width `bits` (8,
+    * 16, 32 or 64) of the hash held in the longs `h` (low word first) —
+    * the MIH chunk-count knob, at either hash width. The reference pins 16
     * chunks (right for n≈10⁶: E[bucket] = n/2¹⁶ ≈ 15); at corpus scale the
     * optimal chunk count shrinks toward 256/log₂(n) (Norouzi et al., "Fast
     * Search in Hamming Space with Multi-Index Hashing", CVPR'12), so 8×32-bit
@@ -285,27 +277,65 @@ object BandJoin {
     require(Set(8, 16, 32, 64)(bits), s"chunk width $bits must divide 64")
     val perLong = 64 / bits
     val mask = if (bits == 64) -1L else (1L << bits) - 1
-    array((0 until 256 / bits).map { k =>
+    array((0 until h.size * perLong).map { k =>
       shiftrightunsigned(h(k / perLong), (k % perLong) * bits)
         .bitwiseAND(lit(mask)).cast("long")
     }: _*)
   }
 
-  /** Σ bit_count(xor) over the 4 longs — 256-bit Hamming distance as a
+  /** Σ bit_count(xor) over the hash longs — Hamming distance as a
     * codegen'd Catalyst expression (hamminghash.rs:55-58 semantics). */
   def hammingCols(a: Seq[Column], b: Seq[Column]): Column =
     a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _)
 
   /** Explode a hash-carrying frame into (band_idx, band_val) keys with
-    * radius-r multi-probe masks. `hs` are the 4 hash columns to band on. */
-  private def bandKeys(df: DataFrame, hs: Seq[String], radius: Int,
-                       chunkBits: Int): DataFrame = {
-    val h = hs.map(col)
+    * radius-r multi-probe masks: band_val = chunk ⊕ mask for every mask of
+    * the radius-r ball. `hs` are the hash longs to band on. */
+  private[lsh] def bandKeys(df: DataFrame, hs: Seq[Column], radius: Int,
+                            chunkBits: Int): DataFrame =
     df.select(col("*"),
-        posexplode(chunksArrayB(h, chunkBits)).as(Seq("band_idx", "chunk")))
+        posexplode(chunksArrayB(hs, chunkBits)).as(Seq("band_idx", "chunk")))
       .withColumn("mask", explode(lit(masksB(radius, chunkBits))))
       .withColumn("band_val", col("chunk").bitwiseXOR(col("mask")))
       .drop("chunk", "mask")
+
+  /** Per-chunk tolerance ⌊t/m⌋ — pigeonhole: dist ≤ t over m chunks ⇒
+    * some chunk differs in ≤ ⌊t/m⌋ bits, exhaustive recall at any width.
+    * The reference caps similarity at 63 for EITHER hash width
+    * (group_files_generic asserts MAX_SIMILARITY_256, scanner.rs:1649-1655). */
+  private[lsh] def chunkTolerance(layout: HashLayout, threshold: Int,
+                                  chunkBits: Int): Int = {
+    require(threshold <= 63,
+      s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
+    threshold / layout.numChunks(chunkBits)
+  }
+
+  /** (rIdx, rPrb): the probe radius split between the index and probe
+    * sides of the join, rIdx + rPrb = ⌊t/m⌋ (triangle inequality over the
+    * chunk). Minimizes total exploded rows: the probe side is 8× heavier
+    * (one row per dihedral variant), so it weighs 8×. 16-bit chunks,
+    * tol=2 → (2,0): 137+8 rows/chunk vs (1,1): 17+136 — and the shuffled
+    * probe side stays minimal. The same choice also minimizes JOIN
+    * COLLISIONS: expected collisions scale with the mask PRODUCT
+    * |B(rIdx)|·|B(rPrb)|, minimized at the extremes — (2,0): 137·1 vs
+    * (1,1): 17·17=289. Feasibility (per-side mask cap) is checked
+    * ARITHMETICALLY before any mask array materializes, so an infeasible
+    * width/threshold combination fails fast (maskCount grows as C(bits,
+    * tol) — e.g. 64-bit chunks at threshold 63 would need ~10¹³ masks and
+    * must never reach the driver-side lit() build). */
+  private[graft] def radiusSplit(layout: HashLayout, threshold: Int,
+                                 chunkBits: Int): (Int, Int) = {
+    val tol = chunkTolerance(layout, threshold, chunkBits)
+    val feasible = (0 to tol).filter(r =>
+      maskCount(r, chunkBits) <= MaxMasksPerSide &&
+        maskCount(tol - r, chunkBits) <= MaxMasksPerSide)
+    require(feasible.nonEmpty,
+      s"threshold $threshold over $chunkBits-bit chunks: no probe-radius " +
+        s"split fits $MaxMasksPerSide masks/side — lower the threshold or " +
+        s"use narrower chunks")
+    val rIdx = feasible.minBy(r =>
+      maskCount(r, chunkBits) + 8L * maskCount(tol - r, chunkBits))
+    (rIdx, tol - rIdx)
   }
 
   /**
@@ -322,40 +352,43 @@ object BandJoin {
    * `saltFactor` = 0 (the default) MEASURES the top bucket and engages a
    * derived factor only past [[SaltBucketCap]] — see [[autoSaltFactor]].
    *
-   * `sig` needs: ord, h0..h3, variants, low_conf, has_pdq.
-   * Returns (a, b, dist) with a < b.
+   * `sig` needs: ord, the layout's hash and variant columns, low_conf,
+   * has_pdq. Returns (a, b, dist) with a < b.
    */
   def fuzzyEdges(sig: DataFrame, threshold: Int, saltFactor: Int = 0,
-                 chunkBits: Int = 0, nConfHint: Long = -1): DataFrame = {
+                 chunkBits: Int = 0, nConfHint: Long = -1,
+                 layout: HashLayout = HashLayout.Pdq): DataFrame = {
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
-    // Round-6 rep collapse (guide §2.3 "shuffle fewer bytes" / §8 "decide
-    // with small rows"): whether two rows collide in the band join, and
-    // the verified distance of the pair, depend ONLY on (h0..h3, variants)
-    // — never on ord. Rows sharing them (lossless transcodes, exact
-    // copies, re-containered pixels) are collapsed to one REPRESENTATIVE
-    // before the ×(numChunks·masks) band explode; collision volume falls
-    // with the SQUARE of the distinct ratio. The edge set is then rebuilt
-    // exactly: intra-cluster pairs are all C(k,2) pairs at dist 0 (the
-    // identity variant is variants(0)); cross-cluster member pairs inherit
-    // their rep pair's dist because dist is hash-determined.
-    val win = Window.partitionBy("h0", "h1", "h2", "h3", "variants")
-    val members = conf.select("ord", "h0", "h1", "h2", "h3", "variants")
-      .withColumn("rep", min("ord").over(win))
+    // Rep collapse (guide §2.3 "shuffle fewer bytes" / §8 "decide with
+    // small rows"): whether two rows collide in the band join, and the
+    // verified distance of the pair, depend ONLY on (hash, variants) —
+    // never on ord. Rows sharing them (lossless transcodes, exact copies,
+    // re-containered pixels) are collapsed to one REPRESENTATIVE before
+    // the ×(numChunks·masks) band explode; collision volume falls with the
+    // SQUARE of the distinct ratio. The edge set is then rebuilt exactly:
+    // intra-cluster pairs are all C(k,2) pairs at dist 0 (precondition,
+    // true of every producer here: the variants hold the hash itself —
+    // PDQ's identity variant, PHash.dihedral(h)(0) == h); cross-cluster
+    // member pairs inherit their rep pair's dist because dist is
+    // hash-determined.
+    val keyCols = (layout.hashCols :+ layout.variantsCol).map(col)
+    val members = conf.select(col("ord") +: keyCols: _*)
+      .withColumn("rep", min("ord").over(Window.partitionBy(keyCols: _*)))
     val mem = members.select(col("rep"), col("ord"))
     val reps = members.where(col("ord") === col("rep"))
-      .select("ord", "h0", "h1", "h2", "h3", "variants")
-      .withColumn("has_pdq", lit(true))
-      .withColumn("low_conf", lit(false))
-    // resolve the shared count ONCE over the ORIGINAL conf rows, so the
-    // auto chunk-width decision is identical to the pre-collapse plan at
-    // every corpus size (the salt occupancy is measured over reps — the
-    // rows the join actually sees)
-    val nConf = resolveConfCount(conf, nConfHint,
-      needed = chunkBits == 0 || saltFactor == 0)
+      .select(col("ord") +: keyCols: _*)
+    // ONE shared count feeds both auto knobs (width + salt), resolved over
+    // the ORIGINAL conf rows so the auto width is the pre-collapse one; a
+    // caller that pins both, or passes its already-known count (Pipeline's
+    // signatures-stage metric), pays no job
+    val nConf =
+      if (nConfHint >= 0) nConfHint
+      else if (chunkBits == 0 || saltFactor == 0) conf.count()
+      else -1L
 
-    val repEdges = bandMatches(reps, threshold, saltFactor, chunkBits, nConf)
-      .withColumn("dist", hammingCols(Seq("v0", "v1", "v2", "v3").map(col),
-        Seq("c0", "c1", "c2", "c3").map(col)))
+    val repEdges = bandMatches(layout, reps, threshold, saltFactor, chunkBits, nConf)
+      .withColumn("dist", hammingCols(layout.hashNames("v").map(col),
+        layout.hashNames("c").map(col)))
       .where(col("dist") <= threshold)
       .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
         greatest(col("q_ord"), col("c_ord")).as("rb"))
@@ -375,100 +408,66 @@ object BandJoin {
     cross.unionByName(intra)
   }
 
-  /** The raw band-collision rows (post-join, pre-verify) — exposed for
-    * diagnostics (tools/JoinProbe) and the verify step above. */
-  private[graft] def bandMatches(sig: DataFrame, threshold: Int,
-                                 saltFactor: Int = 0,
-                                 chunkBits0: Int = BitsPerChunk,
-                                 nConfHint: Long = -1): DataFrame = {
-    val conf = sig.filter(col("has_pdq") && !col("low_conf"))
-    // ONE shared count feeds both auto knobs (width + salt); a caller
-    // that pins both, or passes its already-known count, pays no job
-    val nConf = resolveConfCount(conf, nConfHint,
-      needed = chunkBits0 == 0 || saltFactor == 0)
+  /** The raw band-collision rows (post-join, pre-verify) of `conf` — rows
+    * already filtered to the confident ones — with the probe variant in
+    * v0.. and the stored hash in c0..; exposed for diagnostics
+    * (tools/JoinProbe) and the verify step above. `nConf` feeds the auto
+    * width (`chunkBits0 = 0`) and auto salt (`saltFactor = 0`). */
+  private[graft] def bandMatches(layout: HashLayout, conf: DataFrame,
+                                 threshold: Int, saltFactor: Int,
+                                 chunkBits0: Int, nConf: Long): DataFrame = {
+    // the packed key below holds the salt (0..S-1) in 6 bits: a factor
+    // past 64 would make distinct (band_val, salt) pairs share a key
+    require(saltFactor >= 0 && saltFactor <= 64,
+      s"salt factor $saltFactor outside 0..64 (the packed band key's 6 salt bits)")
     val chunkBits = if (chunkBits0 != 0) chunkBits0 else {
-      val bits = autoChunkBits(nConf)
-      log.info(s"band join auto chunk width: $nConf confident rows -> $bits-bit chunks")
+      val bits = layout.autoChunkBits(nConf)
+      log.info(s"${layout.algo} band join auto chunk width: $nConf confident " +
+        s"rows -> $bits-bit chunks")
       bits
     }
-    val numChunks = 256 / chunkBits
-    // the reference caps similarity at 63 for EITHER hash width
-    // (group_files_generic asserts MAX_SIMILARITY_256, scanner.rs:1649-1655)
-    require(threshold <= 63,
-      s"similarity $threshold > 63 needs R=4 probing (scanner.rs:1649-1655)")
-    // pigeonhole: dist ≤ t over numChunks chunks ⇒ some chunk differs in
-    // ≤ ⌊t/numChunks⌋ bits — exhaustive recall at any chunk width
-    val tol = threshold / numChunks
-    // split the probe radius to minimize total exploded rows: the probe
-    // side is 8× heavier (one row per dihedral variant), so weigh it 8×.
-    // 16-bit chunks, tol=2 → (2,0): 137+8 rows/chunk vs (1,1): 17+136 —
-    // and the shuffled probe side stays minimal. The same choice also
-    // minimizes JOIN COLLISIONS: expected collisions scale with the mask
-    // PRODUCT |B(rIdx)|·|B(rPrb)| (each side lands in that many buckets),
-    // and the product is minimized at the extremes — (2,0): 137·1 vs
-    // (1,1): 17·17=289. One-sided radius wins on both counts. Feasibility (per-side mask
-    // cap) is checked ARITHMETICALLY before any mask array materializes, so
-    // an infeasible width/threshold combination fails fast (maskCount grows
-    // as C(bits, tol) — e.g. 64-bit chunks at threshold 63 would need ~10¹³
-    // masks and must never reach the driver-side lit() build).
-    val feasible = (0 to tol).filter(r =>
-      maskCount(r, chunkBits) <= MaxMasksPerSide &&
-        maskCount(tol - r, chunkBits) <= MaxMasksPerSide)
-    require(feasible.nonEmpty,
-      s"threshold $threshold over $chunkBits-bit chunks: no probe-radius " +
-        s"split fits $MaxMasksPerSide masks/side — lower the threshold or " +
-        s"use narrower chunks")
-    val rIdx = feasible.minBy(r =>
-      maskCount(r, chunkBits) + 8L * maskCount(tol - r, chunkBits))
-    val rPrb = tol - rIdx
+    val (rIdx, rPrb) = radiusSplit(layout, threshold, chunkBits)
 
     val (saltF, hotKeySet) =
       if (saltFactor != 0) (saltFactor, None)
       else if (nConf <= AutoSaltMinRows) (1, None)
-      else autoSalt(conf, Seq("h0", "h1", "h2", "h3"), chunkBits,
-        chunksArrayB(_, chunkBits), rIdx)
+      else autoSalt(layout, conf, chunkBits, rIdx, SaltBucketCap)
 
-    // Packed single-long join key (round 6, guide §2.3 narrower types):
-    // band_idx (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (< 32 =
-    // MaxSaltFactor) fold into one non-overlapping long — one 8-byte key
-    // instead of three columns halves the shuffled key bytes and gives
-    // the shuffled-hash join a single-long lookup. Only at chunkBits ≤ 32
-    // (64-bit chunk values cannot pack); the 64-bit path keeps the
-    // 3-column key.
+    // Packed single-long join key (guide §2.3 narrower types): band_idx
+    // (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (< 64) fold into one
+    // non-overlapping long — one 8-byte key instead of three columns
+    // halves the shuffled key bytes and gives the shuffled-hash join a
+    // single-long lookup. Only at chunkBits ≤ 32 (64-bit chunk values
+    // cannot pack); the 64-bit path keeps the 3-column key.
     val packed = chunkBits <= 32
-    def packKey(idxC: Column, valC: Column, saltC: Column): Column =
-      idxC.cast("long") * lit(1L << 38) + valC * lit(64L) + saltC
     val joinKeys = if (packed) Seq("bkey") else Seq("band_idx", "band_val", "salt")
+    def keyed(df: DataFrame, payload: Seq[String]): DataFrame =
+      if (!packed) df
+      else df.select((col("band_idx").cast("long") * lit(1L << 38) +
+        col("band_val") * lit(64L) + col("salt")).as("bkey") +: payload.map(col): _*)
 
-    val idx0 = bandKeys(
-      conf.select(col("ord"), col("h0"), col("h1"), col("h2"), col("h3")),
-      Seq("h0", "h1", "h2", "h3"), rIdx, chunkBits)
-      .select(col("band_idx"), col("band_val"), col("ord").as("c_ord"),
-        col("h0").as("c0"), col("h1").as("c1"), col("h2").as("c2"), col("h3").as("c3"))
-    val idx1 = if (saltF <= 1) idx0.withColumn("salt", lit(0))
-      else idx0.withColumn("salt", saltIndexCol(saltF, hotKeySet, col("c_ord")))
-    val idx = if (!packed) idx1
-      else idx1.select(
-        packKey(col("band_idx"), col("band_val"), col("salt")).as("bkey"),
-        col("c_ord"), col("c0"), col("c1"), col("c2"), col("c3"))
+    val hs = layout.hashCols
+    val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
+    val idx0 = bandKeys(conf.select(col("ord") +: hs.map(col): _*),
+      hs.map(col), rIdx, chunkBits)
+      .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
+        hs.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
+    val idx = keyed(if (saltF <= 1) idx0.withColumn("salt", lit(0))
+      else idx0.withColumn("salt", saltIndexCol(saltF, hotKeySet, col("c_ord"))),
+      "c_ord" +: cNames)
 
     // array_distinct: symmetric images repeat dihedral hashes (rot180 ==
     // id etc.); duplicate variant rows would generate duplicate collisions
     // that the verify pays for and the groupBy then discards
     val prbBase = conf
-      .select(col("ord"), explode(array_distinct(col("variants"))).as("v"))
-      .select(col("ord"),
-        col("v").getItem(0).as("v0"), col("v").getItem(1).as("v1"),
-        col("v").getItem(2).as("v2"), col("v").getItem(3).as("v3"))
-    val prb0 = bandKeys(prbBase, Seq("v0", "v1", "v2", "v3"), rPrb, chunkBits)
-      .select(col("band_idx"), col("band_val"), col("ord").as("q_ord"),
-        col("v0"), col("v1"), col("v2"), col("v3"))
-    val prb1 = if (saltF <= 1) prb0.withColumn("salt", lit(0))
-      else prb0.withColumn("salt", explode(saltProbeCol(saltF, hotKeySet)))
-    val prb = if (!packed) prb1
-      else prb1.select(
-        packKey(col("band_idx"), col("band_val"), col("salt")).as("bkey"),
-        col("q_ord"), col("v0"), col("v1"), col("v2"), col("v3"))
+      .select(col("ord"), explode(array_distinct(col(layout.variantsCol))).as("v"))
+      .select(col("ord") +: layout.splitVariant(col("v"), vNames): _*)
+    val prb0 = bandKeys(prbBase, vNames.map(col), rPrb, chunkBits)
+      .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
+        vNames.map(col): _*)
+    val prb = keyed(if (saltF <= 1) prb0.withColumn("salt", lit(0))
+      else prb0.withColumn("salt", explode(saltProbeCol(saltF, hotKeySet))),
+      "q_ord" +: vNames)
 
     // Symmetric probing (vs the reference's scan-order-dependent i<j,
     // scanner.rs:1714-1717): a pair is an edge when EITHER side's dihedral
@@ -496,18 +495,16 @@ object BandJoin {
    * variant) links to the hub. Components are identical to pairwise edges
    * at linear instead of quadratic edge count.
    */
-  def exactEdges(sig: DataFrame): DataFrame = {
+  def exactEdges(sig: DataFrame, layout: HashLayout = HashLayout.Pdq): DataFrame = {
+    val hs = layout.hashCols
     val withPdq = sig.filter(col("has_pdq"))
-    val hubs = withPdq.groupBy("h0", "h1", "h2", "h3")
-      .agg(min("ord").as("hub"))
+    val hubs = withPdq.groupBy(hs.map(col): _*).agg(min("ord").as("hub"))
     val vars = withPdq
-      .select(col("ord"), explode(array_distinct(col("variants"))).as("v"))
-      .select(col("ord"),
-        col("v").getItem(0).as("h0"), col("v").getItem(1).as("h1"),
-        col("v").getItem(2).as("h2"), col("v").getItem(3).as("h3"))
+      .select(col("ord"), explode(array_distinct(col(layout.variantsCol))).as("v"))
+      .select(col("ord") +: layout.splitVariant(col("v"), hs): _*)
     // both sides scale with N (hubs ≈ distinct hashes) — never broadcast;
     // sort-merge degrades gracefully on the skewed identical-hash keys
-    vars.hint("shuffle_merge").join(hubs, Seq("h0", "h1", "h2", "h3"))
+    vars.hint("shuffle_merge").join(hubs, hs)
       .where(col("ord") =!= col("hub"))
       .select(least(col("ord"), col("hub")).as("a"),
         greatest(col("ord"), col("hub")).as("b"), lit(0).as("dist"))
@@ -531,10 +528,49 @@ object BandJoin {
     * `chunkBits = 0` auto-selects the MIH width from the corpus size;
     * `saltFactor = 0` auto-engages hot-bucket salting past the cap;
     * `nConfHint` lets a caller that already knows the confident-row count
-    * (Pipeline's signatures-stage metric) skip the resolution job. */
+    * (Pipeline's signatures-stage metric) skip the resolution job;
+    * `layout` picks the hash (PDQ here, pHash via [[BandJoin64.edges]]). */
   def edges(sig: DataFrame, threshold: Int, saltFactor: Int = 0,
-            chunkBits: Int = 0, nConfHint: Long = -1): DataFrame =
-    fuzzyEdges(sig, threshold, saltFactor, chunkBits, nConfHint)
-      .unionByName(exactEdges(sig))
+            chunkBits: Int = 0, nConfHint: Long = -1,
+            layout: HashLayout = HashLayout.Pdq): DataFrame =
+    fuzzyEdges(sig, threshold, saltFactor, chunkBits, nConfHint, layout)
+      .unionByName(exactEdges(sig, layout))
       .groupBy("a", "b").agg(min("dist").as("dist"))
+}
+
+/** Where a hash lives in a signature frame and how the band join cuts it:
+  * `hashCols` hold the stored hash as longs (low word first),
+  * `variantsCol` its probe-side dihedral variants (an array of
+  * `hashCols.size`-long arrays, or of plain longs for a one-long hash);
+  * chunks are `parityBits` wide (reference parity) up to `wideCutoff`
+  * confident rows and `wideBits` past it. `algo` is the name a persisted
+  * [[BandIndex]] records. */
+final case class HashLayout(algo: String, hashCols: Seq[String],
+                            variantsCol: String, parityBits: Int,
+                            wideBits: Int, wideCutoff: Long) {
+  def numChunks(chunkBits: Int): Int = 64 * hashCols.size / chunkBits
+
+  def autoChunkBits(n: Long): Int = if (n <= wideCutoff) parityBits else wideBits
+
+  /** Names for the hash longs as a join payload: prefix0, prefix1, … */
+  def hashNames(prefix: String): Seq[String] = hashCols.indices.map(i => s"$prefix$i")
+
+  /** One element of `variantsCol` as long columns named `names`. */
+  def splitVariant(v: Column, names: Seq[String]): Seq[Column] =
+    if (hashCols.size == 1) Seq(v.as(names.head))
+    else names.indices.map(i => v.getItem(i).as(names(i)))
+}
+
+object HashLayout {
+  /** The 256-bit PDQ hash: 16×16-bit chunks, 32-bit past 10⁷ rows. */
+  val Pdq: HashLayout = HashLayout(BandIndex.AlgoPdq, Seq("h0", "h1", "h2", "h3"),
+    "variants", BandJoin.BitsPerChunk, 32, BandJoin.AutoWideCutoff)
+
+  /** The 64-bit DCT pHash (hamminghash.rs:23-41): 8×8-bit chunks, 16-bit
+    * past 10⁵ rows. */
+  val Phash64: HashLayout = HashLayout(BandIndex.AlgoPhash64, Seq("phash64"),
+    "phash_variants", BandJoin64.BitsPerChunk, 16, BandJoin64.AutoWideCutoff)
+
+  /** The layout a persisted index's algorithm name stands for. */
+  def of(algo: String): HashLayout = if (algo == Phash64.algo) Phash64 else Pdq
 }

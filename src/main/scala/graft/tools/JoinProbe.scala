@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.Pipeline
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.sql.functions._
 
 /** One-off diagnostics for the band-join shuffle: raw collision volume vs
@@ -18,15 +18,12 @@ object JoinProbe {
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
     val n = conf.count()
 
-    // replicate fuzzyEdges' exploded sides at the chosen radius split,
-    // at the chunk width the join would actually auto-select (round-4
-    // ADVICE: this diagnostic used to pin 16-bit even past AutoWideCutoff)
-    val chunkBits = BandJoin.autoChunkBits(n)
-    val numChunks = 256 / chunkBits
-    val tol = threshold / numChunks
-    val rIdx = (0 to tol).minBy(r =>
-      BandJoin.maskCount(r, chunkBits) + 8L * BandJoin.maskCount(tol - r, chunkBits))
-    val rPrb = tol - rIdx
+    // fuzzyEdges' exploded sides at the join's own radius split and the
+    // chunk width it would auto-select
+    val layout = HashLayout.Pdq
+    val chunkBits = layout.autoChunkBits(n)
+    val numChunks = layout.numChunks(chunkBits)
+    val (rIdx, rPrb) = BandJoin.radiusSplit(layout, threshold, chunkBits)
     val idxRows = n * numChunks * BandJoin.maskCount(rIdx, chunkBits)
     val prbRows = n * 8L * numChunks * BandJoin.maskCount(rPrb, chunkBits)
 
@@ -52,14 +49,14 @@ object JoinProbe {
     // the auto-salt decision on this corpus: derived factor + the capped
     // per-(key, salt) occupancy the join tasks actually see
     val hotMax = if (hot.isEmpty) 0L else hot.map(_.getLong(2)).max
-    val autoS = BandJoin.autoSaltFactor(conf, Seq("h0", "h1", "h2", "h3"),
-      chunkBits, BandJoin.chunksArrayB(_, chunkBits), rIdx)
+    val autoS = BandJoin.autoSaltFactor(layout, conf, chunkBits, rIdx)
     println(s"AUTOSALT factor=$autoS cap=${BandJoin.SaltBucketCap} " +
       s"chunkBits=$chunkBits rIdx=$rIdx " +
       s"hottest=$hotMax per-salted-bucket=${hotMax / math.max(autoS, 1)}")
 
     val t0 = System.nanoTime()
-    val raw = BandJoin.bandMatches(sig, threshold).count()
+    val raw = BandJoin.bandMatches(layout, conf, threshold, saltFactor = 0,
+      chunkBits, n).count()
     val t1 = (System.nanoTime() - t0) / 1e9
     val edges = BandJoin.fuzzyEdges(sig, threshold).count()
     println(f"JOINPROBE rawCollisions=$raw (${t1}%.1f s) verifiedEdges=$edges")

@@ -3,7 +3,7 @@ package graft.tools
 import graft.Pipeline
 import graft.cc.ConnectedComponents
 import graft.kernel.Pdq
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.sql.functions._
 
 /**
@@ -30,7 +30,7 @@ object MillionBench {
     // auto resolves to 16-bit (~10 s) instead of the degenerate 8-bit
     // (measured 99.9 s), closing the round-2 config trap.
     val modeArg = if (args.length > 2) args(2) else "pdq"
-    val phChunkBits = modeArg match {
+    val chunkBits = modeArg match {
       case "phash8" => 8
       case "phash16" => 16
       case _ => 0 // auto
@@ -78,10 +78,10 @@ object MillionBench {
       (s, 15)
     }
 
+    val layout = if (mode == "phash") HashLayout.Phash64 else HashLayout.Pdq
     val t0 = System.nanoTime()
-    val edgesDf =
-      if (mode == "phash") graft.lsh.BandJoin64.edges(sig, threshold, phChunkBits)
-      else BandJoin.edges(sig, threshold)
+    val edgesDf = BandJoin.edges(sig, threshold, chunkBits = chunkBits,
+      layout = layout)
     val edges = edgesDf.localCheckpoint()
     val nEdges = edges.count()
     val comps = ConnectedComponents.run(spark, edges)

@@ -35,7 +35,8 @@ object PlanAudit {
       .explain("formatted")
 
     println("########## edges64 (u64 pHash band join, 16-bit chunks) plan")
-    graft.lsh.BandJoin64.edges(sig, 15, chunkBits = 16).explain("formatted")
+    BandJoin.edges(sig, 15, chunkBits = 16, layout = graft.lsh.HashLayout.Phash64)
+      .explain("formatted")
 
     println("########## multimodal bucketed cosine plan")
     import org.apache.spark.sql.functions._

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Pipeline
 import graft.cc.ConnectedComponents
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
@@ -119,9 +119,8 @@ object SaltBench {
 
     // measured occupancy -> derived factor (the exact agg the auto path runs)
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
-    val derived = BandJoin.autoSaltFactor(conf, Seq("h0", "h1", "h2", "h3"),
-      BandJoin.BitsPerChunk, BandJoin.chunksArrayB(_, BandJoin.BitsPerChunk),
-      rIdx = 0)
+    val derived = BandJoin.autoSaltFactor(HashLayout.Pdq, conf,
+      BandJoin.BitsPerChunk, rIdx = 0)
     // exact bucket population: the pinned hot rows PLUS random strays
     // whose chunk 0 happens to draw HotChunk (~n/2¹⁶ of them)
     val bucketRows = sig

@@ -247,7 +247,7 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("phash-mode chained deltas == full phash batch run (u64 persisted index)") {
     // round-3 VERDICT #4: a phash-mode corpus must ingest deltas through a
-    // width-parameterized persisted index (chunksArray64 keys,
+    // width-parameterized persisted index (8-bit pHash chunk keys,
     // hamminghash.rs:23-41 semantics), not just the batch join
     val base = java.nio.file.Files.createTempDirectory("graft-chain-ph").toString
     val byIdx = rows.zipWithIndex

@@ -1,7 +1,7 @@
 package graft
 
 import graft.kernel.Pdq
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, BandJoin64, HashLayout}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** LSH band-join recall: pigeonhole algebra + the planted-cluster test
@@ -128,6 +128,17 @@ class LshSpec extends AnyFunSuite {
     val b = flipBits(a, r, 12)
     val edges = BandJoin.edges(sigFrame(Seq(a, b)), threshold = 40).collect()
     assert(edges.length == 1 && edges(0).getInt(2) == 12)
+  }
+
+  test("salt factor fits the packed key's 6 salt bits: 64 is recall-neutral, 65 refused") {
+    val r = new java.util.Random(65)
+    val target = randHash(r)
+    val sig = sigFrame(Seq.fill(300)(randHash(r)) ++
+      Seq(target, flipBits(target, r, 9), flipBits(target, r, 31)))
+    def es(s: Int) = BandJoin.edges(sig, 40, saltFactor = s).collect()
+      .map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+    assert(es(64) == es(1) && es(1).nonEmpty)
+    intercept[IllegalArgumentException](BandJoin.edges(sig, 40, saltFactor = 65).collect())
   }
 
   test("threshold-63 planted cluster: R=3 tier recovers spreads up to 63 bits") {
@@ -294,19 +305,16 @@ class LshSpec extends AnyFunSuite {
     val hot = (0L until 2500L).map { i =>
       (i, (r.nextLong() << 16) | 0xabcdL, r.nextLong(), r.nextLong(), r.nextLong())
     }.toDF("ord", "h0", "h1", "h2", "h3")
-    val f = graft.lsh.BandJoin.autoSaltFactor(hot, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 1000)
+    val f = graft.lsh.BandJoin.autoSaltFactor(HashLayout.Pdq, hot, 16, cap = 1000)
     assert(f == 3, s"derived salt factor $f, want 3")
     // an unskewed corpus stays at 1 (salting never engages spuriously)
     val cold = (0L until 2500L).map { i =>
       (i, r.nextLong(), r.nextLong(), r.nextLong(), r.nextLong())
     }.toDF("ord", "h0", "h1", "h2", "h3")
-    assert(graft.lsh.BandJoin.autoSaltFactor(cold, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 1000) == 1)
+    assert(graft.lsh.BandJoin.autoSaltFactor(HashLayout.Pdq, cold, 16, cap = 1000) == 1)
     // the factor is bounded: a million-row hot bucket cannot explode the
     // probe side ×5 — MaxSaltFactor clamps
-    assert(graft.lsh.BandJoin.autoSaltFactor(hot, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), cap = 10)
+    assert(graft.lsh.BandJoin.autoSaltFactor(HashLayout.Pdq, hot, 16, cap = 10)
       == graft.lsh.BandJoin.MaxSaltFactor)
   }
 
@@ -327,11 +335,11 @@ class LshSpec extends AnyFunSuite {
       .toDF("ord", "h0", "h1", "h2", "h3")
     // radius-0 max is ~100 (< cap 1000) but the radius-1 ball at `center`
     // holds all 1700 rows -> factor 2
-    assert(graft.lsh.BandJoin.autoSaltFactor(spread, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), rIdx = 0, cap = 1000) == 1,
+    assert(graft.lsh.BandJoin.autoSaltFactor(HashLayout.Pdq, spread, 16,
+      rIdx = 0, cap = 1000) == 1,
       "radius-0 measurement must NOT see the spread mass (the old undershoot)")
-    val f = graft.lsh.BandJoin.autoSaltFactor(spread, Seq("h0", "h1", "h2", "h3"),
-      16, graft.lsh.BandJoin.chunksArrayB(_, 16), rIdx = 1, cap = 1000)
+    val f = graft.lsh.BandJoin.autoSaltFactor(HashLayout.Pdq, spread, 16,
+      rIdx = 1, cap = 1000)
     assert(f == 2, s"ball-occupancy salt factor $f, want 2")
   }
 
@@ -346,5 +354,77 @@ class LshSpec extends AnyFunSuite {
     assert(edges.contains((0L, 2L)), "exact dup of low-conf row must match")
     assert(!edges.exists(e => e == ((0L, 1L)) || e == ((1L, 2L))),
       "fuzzy match against low-conf rows must be rejected")
+  }
+
+  private def hamL(x: Array[Long], y: Array[Long]): Int =
+    x.zip(y).map { case (p, q) => java.lang.Long.bitCount(p ^ q) }.sum
+
+  /** The edges the band join must return over (hash, variants, low_conf)
+    * rows: a < b at the min distance from either side's variants to the
+    * other's hash, within t when both sides are confident and exact-only
+    * when either is low-confidence. */
+  private def bruteEdges(rows: IndexedSeq[(Array[Long], Seq[Array[Long]], Boolean)],
+                         t: Int): Set[(Long, Long, Int)] =
+    (for {
+      a <- rows.indices; b <- (a + 1) until rows.size
+      (ha, va, la) = rows(a)
+      (hb, vb, lb) = rows(b)
+      d = (va.map(hamL(_, hb)) ++ vb.map(hamL(_, ha))).min
+      if d <= (if (la || lb) 0 else t)
+    } yield (a.toLong, b.toLong, d)).toSet
+
+  /** Rows 0-2: exact duplicates (same hash and variants: one rep); 3: near
+    * the triple; 4: reaches it only through a non-identity variant; 5: a
+    * low-confidence near copy (must stay unmatched); 6-7: a low-confidence
+    * exact pair; 8-9: a low-confidence and a confident row sharing a hash;
+    * 10-12: a confident pair at t-3 plus one at t+5; then random rows. */
+  private def collapseRows(words: Int, t: Int, r: java.util.Random,
+                           variants: Array[Long] => Seq[Array[Long]]) = {
+    def rand() = Array.fill(words)(r.nextLong())
+    def flip(h: Array[Long], n: Int): Array[Long] = {
+      val out = h.clone()
+      val picked = scala.collection.mutable.Set[Int]()
+      while (picked.size < n) picked += r.nextInt(64 * words)
+      picked.foreach(b => out(b / 64) ^= 1L << (b % 64))
+      out
+    }
+    def row(h: Array[Long], low: Boolean = false) = (h, variants(h), low)
+    val (target, lowPair, shared, pair) = (rand(), rand(), rand(), rand())
+    val triple = row(target)
+    IndexedSeq(triple, triple, triple, row(flip(target, t / 4)),
+      { val h = rand(); (h, variants(h) :+ flip(target, t / 2), false) },
+      row(flip(target, math.max(t / 8, 1)), low = true),
+      row(lowPair, low = true), row(lowPair, low = true),
+      row(shared, low = true), row(shared),
+      row(flip(pair, t - 3)), row(pair), row(flip(pair, t + 5))) ++
+      IndexedSeq.fill(300)(row(rand(), low = r.nextInt(10) == 0))
+  }
+
+  test("rep collapse + rebuild == brute force per-side limits, AQE on and off (PDQ and pHash)") {
+    import spark.implicits._
+    val r = new java.util.Random(77)
+    val pdq = collapseRows(4, 40, r, h => Seq(h, Array.fill(4)(r.nextLong())))
+    val ph = collapseRows(1, 15, r,
+      h => graft.kernel.PHash.dihedral(h(0)).toSeq.map(Array(_)))
+    val pdqSig = pdq.zipWithIndex.map { case ((h, v, low), i) =>
+      (i.toLong, h(0), h(1), h(2), h(3), v.toArray, low, true)
+    }.toDF("ord", "h0", "h1", "h2", "h3", "variants", "low_conf", "has_pdq")
+    val phSig = ph.zipWithIndex.map { case ((h, v, low), i) =>
+      (i.toLong, h(0), v.map(_(0)).toArray, low, true)
+    }.toDF("ord", "phash64", "phash_variants", "low_conf", "has_pdq")
+    val (wantPdq, wantPh) = (bruteEdges(pdq, 40), bruteEdges(ph, 15))
+    for (want <- Seq(wantPdq, wantPh)) {
+      assert(Seq((0L, 1L), (0L, 2L), (1L, 2L), (0L, 3L), (2L, 4L), (6L, 7L),
+        (8L, 9L), (10L, 11L)).forall(p => want.exists(e => (e._1, e._2) == p)))
+      assert(!want.exists(e => e._1 == 5L || e._2 == 5L || (e._1, e._2) == ((11L, 12L))))
+    }
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2))).toSet
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try for (on <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      assert(got(BandJoin.edges(pdqSig, 40)) == wantPdq, s"PDQ, AQE $on")
+      assert(got(BandJoin64.edges(phSig)) == wantPh, s"pHash, AQE $on")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
   }
 }
