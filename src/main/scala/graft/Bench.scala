@@ -49,19 +49,21 @@ object Bench {
     "java.base/sun.security.action", "java.base/sun.util.calendar"
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  /** Parse a -Xmx-style size ("32g", "512m", "90112m") into MiB. */
-  private def sizeToMb(s: String): Long = {
-    val t = s.trim.toLowerCase
-    val (num, unit) = t.span(c => c.isDigit)
-    val n = num.toLong
-    unit match {
-      case "g" | "gb" => n * 1024
-      case "m" | "mb" | "" => n
-      case "k" | "kb" => math.max(1L, n / 1024)
-      case "t" | "tb" => n * 1024 * 1024
-      case _ => n
+  /** Parse a -Xmx-style size ("32g", "512m", "90112m", "4096") into MiB;
+    * anything else ("1.5g", "lots") is refused rather than misread. */
+  private[graft] def sizeToMb(s: String): Long =
+    "(\\d+)(?:([kmgt])b?)?".r.unapplySeq(s.trim.toLowerCase) match {
+      case Some(List(num, unit)) =>
+        val n = num.toLong
+        Option(unit).getOrElse("m") match {
+          case "k" => math.max(1L, n / 1024)
+          case "g" => n * 1024
+          case "t" => n * 1024 * 1024
+          case _ => n
+        }
+      case _ => throw new IllegalArgumentException(
+        s"malformed heap size '$s' (want an integer with an optional k/m/g/t unit)")
     }
-  }
 
   /** MemAvailable from /proc/meminfo, in MiB (-1 if unreadable). */
   private def memAvailableMb(): Long =
@@ -87,8 +89,10 @@ object Bench {
     * pipeline itself needs only a few GiB at this corpus size, so a capped
     * heap changes nothing about what is measured — both the N and 4N
     * children get the same formula, and pre-touch happens before the timed
-    * region (BenchOne times Pipeline.run only). */
-  private def childHeapMb(): Long = {
+    * region (BenchOne times Pipeline.run only). Read once per run, so
+    * every measured child gets the same heap however MemAvailable moves
+    * between spawns. */
+  private lazy val childHeapMb: Long = {
     val requested = sizeToMb(sys.env.getOrElse("SPARK_DRIVER_MEM", "32g"))
     val avail = memAvailableMb()
     val headroomMb = 16L * 1024
@@ -103,7 +107,7 @@ object Bench {
   private def runIsolated(cpus: Int, corpusDir: String, workDir: String,
                           reps: Int): (Long, Double, String) = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val mem = s"${childHeapMb()}m"
+    val mem = s"${childHeapMb}m"
     // -Xms=-Xmx + pre-touch: lazy heap growth charges hypervisor
     // first-touch faults to the first heap-hungry stage (measured 2× on
     // the 16-wide signature scan, BASELINE.md round-5) — real executors

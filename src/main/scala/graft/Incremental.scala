@@ -1,10 +1,8 @@
 package graft
 
 import graft.cc.ConnectedComponents
-import graft.ckpt.Ckpt
-import graft.groups.Groups
-import graft.kernel.SignatureKernel
-import graft.lsh.{BandIndex, BandJoin}
+import graft.ckpt.{Ckpt, Store}
+import graft.lsh.{BandIndex, HashLayout}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,33 +50,10 @@ object CorpusState {
 
   private def marker(corpusWork: String, v: Int) = s"$corpusWork/_state_v$v"
 
-  private[graft] def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, p: String) = Store.fs(spark, p)
 
   private def exists(spark: SparkSession, p: String): Boolean =
     fs(spark, p).exists(new Path(p))
-
-  private def readFile(spark: SparkSession, p: String): Option[String] = {
-    val f = fs(spark, p)
-    val hp = new Path(p)
-    if (!f.exists(hp)) None
-    else {
-      val in = f.open(hp)
-      try {
-        val bytes = new Array[Byte](math.max(f.getFileStatus(hp).getLen.toInt, 0))
-        in.readFully(0, bytes)
-        Some(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-  }
-
-  private def writeFile(spark: SparkSession, p: String, content: String,
-                        overwrite: Boolean = true): Unit = {
-    val f = fs(spark, p)
-    val out = f.create(new Path(p), overwrite)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Highest committed state version (0 when only the batch run exists).
     * One directory listing, not a marker-probe RPC per version — against
@@ -104,7 +79,7 @@ object CorpusState {
   }
 
   def owner(spark: SparkSession, corpusWork: String, v: Int): Option[String] =
-    readFile(spark, marker(corpusWork, v))
+    Store.read(spark, marker(corpusWork, v))
 
   /** Commit version `v` on behalf of `deltaWork`. Idempotent for the same
     * owner; refuses a version already committed by a different owner. The
@@ -113,27 +88,12 @@ object CorpusState {
     * surfaces on re-read. */
   def commit(spark: SparkSession, corpusWork: String, v: Int,
              deltaWork: String): Unit = {
-    def refuse(prev: String): Nothing =
+    val prev = Store.writeOnce(spark, marker(corpusWork, v), deltaWork)
+    if (prev != deltaWork)
       throw new IllegalStateException(
         s"corpus state v$v was committed by $prev while $deltaWork was " +
           "running — concurrent incremental runs from the same base are " +
           "not supported; re-run against the current state")
-    owner(spark, corpusWork, v) match {
-      case Some(prev) if prev == deltaWork => // resume — already committed
-      case Some(prev) => refuse(prev)
-      case None =>
-        try writeFile(spark, marker(corpusWork, v), deltaWork, overwrite = false)
-        catch {
-          case _: java.io.IOException =>
-            // lost the create race — whoever won owns the version
-            owner(spark, corpusWork, v) match {
-              case Some(prev) if prev == deltaWork =>
-              case Some(prev) => refuse(prev)
-              case None => throw new IllegalStateException(
-                s"marker create for corpus state v$v failed without an owner")
-            }
-        }
-    }
   }
 
   /** Write-once corpus-level flag marker (first writer wins; a later run
@@ -143,33 +103,15 @@ object CorpusState {
     * corpus adopts the first post-flag run's value. */
   def stampFlag(spark: SparkSession, workDir: String, name: String,
                 value: String): Unit = {
-    val p = s"$workDir/_meta_$name"
-    def refuse(prev: String): Unit = require(prev == value,
+    val prev = Store.writeOnce(spark, s"$workDir/_meta_$name", value)
+    require(prev == value,
       s"corpus at $workDir was built with $name=$prev; this run requested " +
         s"$name=$value — the flag must stay consistent across the chain")
-    readFile(spark, p) match {
-      case Some(prev) => refuse(prev)
-      case None =>
-        fs(spark, workDir).mkdirs(new Path(workDir))
-        try writeFile(spark, p, value, overwrite = false)
-        catch {
-          case _: java.io.IOException =>
-            // lost a create race — some writer must own a committed value
-            // now. A transient IO failure with NO committed value must not
-            // be swallowed (the run would proceed on an unstamped chain) —
-            // same contract as BandIndex.writeMetaOnce (round-4 ADVICE #2).
-            readFile(spark, p) match {
-              case Some(prev) => refuse(prev)
-              case None => throw new IllegalStateException(
-                s"flag stamp $name create failed at $p without a committed value")
-            }
-        }
-    }
   }
 
   /** Current value of a write-once corpus flag, if stamped. */
   def flag(spark: SparkSession, workDir: String, name: String): Option[String] =
-    readFile(spark, s"$workDir/_meta_$name")
+    Store.read(spark, s"$workDir/_meta_$name")
 
   /** High-water-mark marker: monotonically raise `name` to `value`.
     * Read-then-overwrite is safe here because the version-marker protocol
@@ -179,15 +121,12 @@ object CorpusState {
   def bumpHwm(spark: SparkSession, workDir: String, name: String,
               value: Int): Unit = {
     val p = s"$workDir/_meta_$name"
-    val cur = readFile(spark, p).flatMap(_.trim.toIntOption)
-    if (cur.forall(_ < value)) {
-      fs(spark, workDir).mkdirs(new Path(workDir))
-      writeFile(spark, p, value.toString, overwrite = true)
-    }
+    val cur = Store.read(spark, p).flatMap(_.trim.toIntOption)
+    if (cur.forall(_ < value)) Store.write(spark, p, value.toString, overwrite = true)
   }
 
   def hwm(spark: SparkSession, workDir: String, name: String): Option[Int] =
-    readFile(spark, s"$workDir/_meta_$name").flatMap(_.trim.toIntOption)
+    Store.read(spark, s"$workDir/_meta_$name").flatMap(_.trim.toIntOption)
 
   /** Latest version ≤ v carrying a compaction snapshot, if any. */
   private def latestSnapshot(spark: SparkSession, corpusWork: String,
@@ -336,8 +275,8 @@ object Incremental {
     * HammingHash<u64> semantics). The index is built algorithm-stamped
     * ([[BandIndex]] `_meta_algo`); probing a corpus whose index was built
     * for the other algorithm is refused (the band keys are incomparable).
-    * `threshold` < 0 ⇒ the algorithm's own default (40 pdq / 15 phash),
-    * same contract as [[Pipeline.run]]. */
+    * Algorithm and `threshold` resolve exactly as in [[Pipeline.run]],
+    * before anything is written. */
   /** `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
     * counterpart — byte-identical files (including UNDECODABLE ones)
     * group across the corpus/delta boundary via content-hash star edges.
@@ -351,48 +290,21 @@ object Incremental {
           compactEvery: Int = 8,
           algorithm: String = "pdq",
           contentStar: Boolean = false): DataFrame = {
-    require(algorithm == "pdq" || algorithm == "phash",
-      s"unknown algorithm '$algorithm' (pdq | phash)")
-    val thr =
-      if (threshold >= 0) threshold
-      else if (algorithm == "phash") graft.lsh.BandJoin64.DefaultThreshold
-      else Pipeline.DefaultThreshold
-    require(algorithm != "phash" || thr <= graft.lsh.BandJoin64.DefaultThreshold,
-      s"phash threshold $thr > ${graft.lsh.BandJoin64.DefaultThreshold} " +
-        "(MAX_SIMILARITY_64, hamminghash.rs:5)")
-    val indexAlgo =
-      if (algorithm == "phash") BandIndex.AlgoPhash64 else BandIndex.AlgoPdq
+    val layout = HashLayout.forAlgorithm(algorithm)
+    val thr = layout.threshold(threshold)
     // record the chain's operating-threshold high-water mark so index
     // maintenance can never widen past what this chain actually probes at
     // (a 32-bit index cannot serve thresholds > 31; MaintenanceCli gates
     // its rebuild on max(arg, this mark))
-    CorpusState.bumpHwm(spark, corpusWork, s"thr_hwm_$indexAlgo", thr)
+    CorpusState.bumpHwm(spark, corpusWork, s"thr_hwm_${layout.algo}", thr)
     val ckpt = new Ckpt(spark, deltaWork)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def exists(p: String): Boolean = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).exists(hp)
-    }
 
     // Pin the base version at FIRST start of this deltaWork: a resumed run
     // must keep reading the pre-merge state even after its own commit
     // advanced the version (otherwise resume would re-merge the delta into
     // state that already contains it).
-    val baseVerPath = s"$deltaWork/_base_version"
-    val baseVer: Int = {
-      val fsys = new Path(deltaWork).getFileSystem(hconf)
-      fsys.mkdirs(new Path(deltaWork))
-      if (exists(baseVerPath)) {
-        val in = fsys.open(new Path(baseVerPath))
-        try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-        finally in.close()
-      } else {
-        val v = CorpusState.version(spark, corpusWork)
-        val out = fsys.create(new Path(baseVerPath), true)
-        try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-        v
-      }
-    }
+    val baseVer = Store.writeOnce(spark, s"$deltaWork/_base_version",
+      CorpusState.version(spark, corpusWork).toString).trim.toInt
 
     // the content-star setting must match the corpus chain's (a corpus
     // built without it has no corpus-internal content groups for the
@@ -430,11 +342,8 @@ object Incremental {
     val corpusSig = CorpusState.readSignatures(spark, corpusWork, baseVer)
     // algorithm-stamped index path: a corpus can carry BOTH a pdq and a
     // phash index side by side (the reference's LMDB holds both hash
-    // columns per file, scanner.rs:1251-1294); pdq stays at the
-    // unsuffixed dir pre-round-4 corpora already use
-    val indexPath =
-      if (algorithm == "pdq") s"$corpusWork/band_index"
-      else s"$corpusWork/band_index_phash"
+    // columns per file, scanner.rs:1251-1294)
+    val indexPath = s"$corpusWork/${layout.indexDir}"
     if (!BandIndex.exists(spark, indexPath)) {
       // index chunk width: wide only when the corpus is past the parity
       // width's degeneracy cutoff AND the probe ball still fits the mask
@@ -442,12 +351,12 @@ object Incremental {
       // 32-bit/256 needs threshold ≤ 31). Same auto rule as the batch joins.
       val nConf = corpusSig.filter(col("has_pdq") && !col("low_conf")).count()
       BandIndex.build(corpusSig, indexPath,
-        chunkBits = BandIndex.autoBuildBits(indexAlgo, nConf, thr),
-        algo = indexAlgo)
+        chunkBits = BandIndex.autoBuildBits(layout.algo, nConf, thr),
+        algo = layout.algo)
     }
-    require(BandIndex.algoOf(spark, indexPath) == indexAlgo,
+    require(BandIndex.algoOf(spark, indexPath) == layout.algo,
       s"corpus index at $indexPath was built for " +
-        s"${BandIndex.algoOf(spark, indexPath)} — cannot probe as $indexAlgo")
+        s"${BandIndex.algoOf(spark, indexPath)} — cannot probe as ${layout.algo}")
 
     val maxOrd = {
       val r = corpusSig.agg(max("ord")).head()
@@ -478,12 +387,7 @@ object Incremental {
         segName = s"seg_repair_$curMaxOrd")
 
     val (deltaSig, _) = ckpt.stage("delta_signatures")(
-      SignatureKernel.signatures(spark, deltaImages).toDF()
-        .dropDuplicates("image_id")
-        // S1 semantics across runs: an image_id already in the corpus is
-        // the same logical row — skip it (single-column anti-join)
-        .join(corpusSig.select("image_id"), Seq("image_id"), "left_anti")
-        .withColumn("ord", monotonically_increasing_id() + lit(maxOrd + 1)))
+      Pipeline.signatures(spark, deltaImages, maxOrd + 1, known = Some(corpusSig)))
 
     val (cross, _) = ckpt.stage("delta_cross_edges")({
       val probed = BandIndex.probe(spark, indexPath, deltaSig, thr)
@@ -518,17 +422,8 @@ object Incremental {
       }
     })
 
-    val (internal, _) = ckpt.stage("delta_internal_edges")({
-      val hashEdges =
-        if (algorithm == "phash") graft.lsh.BandJoin64.edges(deltaSig, thr)
-        else BandJoin.edges(deltaSig, thr)
-      if (!contentStar) hashEdges
-      else hashEdges // delta-internal byte-identity star — the SAME
-        // construction the batch pipeline unions in (shared helper, so
-        // chained-equals-batch can't drift between the two call sites)
-        .unionByName(BandJoin.contentStarEdges(deltaSig))
-        .groupBy("a", "b").agg(min("dist").as("dist"))
-    })
+    val (internal, _) = ckpt.stage("delta_internal_edges")(
+      Pipeline.selfEdges(deltaSig, layout, thr, contentStar))
 
     val oldComps = CorpusState.readComponents(spark, corpusWork, baseVer)
 
@@ -562,21 +457,8 @@ object Incremental {
         .join(ids, col("ord") === col("_member_id"), "left_semi")
     }
 
-    val (grouped, _) = ckpt.stage("groups")(registryPath match {
-      case None => Groups.assemble(allSig, comps)
-      case Some(regPath) =>
-        // same S11/J7 semantics as the batch path: a merged group keeps
-        // the UUID any of its members' hashes already carry — so a group
-        // that absorbs delta rows keeps its identity across runs
-        val assembled = Groups.assemble(allSig, comps)
-        val registry = graft.groups.GroupRegistry.read(spark, regPath)
-        val assigned = graft.groups.GroupRegistry.assign(assembled, registry)
-          .localCheckpoint()
-        graft.groups.GroupRegistry.merge(spark, regPath,
-          graft.groups.GroupRegistry.registryRows(assembled, assigned))
-        graft.groups.GroupRegistry.suppressIgnored(spark, regPath,
-          assembled.join(assigned, Seq("comp"), "left"))
-    })
+    val (grouped, _) = ckpt.stage("groups")(
+      Pipeline.groups(spark, allSig, comps, registryPath))
 
     // --- commit the DELTA-SIZED state as the next corpus version, then
     // append the delta's band keys as an atomic segment. Order matters

@@ -2,9 +2,9 @@ package graft
 
 import graft.cc.ConnectedComponents
 import graft.ckpt.Ckpt
-import graft.groups.Groups
+import graft.groups.{GroupRegistry, Groups}
 import graft.kernel.SignatureKernel
-import graft.lsh.BandJoin
+import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
  * scanner.rs:1251-1294).
  */
 object Pipeline {
-  final val DefaultThreshold = 40 // phdupes.rs:353-355
+  final val DefaultThreshold: Int = HashLayout.Pdq.defaultThreshold
 
   private val warmedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -74,58 +74,77 @@ object Pipeline {
     s
   }
 
-  /** Compute signatures with a frozen dense ord. The image_id dedup
-    * (S1/F6) runs AFTER the kernel on compact signature rows — deduping
-    * first would shuffle every image's bytes; deduping ~400-byte signature
-    * rows shuffles 1000× less (at 100 TB: the difference between an
-    * impossible shuffle and a trivial one). */
-  def signatures(spark: SparkSession, images: DataFrame): DataFrame =
-    SignatureKernel.signatures(spark, images)
-      .toDF()
+  /** Compute signatures with a frozen dense ord starting at `ordFrom`.
+    * The image_id dedup (S1/F6) runs AFTER the kernel on compact signature
+    * rows — deduping first would shuffle every image's bytes; deduping
+    * ~400-byte signature rows shuffles 1000× less (at 100 TB: the
+    * difference between an impossible shuffle and a trivial one). An
+    * incremental delta passes the corpus signatures as `known`: an
+    * image_id already there is the same logical row and is skipped
+    * (single-column anti-join) before ords are assigned. */
+  def signatures(spark: SparkSession, images: DataFrame, ordFrom: Long = 0L,
+                 known: Option[DataFrame] = None): DataFrame = {
+    val fresh = SignatureKernel.signatures(spark, images).toDF()
       .dropDuplicates("image_id")
-      .withColumn("ord", monotonically_increasing_id())
+    known.fold(fresh)(k => fresh.join(k.select("image_id"), Seq("image_id"), "left_anti"))
+      .withColumn("ord", monotonically_increasing_id() + lit(ordFrom))
+  }
 
-  /** Full run. Returns the per-member groups frame. When `registryPath`
-    * is set, groups get cross-run-stable UUIDs (S11/J7 semantics) and the
-    * registry table is merged back. */
-  /** `chunkBits` selects the MIH chunk width (16 = reference parity;
-    * 32 = the ≥10⁹-image configuration — SCALING.md cost model).
+  /** Self edges of a signature frame: the layout's band join plus, with
+    * `contentStar`, star edges on byte-identical `content_hash` — one
+    * construction for the batch run and the delta-internal join, so
+    * chained-equals-batch can't drift between them. `nConfHint` is the
+    * confident-row count when the caller already knows it. */
+  private[graft] def selfEdges(sig: DataFrame, layout: HashLayout, threshold: Int,
+                               contentStar: Boolean, nConfHint: Long = -1): DataFrame = {
+    val hashEdges = BandJoin.edges(sig, threshold, nConfHint = nConfHint, layout = layout)
+    if (!contentStar) hashEdges
+    else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
+      .groupBy("a", "b").agg(min("dist").as("dist"))
+  }
+
+  /** Group assembly over components. With a registry, groups get
+    * cross-run-stable UUIDs (S11/J7: a group keeps the UUID any member's
+    * hash already carries, so a group that absorbs delta rows keeps its
+    * identity), the registry is merged back, and groups the user
+    * dismissed stay suppressed until the flag clears (db.rs:1277-1336). */
+  private[graft] def groups(spark: SparkSession, sig: DataFrame, comps: DataFrame,
+                            registryPath: Option[String]): DataFrame = {
+    val assembled = Groups.assemble(sig, comps)
+    registryPath.fold(assembled) { regPath =>
+      // materialize the assignment before merging (the merge's anti-join
+      // must not race the lazy assignment plan's segment reads)
+      val assigned = GroupRegistry.assign(assembled, GroupRegistry.read(spark, regPath))
+        .localCheckpoint()
+      GroupRegistry.merge(spark, regPath, GroupRegistry.registryRows(assembled, assigned))
+      GroupRegistry.suppressIgnored(spark, regPath,
+        assembled.join(assigned, Seq("comp"), "left"))
+    }
+  }
+
+  /** Full run. Returns the per-member groups frame; with `registryPath`
+    * groups carry cross-run-stable UUIDs (see [[groups]]).
+    *
     * `algorithm` selects the hash the candidate join bands on: "pdq"
-    * (256-bit, the reference default) or "phash" (64-bit DCT pHash via
-    * [[graft.lsh.BandJoin64]], HammingHash<u64> semantics — pass a
-    * threshold ≤ 15, hamminghash.rs:5). */
-  /** `phashChunkBits`: 8 = reference parity (hamminghash.rs:39-41), 16 =
-    * the n≥10⁶ setting (identical edges, ~10× less collision volume —
-    * measured in MillionBench phash vs phash16).
+    * (256-bit, the reference default) or "phash" (64-bit DCT pHash,
+    * HammingHash<u64> semantics). [[HashLayout.forAlgorithm]] resolves it
+    * and `threshold` (< 0 ⇒ the algorithm's default, 40 / 15) before
+    * anything is written; a threshold past the algorithm's cap (63 / 15)
+    * is refused. The chunk width is auto-selected from the confident-row
+    * count.
     *
     * `contentStar`: OFF by default for reference parity (the reference
     * skips hash-less files entirely, scanner.rs:1659-1663); ON adds
     * linear star edges on byte-identical `content_hash`, so exact copies
     * of UNDECODABLE files (a corrupt JPEG uploaded twice, a JXL slice
     * with no codec) still dedup — what a training-data pipeline wants. */
-  /** `threshold` < 0 ⇒ the algorithm's own default: 40 for pdq
-    * (phdupes.rs:353-355), 15 for phash (MAX_SIMILARITY_64,
-    * hamminghash.rs:5). A phash threshold above 15 is refused outright —
-    * over 64-bit hashes E[dist] of a random pair is 32, so the PDQ default
-    * 40 would match ~97% of random pairs and collapse the corpus into one
-    * giant component (the reference enforces the same cap). */
   def run(spark: SparkSession, images: DataFrame, workDir: String,
           threshold: Int = -1,
           registryPath: Option[String] = None,
-          chunkBits: Int = 0,
           algorithm: String = "pdq",
-          phashChunkBits: Int = 0,
           contentStar: Boolean = false): DataFrame = {
-    require(algorithm == "pdq" || algorithm == "phash",
-      s"unknown algorithm '$algorithm' (pdq | phash)")
-    val thr =
-      if (threshold >= 0) threshold
-      else if (algorithm == "phash") graft.lsh.BandJoin64.DefaultThreshold
-      else DefaultThreshold
-    require(algorithm != "phash" || thr <= graft.lsh.BandJoin64.DefaultThreshold,
-      s"phash threshold $thr > ${graft.lsh.BandJoin64.DefaultThreshold} " +
-        "(MAX_SIMILARITY_64, hamminghash.rs:5) — over 64-bit hashes a " +
-        "higher cap matches most random pairs")
+    val layout = HashLayout.forAlgorithm(algorithm)
+    val thr = layout.threshold(threshold)
     val ckpt = new Ckpt(spark, workDir)
     // grouping semantics are a property of the corpus chain: stamp the
     // content-star flag write-once so a later (batch or incremental) run
@@ -162,38 +181,14 @@ object Pipeline {
       .map(_.toLong)
       .getOrElse(sig.filter(col("has_pdq") && !col("low_conf")).count())
 
-    val (edges, edgesHit) = ckpt.stage("edges")({
-      val hashEdges =
-        if (algorithm == "phash")
-          graft.lsh.BandJoin64.edges(sig, thr, phashChunkBits,
-            nConfHint = confidentRows)
-        else BandJoin.edges(sig, thr, chunkBits = chunkBits,
-          nConfHint = confidentRows)
-      if (!contentStar) hashEdges
-      else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
-        .groupBy("a", "b").agg(min("dist").as("dist"))
-    })
+    val (edges, edgesHit) = ckpt.stage("edges")(
+      selfEdges(sig, layout, thr, contentStar, nConfHint = confidentRows))
     if (!edgesHit) ckpt.appendMetric("comparisons", edges.count().toDouble)
 
     val (comps, _) = ckpt.stage("components")(
       ConnectedComponents.run(spark, edges))
 
-    val (grouped, _) = ckpt.stage("groups")(registryPath match {
-      case None => Groups.assemble(sig, comps)
-      case Some(regPath) =>
-        val assembled = Groups.assemble(sig, comps)
-        val registry = graft.groups.GroupRegistry.read(spark, regPath)
-        // materialize the assignment before merging (the merge's anti-join
-        // must not race the lazy assignment plan's segment reads)
-        val assigned = graft.groups.GroupRegistry.assign(assembled, registry)
-          .localCheckpoint()
-        graft.groups.GroupRegistry.merge(spark, regPath,
-          graft.groups.GroupRegistry.registryRows(assembled, assigned))
-        // db.rs:1277-1336: groups the user dismissed (ignored flag) stay
-        // suppressed on re-runs until the flag clears
-        graft.groups.GroupRegistry.suppressIgnored(spark, regPath,
-          assembled.join(assigned, Seq("comp"), "left"))
-    })
+    val (grouped, _) = ckpt.stage("groups")(groups(spark, sig, comps, registryPath))
     ckpt.flush()
     grouped
   }

@@ -1,5 +1,6 @@
 package graft.groups
 
+import graft.ckpt.Store
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,8 +34,7 @@ object GroupRegistry {
   /** Auto-compact once this many registry segments accumulate. */
   final val CompactAfter = 32
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsOf(spark: SparkSession, path: String) = Store.fs(spark, path)
 
   private def segments(spark: SparkSession, path: String): Seq[String] = {
     val f = fsOf(spark, path)
@@ -100,13 +100,14 @@ object GroupRegistry {
   }
 
   /** Fold all segments into one resolved segment (Iceberg rewrite-data-
-    * files analog). Crash-safe: the merged segment commits before the
-    * subsumed ones delete; a crash in between leaves duplicate rows that
-    * read() resolves and the next compact removes. */
+    * files analog), named from its input set like the band index's.
+    * Crash-safe: the merged segment commits before the subsumed ones
+    * delete; a crash in between leaves duplicate rows that read()
+    * resolves and the next compact removes. */
   def compact(spark: SparkSession, path: String): Unit = {
     val all = segments(spark, path)
     if (all.size <= 1) return
-    val segName = f"seg_zc${all.size}%06d"
+    val segName = Store.compactedSegment(all)
     val f = fsOf(spark, path)
     val finalP = new Path(path, segName)
     if (!f.exists(finalP)) {

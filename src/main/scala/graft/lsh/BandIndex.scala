@@ -1,5 +1,6 @@
 package graft.lsh
 
+import graft.ckpt.Store
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,8 +71,7 @@ object BandIndex {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, path: String) = Store.fs(spark, path)
 
   // ---- persisted chunk width + algorithm -------------------------------
   // The index stores radius-0 keys, so probe masks all live on the delta
@@ -86,33 +86,14 @@ object BandIndex {
   private def metaPath(path: String) = s"$path/_meta_chunk_bits"
   private def algoPath(path: String) = s"$path/_meta_algo"
 
-  private def readMeta(spark: SparkSession, p: String): Option[String] = {
-    val f = fs(spark, p)
-    val hp = new Path(p)
-    if (!f.exists(hp)) None
-    else {
-      val in = f.open(hp)
-      try Some(scala.io.Source.fromInputStream(in).mkString.trim)
-      finally in.close()
-    }
-  }
+  private def readMeta(spark: SparkSession, p: String): Option[String] =
+    Store.read(spark, p).map(_.trim)
 
   private def writeMetaOnce(spark: SparkSession, p: String, value: String,
-                            what: String): Unit =
-    readMeta(spark, p) match {
-      case Some(existing) =>
-        require(existing == value,
-          s"band index $what is $existing; cannot use $value")
-      case None =>
-        try {
-          val out = fs(spark, p).create(new Path(p), false)
-          try out.write(value.getBytes("UTF-8")) finally out.close()
-        } catch {
-          case _: java.io.IOException => // lost a create race — verify
-            require(readMeta(spark, p).contains(value),
-              s"band index committed a different $what")
-        }
-    }
+                            what: String): Unit = {
+    val committed = Store.writeOnce(spark, p, value).trim
+    require(committed == value, s"band index $what is $committed; cannot use $value")
+  }
 
   /** Chunk width this index was built with (16 when the marker predates
     * the knob — every pre-round-3 index is 16-bit PDQ). */
@@ -259,19 +240,7 @@ object BandIndex {
   def compact(spark: SparkSession, path: String, numPartitions: Int = 32): Unit = {
     val all = segments(spark, path)
     if (all.size <= 1) return
-    // Name the merged segment from its INPUT SET, not the segment count: a
-    // crashed compact resumed with the same inputs reuses the name (no
-    // double work), while a later compact over different inputs can never
-    // collide. (Count-based naming had a data-loss window: zc + k new
-    // deltas can equal the previous compaction's count, reusing its name —
-    // the merge is then skipped but the deltas still deleted.)
-    val segName = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val names = all.map(s => new Path(s).getName).mkString("\n")
-      val hex = md.digest(names.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.take(12)
-      s"seg_zc$hex" // zc prefix keeps it sorting after seg_base/seg_delta_*
-    }
+    val segName = Store.compactedSegment(all)
     val f = fs(spark, path)
     val finalP = new Path(path, segName)
     // derive the merged sidecar from the subsumed segments' sidecars

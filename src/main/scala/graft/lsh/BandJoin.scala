@@ -544,13 +544,28 @@ object BandJoin {
   * `hashCols.size`-long arrays, or of plain longs for a one-long hash);
   * chunks are `parityBits` wide (reference parity) up to `wideCutoff`
   * confident rows and `wideBits` past it. `algo` is the name a persisted
-  * [[BandIndex]] records. */
-final case class HashLayout(algo: String, hashCols: Seq[String],
+  * [[BandIndex]] records and `name` the one a run is asked for; a run's
+  * threshold defaults to `defaultThreshold` and may not exceed
+  * `maxThreshold`; the corpus's persisted index lives in `indexDir`. */
+final case class HashLayout(algo: String, name: String, hashCols: Seq[String],
                             variantsCol: String, parityBits: Int,
-                            wideBits: Int, wideCutoff: Long) {
+                            wideBits: Int, wideCutoff: Long,
+                            defaultThreshold: Int, maxThreshold: Int,
+                            indexDir: String) {
   def numChunks(chunkBits: Int): Int = 64 * hashCols.size / chunkBits
 
   def autoChunkBits(n: Long): Int = if (n <= wideCutoff) parityBits else wideBits
+
+  /** The threshold a run operates at: `t < 0` ⇒ the default; past the
+    * cap is refused before a run writes anything. */
+  def threshold(t: Int): Int = {
+    val thr = if (t < 0) defaultThreshold else t
+    require(thr <= maxThreshold, s"$name threshold $thr > $maxThreshold, the " +
+      s"cap for ${64 * hashCols.size}-bit hashes (pdq: R=4 probing, " +
+      "scanner.rs:1649-1655; phash: MAX_SIMILARITY_64, hamminghash.rs:5 — " +
+      "over 64-bit hashes a higher cap matches most random pairs)")
+    thr
+  }
 
   /** Names for the hash longs as a join payload: prefix0, prefix1, … */
   def hashNames(prefix: String): Seq[String] = hashCols.indices.map(i => s"$prefix$i")
@@ -562,14 +577,26 @@ final case class HashLayout(algo: String, hashCols: Seq[String],
 }
 
 object HashLayout {
-  /** The 256-bit PDQ hash: 16×16-bit chunks, 32-bit past 10⁷ rows. */
-  val Pdq: HashLayout = HashLayout(BandIndex.AlgoPdq, Seq("h0", "h1", "h2", "h3"),
-    "variants", BandJoin.BitsPerChunk, 32, BandJoin.AutoWideCutoff)
+  /** The 256-bit PDQ hash: 16×16-bit chunks, 32-bit past 10⁷ rows;
+    * threshold 40 by default (phdupes.rs:353-355), at most 63. The index
+    * keeps the unsuffixed dir pre-round-4 corpora already use. */
+  val Pdq: HashLayout = HashLayout(BandIndex.AlgoPdq, "pdq",
+    Seq("h0", "h1", "h2", "h3"), "variants", BandJoin.BitsPerChunk, 32,
+    BandJoin.AutoWideCutoff, 40, 63, "band_index")
 
   /** The 64-bit DCT pHash (hamminghash.rs:23-41): 8×8-bit chunks, 16-bit
-    * past 10⁵ rows. */
-  val Phash64: HashLayout = HashLayout(BandIndex.AlgoPhash64, Seq("phash64"),
-    "phash_variants", BandJoin64.BitsPerChunk, 16, BandJoin64.AutoWideCutoff)
+    * past 10⁵ rows; threshold 15 by default and at most 15. */
+  val Phash64: HashLayout = HashLayout(BandIndex.AlgoPhash64, "phash",
+    Seq("phash64"), "phash_variants", BandJoin64.BitsPerChunk, 16,
+    BandJoin64.AutoWideCutoff, BandJoin64.DefaultThreshold,
+    BandJoin64.DefaultThreshold, "band_index_phash")
+
+  val All: Seq[HashLayout] = Seq(Pdq, Phash64)
+
+  /** The layout a run's `algorithm` argument names ("pdq" | "phash"). */
+  def forAlgorithm(algorithm: String): HashLayout =
+    All.find(_.name == algorithm).getOrElse(throw new IllegalArgumentException(
+      s"unknown algorithm '$algorithm' (${All.map(_.name).mkString(" | ")})"))
 
   /** The layout a persisted index's algorithm name stands for. */
   def of(algo: String): HashLayout = if (algo == Phash64.algo) Phash64 else Pdq

@@ -42,7 +42,7 @@ object ImageQueries {
     s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft-verify-corpus-$NBases-v13"
 
   /** Synthesize (once per JVM) and return the corpus dir. */
-  private def corpus(spark: SparkSession): String = synchronized {
+  private[graft] def corpus(spark: SparkSession): String = synchronized {
     if (corpusDir == null) {
       val dir = corpusRoot
       val marker = new org.apache.hadoop.fs.Path(s"$dir/images/_SUCCESS")
@@ -53,7 +53,7 @@ object ImageQueries {
     corpusDir
   }
 
-  private def sigs(spark: SparkSession): DataFrame = {
+  private[graft] def sigs(spark: SparkSession): DataFrame = {
     val dir = corpus(spark)
     val ckpt = new graft.ckpt.Ckpt(spark, s"$dir/work")
     val sig = ckpt.stage("signatures")(

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Pipeline
 import graft.groups.Groups
+import graft.lsh.HashLayout
 import graft.synth.Synth
 
 /**
@@ -31,12 +32,10 @@ object DedupCli {
     val workDir = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft-dedup").toString
     val algorithm = if (args.length > 3) args(3) else "pdq"
-    // "-" or "" for threshold = use the algorithm's default
-    val threshold = args.lift(2).filter(t => t.nonEmpty && t != "-") match {
-      case Some(t) => t.toInt
-      case None if algorithm == "phash" => graft.lsh.BandJoin64.DefaultThreshold
-      case None => Pipeline.DefaultThreshold
-    }
+    // "-" or "" for threshold = use the algorithm's default; resolved (and
+    // an unknown algorithm or over-cap threshold refused) before any work
+    val threshold = HashLayout.forAlgorithm(algorithm)
+      .threshold(args.lift(2).filter(t => t.nonEmpty && t != "-").fold(-1)(_.toInt))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     val spark = Pipeline.session(s"local[$cpus]")

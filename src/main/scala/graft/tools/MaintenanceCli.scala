@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.{CorpusState, Pipeline}
 import graft.groups.GroupRegistry
-import graft.lsh.BandIndex
+import graft.lsh.{BandIndex, HashLayout}
 
 /**
  * Corpus maintenance — the `--prune` / cache-GC entry point (§3.3,
@@ -32,6 +32,12 @@ object MaintenanceCli {
     val thresholdArg = args.lift(2).filter(a => a.nonEmpty && a != "-").map(_.toInt)
     val spark = Pipeline.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
     spark.sparkContext.setLogLevel("WARN")
+    // every algorithm-stamped index present (a corpus can carry a pdq and a
+    // phash index side by side since round 4), each with the explicit
+    // threshold (or its algorithm's default) resolved before any write
+    val indexes = HashLayout.All.map(l => l -> s"$corpusWork/${l.indexDir}")
+      .filter { case (_, p) => BandIndex.exists(spark, p) }
+      .map { case (l, p) => (l, p, l.threshold(thresholdArg.getOrElse(-1))) }
 
     val vBefore = CorpusState.version(spark, corpusWork)
     CorpusState.compact(spark, corpusWork)
@@ -40,37 +46,29 @@ object MaintenanceCli {
       .map(_.getName).count(_.startsWith("state_v"))
     println(s"== corpus state: version $vBefore, $stateDirs version dir(s) after gc ==")
 
-    // both algorithm-stamped indexes, when present (a corpus can carry a
-    // pdq and a phash index side by side since round 4)
     lazy val curSig = CorpusState.readSignatures(spark, corpusWork,
       CorpusState.version(spark, corpusWork))
-    Seq(s"$corpusWork/band_index", s"$corpusWork/band_index_phash")
-      .filter(BandIndex.exists(spark, _)).foreach { indexPath =>
-        BandIndex.compact(spark, indexPath)
-        // operating threshold: the MAX of the explicit arg (or algorithm
-        // default) and the chain's recorded high-water mark — a mistyped
-        // low CLI arg must not widen an index that real runs probe at a
-        // threshold the wide masks cannot serve (32-bit caps at 31).
-        // A corpus with NO recorded hwm (batch-built, never incremented)
-        // contributes nothing to the max: the explicit arg is then the
-        // only statement of the operating threshold and must be honored
-        // (hwm.getOrElse(default) would silently override it and make
-        // widening unreachable until an incremental run happened by).
-        val algo = BandIndex.algoOf(spark, indexPath)
-        val default =
-          if (algo == BandIndex.AlgoPhash64)
-            graft.lsh.BandJoin64.DefaultThreshold
-          else Pipeline.DefaultThreshold
-        val hwm = CorpusState.hwm(spark, corpusWork, s"thr_hwm_$algo")
-        val thr = math.max(thresholdArg.getOrElse(default), hwm.getOrElse(0))
-        val widened = BandIndex.maybeWiden(spark, indexPath, curSig, thr)
-        val segs = new java.io.File(indexPath).listFiles()
-          .map(_.getName).count(_.startsWith("seg_"))
-        println(s"== band index (${BandIndex.algoOf(spark, indexPath)}): " +
-          s"compacted to $segs segment(s) " +
-          s"(${BandIndex.chunkBitsOf(spark, indexPath)}-bit chunks" +
-          widened.map(w => s", WIDENED to $w-bit").getOrElse("") + ") ==")
-      }
+    indexes.foreach { case (layout, indexPath, argThr) =>
+      BandIndex.compact(spark, indexPath)
+      // operating threshold: the MAX of the explicit arg (or algorithm
+      // default, `argThr`) and the chain's recorded high-water mark — a
+      // mistyped low CLI arg must not widen an index that real runs probe at a
+      // threshold the wide masks cannot serve (32-bit caps at 31).
+      // A corpus with NO recorded hwm (batch-built, never incremented)
+      // contributes nothing to the max: the explicit arg is then the
+      // only statement of the operating threshold and must be honored
+      // (hwm.getOrElse(default) would silently override it and make
+      // widening unreachable until an incremental run happened by).
+      val hwm = CorpusState.hwm(spark, corpusWork, s"thr_hwm_${layout.algo}")
+      val thr = math.max(argThr, hwm.getOrElse(0))
+      val widened = BandIndex.maybeWiden(spark, indexPath, curSig, thr)
+      val segs = new java.io.File(indexPath).listFiles()
+        .map(_.getName).count(_.startsWith("seg_"))
+      println(s"== band index (${BandIndex.algoOf(spark, indexPath)}): " +
+        s"compacted to $segs segment(s) " +
+        s"(${BandIndex.chunkBitsOf(spark, indexPath)}-bit chunks" +
+        widened.map(w => s", WIDENED to $w-bit").getOrElse("") + ") ==")
+    }
 
     registryPath.foreach { p =>
       GroupRegistry.compact(spark, p)

@@ -189,4 +189,20 @@ class GeoRegistrySpec extends AnyFunSuite {
       Seq((9L, 9L, 9L, 9L, "u-2")).toDF("h0", "h1", "h2", "h3", "group_uuid"))
     assert(GroupRegistry.read(spark, dir).count() == 2)
   }
+
+  test("recompaction after a new merge keeps every row (name-collision regression)") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-reg-recompact").toString
+    def merge(h: Long, uuid: String): Unit = GroupRegistry.merge(spark, dir,
+      Seq((h, 0L, 0L, 0L, uuid)).toDF("h0", "h1", "h2", "h3", "group_uuid"))
+    merge(1L, "u-a")
+    merge(2L, "u-b")
+    GroupRegistry.compact(spark, dir)
+    // back to two segments: a count-named merged segment would now collide
+    merge(3L, "u-c")
+    GroupRegistry.compact(spark, dir)
+    val got = GroupRegistry.read(spark, dir).select("h0", "group_uuid").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == Map(1L -> "u-a", 2L -> "u-b", 3L -> "u-c"), got)
+  }
 }
