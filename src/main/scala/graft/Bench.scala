@@ -1,7 +1,6 @@
 package graft
 
-import graft.synth.Synth
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /**
  * Benchmark main — prints ONE JSON line:
@@ -32,12 +31,6 @@ object Bench {
   // true ~0.90 efficiency down to a measured 0.80 (observed).
   private val BenchBases =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_BASES", "40000").toLong
-
-  private def session(cpus: Int): SparkSession = {
-    val s = Pipeline.session(s"local[$cpus]", shufflePartitions = math.max(cpus, 8))
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private val Jdk17AddOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -203,10 +196,8 @@ object Bench {
     val corpusDir = s"/root/repo/target/bench-corpus-$BenchBases"
 
     // --- part 1: headline queries at the driver's parallelism ---
-    var spark = session(cpus)
-    val marker = new org.apache.hadoop.fs.Path(s"$corpusDir/images/_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) Synth.generate(spark, BenchBases, corpusDir)
+    val spark = Harness.session(cpus, math.max(cpus, 8))
+    Harness.corpus(spark, BenchBases, corpusDir)
 
     val queryTimes = HeadlineQueries.map { name =>
       val t0 = System.nanoTime()

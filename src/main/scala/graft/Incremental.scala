@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
  *
  * This is what makes the incremental path DELTA-PROPORTIONAL in writes:
  * a 10¹²-row corpus is never rewritten to absorb a 10⁶-row delta
- * (measured in tools/IncBench — the state commit is O(delta + affected
- * components), not O(corpus)).
+ * (measured by tools/ChainBench's `delta_vs_full_per_img` — the state
+ * commit is O(delta + affected components), not O(corpus)).
  *
  * The marker records the deltaWork that produced it: a resumed run with
  * the same deltaWork skips the commit; a DIFFERENT delta trying to commit

@@ -26,9 +26,6 @@ import org.apache.spark.sql.functions._
 object Pipeline {
   final val DefaultThreshold: Int = HashLayout.Pdq.defaultThreshold
 
-  private val warmedUp = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   def session(master: String, shufflePartitions: Int = 32): SparkSession = {
     // shuffle through RAM, not container disk: local[N] is the stand-in for
     // a cluster whose shuffle goes over NVMe/network — disk /tmp serializes
@@ -38,7 +35,7 @@ object Pipeline {
       if (shmBase.isDirectory && shmBase.canWrite) "/dev/shm/graft-spark-local"
       else s"${sys.props("java.io.tmpdir")}/graft-spark-local"
     new java.io.File(localDir).mkdirs()
-    val s = SparkSession.builder()
+    SparkSession.builder()
       .master(master)
       .appName("graft-dedup")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -49,29 +46,6 @@ object Pipeline {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // Once-per-JVM warm-up (round 6, guide §1: measure the computation,
-    // not class loading): the first job of a fresh JVM pays Janino/WSCG
-    // compiler init, shuffle + AQE machinery, and parquet reader/writer
-    // class loading — ~5-8 s billed to whichever query happens to run
-    // first. One tiny shuffle job plus a 10-row parquet round-trip loads
-    // all of it up front, on synthetic rows (no input data touched, no
-    // results retained — this is JVM warm-up, not caching).
-    if (warmedUp.compareAndSet(false, true)) {
-      try {
-        s.range(0, 1000)
-          .groupBy((org.apache.spark.sql.functions.col("id") % 10).as("k"))
-          .count().orderBy("k").collect()
-        val f = java.nio.file.Files.createTempDirectory("graft-warmup")
-        val p = s"$f/warm.parquet"
-        s.range(0, 10).write.mode("overwrite").parquet(p)
-        s.read.parquet(p).count()
-        new scala.reflect.io.Directory(f.toFile).deleteRecursively()
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn("session warm-up failed; the first stages run cold", e)
-      }
-    }
-    s
   }
 
   /** Compute signatures with a frozen dense ord starting at `ordFrom`.
@@ -183,7 +157,8 @@ object Pipeline {
 
     val (edges, edgesHit) = ckpt.stage("edges")(
       selfEdges(sig, layout, thr, contentStar, nConfHint = confidentRows))
-    if (!edgesHit) ckpt.appendMetric("comparisons", edges.count().toDouble)
+    // the stage's own lineage count: no second job over the committed rows
+    if (!edgesHit) ckpt.appendMetric("comparisons", ckpt.stagedRows("edges").toDouble)
 
     val (comps, _) = ckpt.stage("components")(
       ConnectedComponents.run(spark, edges))

@@ -62,6 +62,12 @@ final class Ckpt(spark: SparkSession, workDir: String) {
     }
   }
 
+  /** Rows `stage` committed in THIS run (its pending lineage row), so a
+    * caller reuses the count instead of re-counting the stage's output. */
+  def stagedRows(stageName: String): Long =
+    pendingLineage.reverseIterator.find(_._1 == stageName).map(_._2).getOrElse(
+      throw new IllegalStateException(s"stage $stageName was not computed in this run"))
+
   def appendLineage(stageName: String, rows: Long, wallMs: Long): Unit =
     pendingLineage += ((stageName, rows, wallMs, java.time.Instant.now.toString))
 

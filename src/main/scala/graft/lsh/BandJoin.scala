@@ -76,7 +76,8 @@ object BandJoin {
     * beyond what AQE skew-split absorbs comfortably and the SURVEY §4
     * adversarial scenario (a corpus of near-flat images collapsing onto a
     * few chunk values). Below it, AQE's partition-level splitting is
-    * enough (measured 27× bench-corpus skew absorbed, tools/JoinProbe). */
+    * enough (measured 27× bench-corpus skew absorbed; BASELINE.md
+    * "Band-join candidate volume"). */
   final val SaltBucketCap = 200000L
 
   /** Ceiling on the derived salt factor: probe rows replicate ×S, so an
@@ -86,7 +87,8 @@ object BandJoin {
   /** Confident-row floor below which auto mode skips the occupancy
     * measurement entirely: with ≤ 2M rows no bucket can exceed 10× the
     * cap, AQE's partition-level skew split absorbs that comfortably
-    * (measured 27× bench-corpus skew, tools/JoinProbe), and the
+    * (measured 27× bench-corpus skew; BASELINE.md "Band-join candidate
+    * volume"), and the
     * measurement pass would be a visible fraction of the whole join. Past
     * the floor the join itself costs minutes and the one extra agg is
     * noise. */
@@ -410,12 +412,13 @@ object BandJoin {
 
   /** The raw band-collision rows (post-join, pre-verify) of `conf` — rows
     * already filtered to the confident ones — with the probe variant in
-    * v0.. and the stored hash in c0..; exposed for diagnostics
-    * (tools/JoinProbe) and the verify step above. `nConf` feeds the auto
+    * v0.. and the stored hash in c0..; the verify step above reads them
+    * (their volume is measured in BASELINE.md "Band-join candidate
+    * volume"). `nConf` feeds the auto
     * width (`chunkBits0 = 0`) and auto salt (`saltFactor = 0`). */
-  private[graft] def bandMatches(layout: HashLayout, conf: DataFrame,
-                                 threshold: Int, saltFactor: Int,
-                                 chunkBits0: Int, nConf: Long): DataFrame = {
+  private def bandMatches(layout: HashLayout, conf: DataFrame,
+                          threshold: Int, saltFactor: Int,
+                          chunkBits0: Int, nConf: Long): DataFrame = {
     // the packed key below holds the salt (0..S-1) in 6 bits: a factor
     // past 64 would make distinct (band_val, salt) pairs share a key
     require(saltFactor >= 0 && saltFactor <= 64,

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.Pipeline
 import graft.synth.Synth
+import org.apache.spark.sql.SparkSession
 
 /** One isolated dedup-pipeline measurement (spawned by graft.Bench as a
   * child JVM — the local-mode stand-in for one spark-submit at a given
@@ -10,8 +11,10 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val Array(cpus, corpusDir, workDir) = args.take(3)
     val reps = if (args.length > 3) args(3).toInt else 2
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = math.max(cpus.toInt, 8))
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.run(cpus.toInt, minPartitions = 8)(measure(_, corpusDir, workDir, reps))
+  }
+
+  def measure(spark: SparkSession, corpusDir: String, workDir: String, reps: Int): String = {
     // JIT/codegen warmup on a small corpus so N and 4N measure steady state
     val warmupDir = s"$workDir/warmup-corpus"
     Synth.generate(spark, 300, warmupDir)
@@ -30,10 +33,8 @@ object BenchOne {
     // vs CC vs groups) instead of hiding in the total
     val stages = spark.read.parquet(s"$workDir/work$bestRep/_lineage")
       .collect().map(r => r.getString(0) -> r.getLong(2))
-    val stagesJson = stages.sortBy(_._1)
-      .map { case (s, ms) => f""""$s":${ms / 1000.0}%.3f""" }
-      .mkString("{", ",", "}")
-    println(f"""BENCHONE {"images":$n,"sec":$sec%.3f,"stages":$stagesJson}""")
-    spark.stop()
+    Harness.emit("BENCHONE", "images" -> n, "sec" -> Harness.dec(sec, 3),
+      "stages" -> Harness.Obj(stages.sortBy(_._1).toSeq
+        .map { case (s, ms) => s -> Harness.dec(ms / 1000.0, 3) }: _*))
   }
 }

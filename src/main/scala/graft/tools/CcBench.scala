@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Pipeline
 import graft.cc.ConnectedComponents
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,14 +25,13 @@ import org.apache.spark.sql.functions._
  * Defaults: 1.2M families × 10 nodes (~13M edges) + 100k-node chain.
  */
 object CcBench {
-  def main(args: Array[String]): Unit = {
-    val nFamilies = args.headOption.map(_.toLong).getOrElse(1200000L)
-    val width = if (args.length > 1) args(1).toInt else 10
-    val giantLen = if (args.length > 2) args(2).toLong else 100000L
-    val cpus = if (args.length > 3) args(3).toInt else 16
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    Harness.run(args.lift(3).fold(16)(_.toInt))(measure(_,
+      nFamilies = args.headOption.fold(1200000L)(_.toLong),
+      width = args.lift(1).fold(10)(_.toInt), giantLen = args.lift(2).fold(100000L)(_.toLong)))
 
+  def measure(spark: SparkSession, nFamilies: Long, width: Int, giantLen: Long): String = {
+    val cpus = spark.sparkContext.defaultParallelism
     val famNodes = nFamilies * width
     // distributed deterministic generation — no driver-side
     // materialization. Each union branch gets its OWN range: branches
@@ -54,12 +53,12 @@ object CcBench {
       .withColumn("dist", lit(0))
       .localCheckpoint()
 
-    val t0 = System.nanoTime()
-    val (labels, rounds, nEdges) = ConnectedComponents.runWithStats(
-      spark, edges, maxIter = 40, driverPathMaxEdges = 0L)
-    val labelled = labels.localCheckpoint()
-    val nComps = labelled.select("comp").distinct().count()
-    val wall = (System.nanoTime() - t0) / 1e9
+    val ((labelled, rounds, nEdges, nComps), wall) = Harness.timed {
+      val (labels, rounds, nEdges) = ConnectedComponents.runWithStats(
+        spark, edges, maxIter = 40, driverPathMaxEdges = 0L)
+      val labelled = labels.localCheckpoint()
+      (labelled, rounds, nEdges, labelled.select("comp").distinct().count())
+    }
 
     // the giant chain must be ONE component rooted at its min node
     val giantComps = labelled.where(col("id") >= famNodes)
@@ -83,10 +82,9 @@ object CcBench {
       .count()
     require(diff == 0, s"iterative vs driver union-find diverged on $diff nodes")
 
-    println(f"""CCBENCH {"edges":$nEdges,"nodes":${famNodes + giantLen},""" +
-      f""""components":$nComps,"rounds":$rounds,"giant_chain":$giantLen,""" +
-      f""""wall_sec":$wall%.1f,"edges_per_sec":${nEdges / wall}%.0f,""" +
-      f""""slice_equality_nodes_checked":${sliceMax},"cpus":$cpus}""")
-    spark.stop()
+    Harness.emit("CCBENCH", "edges" -> nEdges, "nodes" -> (famNodes + giantLen),
+      "components" -> nComps, "rounds" -> rounds, "giant_chain" -> giantLen,
+      "wall_sec" -> Harness.dec(wall, 1), "edges_per_sec" -> Harness.dec(nEdges / wall, 0),
+      "slice_equality_nodes_checked" -> sliceMax, "cpus" -> cpus)
   }
 }

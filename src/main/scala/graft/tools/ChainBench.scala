@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.{CorpusState, Incremental, Pipeline}
 import graft.synth.Synth
+import org.apache.spark.sql.SparkSession
 
 /**
  * Steady-state ingest evidence: apply K equal-sized deltas sequentially
@@ -9,38 +10,65 @@ import graft.synth.Synth
  * state and auto-compaction the cost must stay FLAT as versions pile up
  * (the 10¹²-corpus daily-ingest loop), not grow with the layer stack.
  *
+ * Delta proportionality (SCALING.md lever #1) rides along: the corpus
+ * batch run is timed too (`full_sec`), and the first delta's per-image
+ * cost against it is `delta_vs_full_per_img` — at 10¹²-scale the full
+ * join happens once ever, so that ratio IS the steady-state cost model.
+ * After the flatness window one more delta runs with `fullOutput = true`
+ * (the reference's report-everything UX): `full_report_delta_sec`.
+ *
  * Usage: runMain graft.tools.ChainBench [corpusBases] [deltaBases] [k] [cpus]
  */
 object ChainBench {
-  def main(args: Array[String]): Unit = {
-    val nCorpus = args.headOption.map(_.toLong).getOrElse(4000L)
-    val nDelta = if (args.length > 1) args(1).toLong else 200L
-    val k = if (args.length > 2) args(2).toInt else 8
-    val cpus = if (args.length > 3) args(3).toInt else 16
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    Harness.run(args.lift(3).fold(16)(_.toInt))(measure(_,
+      nCorpus = args.headOption.fold(4000L)(_.toLong), nDelta = args.lift(1).fold(200L)(_.toLong),
+      k = args.lift(2).fold(8)(_.toInt)))
 
-    val base = java.nio.file.Files.createTempDirectory("graft-chainbench").toString
-    val corpusImages = Synth.imagesDF(spark, 0L, nCorpus).localCheckpoint()
-    Pipeline.run(spark, corpusImages, s"$base/corpus-work").count()
-
-    val times = (0 until k).map { i =>
-      val from = nCorpus + i * nDelta
-      val delta = Synth.imagesDF(spark, from, from + nDelta).localCheckpoint()
-      val t0 = System.nanoTime()
-      Incremental.run(spark, delta, s"$base/corpus-work", s"$base/delta-$i",
-        fullOutput = false).count()
-      (System.nanoTime() - t0) / 1e9
+  def measure(spark: SparkSession, nCorpus: Long, nDelta: Long, k: Int): String = {
+    val base = Harness.workDir("graft-chainbench")
+    val corpusWork = s"$base/corpus-work"
+    // disjoint base-id ranges → corpus and deltas share no dup families,
+    // but every delta still probes the whole corpus index
+    def images(from: Long, until: Long) = {
+      val df = Synth.imagesDF(spark, from, until).localCheckpoint()
+      (df, df.count())
     }
-    val layers = new java.io.File(s"$base/corpus-work").listFiles()
+    def ingest(i: Int, fullOutput: Boolean): (Long, Double) = {
+      val (delta, n) = images(nCorpus + i * nDelta, nCorpus + (i + 1) * nDelta)
+      n -> Harness.timed(Incremental.run(spark, delta, corpusWork, s"$base/delta-$i",
+        fullOutput = fullOutput).count())._2
+    }
+
+    val (corpusImages, nCorpusImgs) = images(0L, nCorpus)
+    val (_, fullSec) = Harness.timed(Pipeline.run(spark, corpusImages, corpusWork).count())
+    val deltas = (0 until k).map(ingest(_, fullOutput = false))
+    val times = deltas.map(_._2)
+    val (nFullReport, fullReportSec) = ingest(k, fullOutput = true)
+
+    // state consistency: one version per delta, merged rows = corpus + every delta
+    val ver = CorpusState.version(spark, corpusWork)
+    val merged = CorpusState.readSignatures(spark, corpusWork, ver).count()
+    val want = nCorpusImgs + deltas.map(_._1).sum + nFullReport
+    require(ver == k + 1 && merged == want,
+      s"state inconsistent: v$ver rows=$merged want v${k + 1} rows=$want")
+
+    val layers = new java.io.File(corpusWork).listFiles()
       .map(_.getName).count(_.startsWith("state_v"))
-    val ver = CorpusState.version(spark, s"$base/corpus-work")
-    val perDelta = times.map(t => f"$t%.1f").mkString("[", ",", "]")
     // flatness: mean of the last 3 deltas vs the first 3 — growth with
     // version count would show here as a rising tail
     val head3 = times.take(3).sum / 3
     val tail3 = times.takeRight(3).sum / 3
-    println(f"""CHAINBENCH {"corpus_bases":$nCorpus,"delta_bases":$nDelta,"k":$k,"per_delta_sec":$perDelta,"head3_avg":$head3%.1f,"tail3_avg":$tail3%.1f,"tail_over_head":${tail3 / head3}%.2f,"versions":$ver,"state_dirs_on_disk":$layers,"cpus":$cpus}""")
-    spark.stop()
+    val perImgFull = fullSec / nCorpusImgs
+    val perImgDelta = times.head / deltas.head._1
+    Harness.emit("CHAINBENCH", "corpus_bases" -> nCorpus, "delta_bases" -> nDelta,
+      "k" -> k, "per_delta_sec" -> times.map(Harness.dec(_, 1)),
+      "head3_avg" -> Harness.dec(head3, 1), "tail3_avg" -> Harness.dec(tail3, 1),
+      "tail_over_head" -> Harness.dec(tail3 / head3, 2), "versions" -> ver,
+      "state_dirs_on_disk" -> layers, "full_sec" -> Harness.dec(fullSec, 1),
+      "delta_ms_per_img" -> Harness.dec(perImgDelta * 1000, 2),
+      "delta_vs_full_per_img" -> Harness.dec(perImgDelta / perImgFull, 2),
+      "full_report_delta_sec" -> Harness.dec(fullReportSec, 1),
+      "cpus" -> spark.sparkContext.defaultParallelism)
   }
 }

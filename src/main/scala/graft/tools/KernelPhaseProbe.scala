@@ -8,7 +8,11 @@ import java.security.MessageDigest
 
 /** Round-6 phase-level breakdown of the signature kernel (single core,
   * synth mix): where do the ~2.2 ms/img actually go? Read-only probe —
-  * prints one line per phase. */
+  * prints one line per phase, then the per-format split of the full
+  * kernel, so a kernel regression names the decode tier that caused it.
+  * `full_kernel` is also the single-core host canary.
+  *
+  * Usage: runMain graft.tools.KernelPhaseProbe [nBases] */
 object KernelPhaseProbe {
   def main(args: Array[String]): Unit = {
     val nBases = args.headOption.map(_.toInt).getOrElse(300)
@@ -18,41 +22,33 @@ object KernelPhaseProbe {
     // warm
     rows.take(rows.size / 3).foreach(SignatureKernel.computeOne(_, sha))
 
-    def time(label: String)(f: ImageRow => Unit): Unit = {
-      val t0 = System.nanoTime()
-      rows.foreach(f)
-      println(f"KPHASE $label ${(System.nanoTime() - t0) / 1e6 / rows.size}%.3f ms/img")
+    def time[A](label: String, xs: Seq[A], over: String = "")(f: A => Unit): Unit = {
+      val (_, sec) = Harness.timed(xs.foreach(f))
+      println(f"KPHASE $label ${sec * 1e3 / xs.size}%.3f ms/img$over")
     }
-    time("full_kernel")(r => SignatureKernel.computeOne(r, sha))
-    time("content_sha")(r => { sha.reset(); sha.digest(r.bytes) })
-    time("decode_only")(r => ImageCodec.decodeWithStatus(r.bytes, r.fmt, r.w, r.h))
-    time("exif_only")(r =>
+    time("full_kernel", rows)(r => SignatureKernel.computeOne(r, sha))
+    time("content_sha", rows)(r => { sha.reset(); sha.digest(r.bytes) })
+    time("decode_only", rows)(r => ImageCodec.decodeWithStatus(r.bytes, r.fmt, r.w, r.h))
+    time("exif_only", rows)(r =>
       try Exif.fromBytes(r.bytes, r.fmt)
       catch { case scala.util.control.NonFatal(_) => () })
-    time("minhash_only")(r => graft.functions.MinHash.signature(r.caption))
+    time("minhash_only", rows)(r => graft.functions.MinHash.signature(r.caption))
     // decoded-dependent phases: pre-decode once outside the timer
-    val decoded = rows.map(r => r -> ImageCodec.decodeWithStatus(r.bytes, r.fmt, r.w, r.h)._1)
-      .collect { case (r, Some(d)) if d.w >= Pdq.MinHashableDim && d.h >= Pdq.MinHashableDim => (r, d) }
-    def timeD(label: String)(f: ((ImageRow, graft.kernel.DecodedImage)) => Unit): Unit = {
-      val t0 = System.nanoTime()
-      decoded.foreach(f)
-      println(f"KPHASE $label ${(System.nanoTime() - t0) / 1e6 / decoded.size}%.3f ms/img (over ${decoded.size} decoded)")
-    }
-    timeD("pixelhash_sha")(x => { sha.reset(); sha.digest(x._2.pixelHashBytes) })
-    timeD("luma601")(x => x._2.luma601)
-    val lumas = decoded.map(x => (x._2.luma601, x._2.w, x._2.h))
-    def timeL(label: String)(f: ((Array[Float], Int, Int)) => Unit): Unit = {
-      val t0 = System.nanoTime()
-      lumas.foreach(f)
-      println(f"KPHASE $label ${(System.nanoTime() - t0) / 1e6 / lumas.size}%.3f ms/img (over ${lumas.size})")
-    }
-    timeL("pdq_features")(x => Pdq.featuresFromLuma(x._1, x._2, x._3))
+    val decoded = rows.map(r => ImageCodec.decodeWithStatus(r.bytes, r.fmt, r.w, r.h)._1)
+      .collect { case Some(d) if d.w >= Pdq.MinHashableDim && d.h >= Pdq.MinHashableDim => d }
+    val overDecoded = s" (over ${decoded.size} decoded)"
+    time("pixelhash_sha", decoded, overDecoded)(d => { sha.reset(); sha.digest(d.pixelHashBytes) })
+    time("luma601", decoded, overDecoded)(_.luma601)
+    val lumas = decoded.map(d => (d.luma601, d.w, d.h))
+    val overLumas = s" (over ${lumas.size})"
+    time("pdq_features", lumas, overLumas)(x => Pdq.featuresFromLuma(x._1, x._2, x._3))
     val coeffs = lumas.map(x => Pdq.featuresFromLuma(x._1, x._2, x._3)._1)
-    locally {
-      val t0 = System.nanoTime()
-      coeffs.foreach(c => Pdq.dihedralHashes(c).map(Pdq.toLongs))
-      println(f"KPHASE pdq_dihedral ${(System.nanoTime() - t0) / 1e6 / coeffs.size}%.3f ms/img")
-    }
-    timeL("phash64")(x => PHash.hashGray(x._1, x._2, x._3))
+    time("pdq_dihedral", coeffs)(c => Pdq.dihedralHashes(c).map(Pdq.toLongs))
+    time("phash64", lumas, overLumas)(x => PHash.hashGray(x._1, x._2, x._3))
+    Harness.emit("KPHASE", "by_fmt" -> Harness.Obj(rows.groupBy(_.fmt).toSeq.sortBy(_._1).map {
+      case (fmt, rs) =>
+        val (_, sec) = Harness.timed(rs.foreach(SignatureKernel.computeOne(_, sha)))
+        fmt -> Harness.Obj("n" -> rs.size, "ms_per_img" -> Harness.dec(sec * 1000 / rs.size, 2))
+    }: _*))
   }
 }

@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Pipeline
 import graft.cc.ConnectedComponents
 import graft.kernel.Pdq
 import graft.lsh.{BandJoin, HashLayout}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,23 +21,23 @@ import org.apache.spark.sql.functions._
  * Usage: runMain graft.tools.MillionBench [nHashes] [cpus] [pdq|phash]
  */
 object MillionBench {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val cpus = if (args.length > 1) args(1).toInt else 32
-    // pdq | phash (u64, auto chunk width from corpus size) | phash8 (pin
-    // 8-bit reference-parity chunks) | phash16 (pin 16-bit — identical
-    // edges by pigeonhole). Defaults are the SAFE path now: at 1M hashes
-    // auto resolves to 16-bit (~10 s) instead of the degenerate 8-bit
-    // (measured 99.9 s), closing the round-2 config trap.
-    val modeArg = if (args.length > 2) args(2) else "pdq"
+  def main(args: Array[String]): Unit =
+    Harness.run(args.lift(1).fold(32)(_.toInt))(measure(_,
+      args.headOption.fold(1000000)(_.toInt), args.lift(2).getOrElse("pdq")))
+
+  /** `modeArg`: pdq | phash (u64, auto chunk width from corpus size) |
+    * phash8 (pin 8-bit reference-parity chunks) | phash16 (pin 16-bit —
+    * identical edges by pigeonhole). Defaults are the SAFE path now: at
+    * 1M hashes auto resolves to 16-bit (~10 s) instead of the degenerate
+    * 8-bit (measured 99.9 s), closing the round-2 config trap. */
+  def measure(spark: SparkSession, n: Int, modeArg: String): String = {
     val chunkBits = modeArg match {
       case "phash8" => 8
       case "phash16" => 16
       case _ => 0 // auto
     }
     val mode = if (modeArg.startsWith("phash")) "phash" else "pdq"
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = spark.sparkContext.defaultParallelism
     import spark.implicits._
 
     // deterministic corpus with a 5-member planted cluster at ids 0..4
@@ -79,19 +79,21 @@ object MillionBench {
     }
 
     val layout = if (mode == "phash") HashLayout.Phash64 else HashLayout.Pdq
-    val t0 = System.nanoTime()
-    val edgesDf = BandJoin.edges(sig, threshold, chunkBits = chunkBits,
-      layout = layout)
-    val edges = edgesDf.localCheckpoint()
-    val nEdges = edges.count()
-    val comps = ConnectedComponents.run(spark, edges)
-    val plantedComps = comps.where(col("id").isin(planted: _*))
-      .select("comp").distinct().count()
-    val sec = (System.nanoTime() - t0) / 1e9
+    val ((nEdges, comps, plantedComps), sec) = Harness.timed {
+      val edges = BandJoin.edges(sig, threshold, chunkBits = chunkBits,
+        layout = layout).localCheckpoint()
+      val nEdges = edges.count()
+      val comps = ConnectedComponents.run(spark, edges)
+      (nEdges, comps, comps.where(col("id").isin(planted: _*))
+        .select("comp").distinct().count())
+    }
     val plantedFound = comps.where(col("id").isin(planted: _*)).count()
-    println(f"""MILLIONBENCH {"mode":"$modeArg","hashes":$n,"edges":$nEdges,"sec":$sec%.2f,"hashes_per_sec":${n / sec}%.0f,"planted_found":$plantedFound,"planted_components":$plantedComps,"cpus":$cpus}""")
+    val line = Harness.emit("MILLIONBENCH", "mode" -> modeArg, "hashes" -> n,
+      "edges" -> nEdges, "sec" -> Harness.dec(sec, 2),
+      "hashes_per_sec" -> Harness.dec(n / sec, 0), "planted_found" -> plantedFound,
+      "planted_components" -> plantedComps, "cpus" -> cpus)
     require(plantedFound == 5 && plantedComps == 1,
       s"planted cluster not recovered: found=$plantedFound comps=$plantedComps")
-    spark.stop()
+    line
   }
 }

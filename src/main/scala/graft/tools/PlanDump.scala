@@ -53,16 +53,13 @@ object PlanDump {
     val names: Seq[String] = if (args.length > 2) args.drop(2).toSeq else Seq(
       "q_img_edges", "q_minhash_band_pairs", "q_doc_minhash",
       "q_substring_dup", "phash_band_join", "q_hamming_hist")
-    val spark = Pipeline.session(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, 32)
     def frame(n: String): DataFrame =
       pipelinePlans.get(n).fold(SparkEntry.queries(n)(spark, sfDir))(_(spark))
     if (timing) {
       val name = args(1)
       val times = (1 to args.lift(2).fold(2)(_.toInt)).map { _ =>
-        val t0 = System.nanoTime()
-        val n = frame(name).count()
-        val s = (System.nanoTime() - t0) / 1e9
+        val (n, s) = Harness.timed(frame(name).count())
         println(f"TIMEQUERY $name rows=$n sec=$s%.3f")
         s
       }

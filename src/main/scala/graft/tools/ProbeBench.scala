@@ -4,6 +4,7 @@ import graft.Pipeline
 import graft.ckpt.Ckpt
 import graft.lsh.BandIndex
 import graft.synth.Synth
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -26,52 +27,47 @@ import org.apache.spark.sql.functions._
  *    growing with corpus on any engine. Reported for honesty, not as a
  *    regression.
  *
- * Usage: runMain graft.tools.ProbeBench [corpusImagesDir] [smallBases] [deltaBases] [cpus]
- * Defaults: the cached bench corpus (40k bases), 1× slice = 4k bases.
+ * Usage: runMain graft.tools.ProbeBench [corpusDir] [smallBases] [deltaBases] [cpus]
+ * Defaults: the cached bench corpus (40k bases, generated into
+ * `corpusDir` when absent), 1× slice = 4k bases.
  */
 object ProbeBench {
   def main(args: Array[String]): Unit = {
     val corpusDir = args.headOption
       .getOrElse("/root/repo/target/bench-corpus-40000")
-    val smallBases = if (args.length > 1) args(1).toInt else 4000
-    val deltaBases = if (args.length > 2) args(2).toLong else 200L
-    val cpus = if (args.length > 3) args(3).toInt else 16
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.run(args.lift(3).fold(16)(_.toInt))(spark => measure(spark,
+      Harness.corpus(spark, 40000L, corpusDir), smallBases = args.lift(1).fold(4000)(_.toInt),
+      deltaBases = args.lift(2).fold(200L)(_.toLong)))
+  }
 
+  def measure(spark: SparkSession, corpusDir: String, smallBases: Int,
+              deltaBases: Long): String = {
     val all = Synth.readImages(spark, corpusDir)
     // image_id is "img-%08d-<variant>": the base id is char 5..12
     def subset(maxBase: Int) =
       all.where(expr("cast(substring(image_id, 5, 8) as int)") < maxBase)
 
-    val work = java.nio.file.Files.createTempDirectory("graft-probebench").toString
+    val work = Harness.workDir("graft-probebench")
     // fixed delta, disjoint base-id range, ords offset past any corpus
-    val deltaSig = new Ckpt(spark, s"$work/delta").stage("signatures")(
-      graft.kernel.SignatureKernel.signatures(
-          spark, Synth.imagesDF(spark, 900000L, 900000L + deltaBases)).toDF()
-        .withColumn("ord", monotonically_increasing_id() + lit(100000000L)))._1
+    val deltaSig = new Ckpt(spark, s"$work/delta").stage("signatures")(Pipeline.signatures(
+      spark, Synth.imagesDF(spark, 900000L, 900000L + deltaBases), ordFrom = 100000000L))._1
 
-    val results = scala.collection.mutable.ArrayBuffer.empty[String]
-    Seq("x1" -> subset(smallBases), "x10" -> all).foreach { case (label, df) =>
+    val results = Seq("x1" -> subset(smallBases), "x10" -> all).flatMap { case (label, df) =>
       val ckpt = new Ckpt(spark, s"$work/$label")
       val sig = ckpt.stage("signatures")(Pipeline.signatures(spark, df))._1
       val idxPath = s"$work/$label/index"
       BandIndex.build(sig, idxPath)
       val idxRows = BandIndex.read(spark, idxPath).count()
-      Seq(12, Pipeline.DefaultThreshold).foreach { thr =>
+      Seq(12, Pipeline.DefaultThreshold).map { thr =>
         // min-of-2 (shared host): each shot is the FULL probe incl. the
         // key-set build, semi-filter decision, join, verify, dedup
-        val shots = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = BandIndex.probe(spark, idxPath, deltaSig, thr).count()
-          ((System.nanoTime() - t0) / 1e9, n)
-        }
-        val best = shots.minBy(_._1)
-        results += f""""${label}_t$thr":{"probe_sec":${best._1}%.2f,""" +
-          f""""edges":${best._2},"index_rows":$idxRows}"""
+        val (edges, sec) = (1 to 2).map(_ =>
+          Harness.timed(BandIndex.probe(spark, idxPath, deltaSig, thr).count())).minBy(_._2)
+        s"${label}_t$thr" -> Harness.Obj("probe_sec" -> Harness.dec(sec, 2),
+          "edges" -> edges, "index_rows" -> idxRows)
       }
     }
-    println(s"""PROBEBENCH {${results.mkString(",")},"delta_bases":$deltaBases,"cpus":$cpus}""")
-    spark.stop()
+    Harness.emit("PROBEBENCH", results ++ Seq("delta_bases" -> deltaBases,
+      "cpus" -> spark.sparkContext.defaultParallelism): _*)
   }
 }

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.Pipeline
 import graft.groups.GroupRegistry
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,15 +21,14 @@ import org.apache.spark.sql.functions._
  * Usage: runMain graft.tools.RegistryBench [baseRows] [deltaRows] [cpus]
  */
 object RegistryBench {
-  def main(args: Array[String]): Unit = {
-    val baseRows = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val deltaRows = if (args.length > 1) args(1).toLong else 10000L
-    val cpus = if (args.length > 2) args(2).toInt else 16
-    val spark = Pipeline.session(s"local[$cpus]", shufflePartitions = cpus)
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit =
+    Harness.run(args.lift(2).fold(16)(_.toInt))(measure(_,
+      baseRows = args.headOption.fold(10000000L)(_.toLong),
+      deltaRows = args.lift(1).fold(10000L)(_.toLong)))
 
-    val path = java.nio.file.Files.createTempDirectory("graft-regbench")
-      .toString + "/registry"
+  def measure(spark: SparkSession, baseRows: Long, deltaRows: Long): String = {
+    val cpus = spark.sparkContext.defaultParallelism
+    val path = Harness.workDir("graft-regbench") + "/registry"
     // deterministic synthetic registry rows: 4 hash words + a uuid-shaped
     // string, all derived from the row id
     def rows(from: Long, until: Long) =
@@ -40,16 +39,12 @@ object RegistryBench {
         xxhash64(col("id"), lit(3)).as("h3"),
         md5(col("id").cast("string")).as("group_uuid"))
 
-    val t0 = System.nanoTime()
-    GroupRegistry.merge(spark, path, rows(0, baseRows))
-    val baseSec = (System.nanoTime() - t0) / 1e9
+    val (_, baseSec) = Harness.timed(GroupRegistry.merge(spark, path, rows(0, baseRows)))
 
     // delta: half new hashes, half re-registrations of existing ones
     val delta = rows(baseRows, baseRows + deltaRows)
       .unionByName(rows(0, deltaRows))
-    val t1 = System.nanoTime()
-    GroupRegistry.merge(spark, path, delta)
-    val deltaSec = (System.nanoTime() - t1) / 1e9
+    val (_, deltaSec) = Harness.timed(GroupRegistry.merge(spark, path, delta))
 
     val segs = new java.io.File(path).listFiles()
       .filter(_.getName.startsWith("seg_")).map(_.getName).sorted
@@ -60,24 +55,20 @@ object RegistryBench {
         "(re-registered hashes must be anti-joined away)")
 
     // idempotent re-merge: nothing new ⇒ no segment at all
-    val t2 = System.nanoTime()
-    GroupRegistry.merge(spark, path, delta)
-    val rerunSec = (System.nanoTime() - t2) / 1e9
+    val (_, rerunSec) = Harness.timed(GroupRegistry.merge(spark, path, delta))
     require(new java.io.File(path).listFiles()
       .count(_.getName.startsWith("seg_")) == 2,
       "idempotent re-merge appended a segment")
 
-    val t3 = System.nanoTime()
-    GroupRegistry.compact(spark, path)
-    val compactSec = (System.nanoTime() - t3) / 1e9
+    val (_, compactSec) = Harness.timed(GroupRegistry.compact(spark, path))
     val total = GroupRegistry.read(spark, path).count()
     require(total == baseRows + deltaRows,
       s"resolved registry has $total rows, want ${baseRows + deltaRows}")
 
-    println(f"""REGISTRYBENCH {"base_rows":$baseRows,"delta_rows":$deltaRows,""" +
-      f""""base_merge_sec":$baseSec%.1f,"delta_merge_sec":$deltaSec%.1f,""" +
-      f""""idempotent_rerun_sec":$rerunSec%.1f,"compact_sec":$compactSec%.1f,""" +
-      f""""delta_seg_rows":$deltaSegRows,"cpus":$cpus}""")
-    spark.stop()
+    Harness.emit("REGISTRYBENCH", "base_rows" -> baseRows, "delta_rows" -> deltaRows,
+      "base_merge_sec" -> Harness.dec(baseSec, 1), "delta_merge_sec" -> Harness.dec(deltaSec, 1),
+      "idempotent_rerun_sec" -> Harness.dec(rerunSec, 1),
+      "compact_sec" -> Harness.dec(compactSec, 1), "delta_seg_rows" -> deltaSegRows,
+      "cpus" -> cpus)
   }
 }

@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Pipeline
 import graft.cc.ConnectedComponents
 import graft.lsh.{BandJoin, HashLayout}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -43,21 +43,20 @@ import scala.jdk.CollectionConverters._
 object SaltBench {
   final val HotChunk = 0xabcdL
 
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(2600000L)
-    val hot = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = if (args.length > 2) args(2).toInt else 16
+  // 2.6M rows × 16 chunks explode to ~42M probe-side build rows: at
+  // `cpus` shuffle partitions each SHJ task would build a ~2.6M-row
+  // hash map and OOM the execution pool — 64 partitions keeps builds
+  // ~650k rows (the shuffle-partition sizing rule SCALING.md states)
+  def main(args: Array[String]): Unit =
+    Harness.run(args.lift(2).fold(16)(_.toInt), minPartitions = 64)(measure(_,
+      n = args.headOption.fold(2600000L)(_.toLong), hot = args.lift(1).fold(1000000L)(_.toLong)))
+
+  def measure(spark: SparkSession, n: Long, hot: Long): String = {
+    val cpus = spark.sparkContext.defaultParallelism
     val hotProbes = 6000L
     val threshold = 8 // tol 0: 1 mask/side — collision volume is pure bucket product
     require(n > BandJoin.AutoSaltMinRows,
       s"corpus $n must exceed the auto-salt floor ${BandJoin.AutoSaltMinRows}")
-    // 2.6M rows × 16 chunks explode to ~42M probe-side build rows: at
-    // `cpus` shuffle partitions each SHJ task would build a ~2.6M-row
-    // hash map and OOM the execution pool — 64 partitions keeps builds
-    // ~650k rows (the shuffle-partition sizing rule SCALING.md states)
-    val spark = Pipeline.session(s"local[$cpus]",
-      shufflePartitions = math.max(cpus, 64))
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // Deterministic corpus:
@@ -107,11 +106,9 @@ object SaltBench {
 
     def run(saltFactor: Int): (Double, Long, Set[(Long, Long, Int)]) = {
       durations.clear()
-      val t0 = System.nanoTime()
-      val edges = BandJoin.fuzzyEdges(sig, threshold, saltFactor = saltFactor,
-          nConfHint = n).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (edges, wall) = Harness.timed(BandJoin.fuzzyEdges(sig, threshold,
+          saltFactor = saltFactor, nConfHint = n).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet)
       val maxTask = durations.asScala.foldLeft(0L)((a, b) =>
         math.max(a, b.longValue))
       (wall, maxTask, edges)
@@ -144,9 +141,14 @@ object SaltBench {
       .select("comp").distinct().count()
     require(plantedComps == 200, s"planted clusters merged/split: $plantedComps")
 
-    println(f"""SALTBENCH {"rows":$n,"hot_bucket":$hot,"hot_probes":$hotProbes,"threshold":$threshold,"derived_salt":$derived,"edges":${edgesS.size},"wall_unsalted_sec":$wallU%.2f,"wall_salted_sec":$wallS%.2f,"max_task_unsalted_sec":${maxTaskU / 1e3}%.2f,"max_task_salted_sec":${maxTaskS / 1e3}%.2f,"cpus":$cpus}""")
+    val line = Harness.emit("SALTBENCH", "rows" -> n, "hot_bucket" -> hot,
+      "hot_probes" -> hotProbes, "threshold" -> threshold, "derived_salt" -> derived,
+      "edges" -> edgesS.size, "wall_unsalted_sec" -> Harness.dec(wallU, 2),
+      "wall_salted_sec" -> Harness.dec(wallS, 2),
+      "max_task_unsalted_sec" -> Harness.dec(maxTaskU / 1e3, 2),
+      "max_task_salted_sec" -> Harness.dec(maxTaskS / 1e3, 2), "cpus" -> cpus)
     require(maxTaskS.toDouble * 1.5 <= maxTaskU.toDouble,
       s"salting did not collapse the straggler: max task $maxTaskU ms -> $maxTaskS ms")
-    spark.stop()
+    line
   }
 }

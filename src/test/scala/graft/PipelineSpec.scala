@@ -281,4 +281,22 @@ class PipelineSpec extends AnyFunSuite {
       assert(totals(st) == n, s"stage $st: partition sum $n != total ${totals(st)}")
     }
   }
+
+  test("comparisons is the edges stage's lineage count, and a resumed run adds none") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-comparisons").toString
+    val images = rows.take(40)
+      .map(r => (r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, r.phash))
+      .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    def comparisons() = spark.read.parquet(s"$dir/work/_metrics")
+      .where($"metric" === "comparisons").select("value").as[Double].collect().toSeq
+    Pipeline.run(spark, images, s"$dir/work", Threshold).count()
+    val edgeRows = spark.read.parquet(s"$dir/work/_lineage")
+      .where($"stage" === "edges").select("rows").as[Long].collect().toSeq
+    assert(edgeRows.size == 1 && edgeRows.head > 0, s"edges lineage rows: $edgeRows")
+    assert(edgeRows.head == spark.read.parquet(s"$dir/work/edges").count())
+    assert(comparisons() == Seq(edgeRows.head.toDouble))
+    Pipeline.run(spark, images, s"$dir/work", Threshold).count()
+    assert(comparisons() == Seq(edgeRows.head.toDouble), "resumed run appended comparisons")
+  }
 }
