@@ -216,18 +216,24 @@ object CorpusState {
  *
  * Work is delta-proportional in BOTH compute and writes:
  *   1. kernel only on delta rows (ords offset past the corpus max)
- *   2. delta ↔ corpus candidate edges via the persisted range-partitioned
+ *   2. every delta edge from ONE probe of the persisted range-partitioned
  *      [[BandIndex]] (probe-side dihedral + multi-probe expansion on the
- *      small delta only). One-directional probing is EXACT: each dihedral
- *      variant hash is a fixed bit-isometry T_g of the original
- *      (pdqhash.rs:71-151 — permutation + XOR), so
- *      min_g dist(T_g(a), b) = min_g dist(a, T_g(b)) by group closure.
- *   3. delta-internal edges via the ordinary self band join
- *   4. ONLY the existing components touched by a cross edge re-enter
+ *      small delta only); the delta's own radius-0 keys join the index
+ *      side, so delta-internal pairs are probed in both directions like
+ *      the batch join's. Delta → corpus pairs are probed in ONE direction
+ *      only (delta variants vs stored corpus hashes), which is not exact:
+ *      PDQ variants are re-binarised from sign-flipped DCT coefficients
+ *      against their own median (Pdq.bitRows), not a bit-isometry of the
+ *      hash, so dist(v(a), b) ≠ dist(a, v(b)) in general — a pair
+ *      only the corpus side's variants would find is missed (BandJoin's
+ *      symmetric-probing note). Measured on a 1,000-base Synth corpus
+ *      with a one-third delta: 0 of 2,385 batch corpus × delta edges
+ *      missed, identical components (CHANGES.md)
+ *   3. ONLY the existing components touched by a delta edge re-enter
  *      connected components (as comp→member star edges), so merged labels
  *      stay min-ord-consistent with a full batch run while CC sees an
  *      affected-subgraph-sized input, not the corpus
- *   5. the state commit writes the delta signatures + the re-labeled
+ *   4. the state commit writes the delta signatures + the re-labeled
  *      patch for affected components ([[CorpusState]] merge-on-read),
  *      and the delta's band keys append to the index as an atomic
  *      segment — nothing O(corpus) is rewritten
@@ -358,10 +364,13 @@ object Incremental {
       s"corpus index at $indexPath was built for " +
         s"${BandIndex.algoOf(spark, indexPath)} — cannot probe as ${layout.algo}")
 
-    val maxOrd = {
-      val r = corpusSig.agg(max("ord")).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0) // empty corpus: start ords at 0
+    // max ord (where delta ords start; -1 on an empty corpus) and the
+    // has_pdq max ord (the audit ceiling below), from one scan
+    def maxOrds(sig: DataFrame): (Long, Long) = {
+      val r = sig.agg(max("ord"), max(when(col("has_pdq"), col("ord")))).head()
+      (if (r.isNullAt(0)) -1L else r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
     }
+    val (maxOrd, baseHashMax) = maxOrds(corpusSig)
 
     // index/signature consistency audit against the CURRENT state version
     // (a resumed run has already advanced the state + index past its own
@@ -373,10 +382,7 @@ object Incremental {
     // hash-less rows, so a corpus whose highest ord is a decode failure
     // would otherwise read as "index lagging" forever and append an empty
     // seg_repair_* every run
-    val curMaxOrd = {
-      val r = curSig.filter(col("has_pdq")).agg(max("ord")).head()
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
+    val curMaxOrd = if (curVer == baseVer) baseHashMax else maxOrds(curSig)._2
     val idxMax = BandIndex.maxOrd(spark, indexPath)
     require(idxMax <= curMaxOrd,
       s"band index max ord $idxMax exceeds signatures max ord $curMaxOrd — " +
@@ -389,15 +395,15 @@ object Incremental {
     val (deltaSig, _) = ckpt.stage("delta_signatures")(
       Pipeline.signatures(spark, deltaImages, maxOrd + 1, known = Some(corpusSig)))
 
-    val (cross, _) = ckpt.stage("delta_cross_edges")({
+    // every edge a delta row has — to the corpus AND inside the delta —
+    // comes from the one probe; the stage keeps its historical name
+    val (deltaEdges, _) = ckpt.stage("delta_cross_edges")({
       val probed = BandIndex.probe(spark, indexPath, deltaSig, thr)
-        .select(least(col("a"), col("b")).as("a"),
-          greatest(col("a"), col("b")).as("b"), col("dist"))
       if (!contentStar) probed
       else {
-        // delta ↔ corpus byte-identity: link each delta row to the MIN
-        // corpus ord holding its content hash (star — corpus rows with
-        // that hash are already connected among themselves by the prior
+        // byte identity: link each delta row to the MIN ord holding its
+        // content hash in corpus ∪ delta (star — corpus rows with that
+        // hash are already connected among themselves by the prior
         // contentStar runs, enforced by the _meta_content_star stamp).
         // The corpus scan is semi-filtered by a broadcast of the delta's
         // DISTINCT hash set when small — gated on the distinct count
@@ -412,31 +418,30 @@ object Incremental {
             corpusSide0.join(broadcast(deltaHashes), Seq("content_hash"),
               "left_semi")
           else corpusSide0
-        val hubs = corpusSide.groupBy("content_hash").agg(min("ord").as("c_ord"))
-        val contentCross = deltaSig.select(col("content_hash"), col("ord"))
-          .join(hubs, "content_hash")
-          .select(least(col("ord"), col("c_ord")).as("a"),
-            greatest(col("ord"), col("c_ord")).as("b"), lit(0).as("dist"))
-        probed.unionByName(contentCross).groupBy("a", "b")
+        val deltaSide = deltaSig.select(col("content_hash"), col("ord"))
+        val hubs = corpusSide.unionByName(deltaSide)
+          .groupBy("content_hash").agg(min("ord").as("hub"))
+        val content = deltaSide.join(hubs, "content_hash")
+          .where(col("ord") =!= col("hub"))
+          .select(least(col("ord"), col("hub")).as("a"),
+            greatest(col("ord"), col("hub")).as("b"), lit(0).as("dist"))
+        probed.unionByName(content).groupBy("a", "b")
           .agg(min("dist").as("dist"))
       }
     })
 
-    val (internal, _) = ckpt.stage("delta_internal_edges")(
-      Pipeline.selfEdges(deltaSig, layout, thr, contentStar))
-
     val oldComps = CorpusState.readComponents(spark, corpusWork, baseVer)
 
-    // delta-proportional CC input: only components that share a cross
-    // edge with the delta are re-labeled; everything else keeps its rows
-    val touched = cross.select(col("a").as("id"))
-      .unionByName(cross.select(col("b").as("id"))).distinct()
+    // delta-proportional CC input: only components that share an edge
+    // with the delta are re-labeled; everything else keeps its rows
+    val touched = deltaEdges.select(col("a").as("id"))
+      .unionByName(deltaEdges.select(col("b").as("id"))).distinct()
     val affectedComps = oldComps.join(touched, Seq("id")).select("comp").distinct()
     val affectedOld = oldComps.join(affectedComps, Seq("comp"), "left_semi")
     val starEdges = affectedOld.where(col("id") =!= col("comp"))
       .select(col("comp").as("a"), col("id").as("b"), lit(0).as("dist"))
 
-    val allEdges = cross.unionByName(internal).unionByName(starEdges)
+    val allEdges = deltaEdges.unionByName(starEdges)
     // the component PATCH: new labels for delta rows + affected old rows
     val (patch, _) = ckpt.stage("components")(
       ConnectedComponents.run(spark, allEdges))

@@ -64,19 +64,6 @@ object Pipeline {
       .withColumn("ord", monotonically_increasing_id() + lit(ordFrom))
   }
 
-  /** Self edges of a signature frame: the layout's band join plus, with
-    * `contentStar`, star edges on byte-identical `content_hash` — one
-    * construction for the batch run and the delta-internal join, so
-    * chained-equals-batch can't drift between them. `nConfHint` is the
-    * confident-row count when the caller already knows it. */
-  private[graft] def selfEdges(sig: DataFrame, layout: HashLayout, threshold: Int,
-                               contentStar: Boolean, nConfHint: Long = -1): DataFrame = {
-    val hashEdges = BandJoin.edges(sig, threshold, nConfHint = nConfHint, layout = layout)
-    if (!contentStar) hashEdges
-    else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
-      .groupBy("a", "b").agg(min("dist").as("dist"))
-  }
-
   /** Group assembly over components. With a registry, groups get
     * cross-run-stable UUIDs (S11/J7: a group keeps the UUID any member's
     * hash already carries, so a group that absorbs delta rows keeps its
@@ -155,8 +142,12 @@ object Pipeline {
       .map(_.toLong)
       .getOrElse(sig.filter(col("has_pdq") && !col("low_conf")).count())
 
-    val (edges, edgesHit) = ckpt.stage("edges")(
-      selfEdges(sig, layout, thr, contentStar, nConfHint = confidentRows))
+    val (edges, edgesHit) = ckpt.stage("edges")({
+      val hashEdges = BandJoin.edges(sig, thr, nConfHint = confidentRows, layout = layout)
+      if (!contentStar) hashEdges
+      else hashEdges.unionByName(BandJoin.contentStarEdges(sig))
+        .groupBy("a", "b").agg(min("dist").as("dist"))
+    })
     // the stage's own lineage count: no second job over the committed rows
     if (!edgesHit) ckpt.appendMetric("comparisons", ckpt.stagedRows("edges").toDouble)
 

@@ -80,14 +80,19 @@ object ConnectedComponents {
   def runWithStats(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
                    driverPathMaxEdges: Long = DriverPathMaxEdges)
       : (DataFrame, Int, Long) = {
-    var e = edges.select(col("a").as("src"), col("b").as("dst"))
+    import spark.implicits._
+    val distinctEdges = edges.select(col("a").as("src"), col("b").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint()
-    val nEdges = e.count()
-    if (nEdges <= driverPathMaxEdges)
-      return (driverUnionFind(spark, e), 0, nEdges)
+    // one job decides the path AND returns the driver path's edges: one
+    // row past the cap means the iterative path
+    val head = (if (driverPathMaxEdges >= Int.MaxValue) distinctEdges
+      else distinctEdges.limit(driverPathMaxEdges.toInt + 1)).as[(Long, Long)].collect()
+    if (head.length <= driverPathMaxEdges)
+      return (driverUnionFind(spark, head), 0, head.length.toLong)
+    var e = distinctEdges.localCheckpoint()
     var prev = checksum(e)
+    val nEdges = prev._1
     var i = 0
     var converged = false
     while (i < maxIter && !converged) {
@@ -107,9 +112,8 @@ object ConnectedComponents {
 
   /** Exact union-find with path halving (scanner.rs:1781-1807 port) over
     * collected edges; comp canonicalized to the min member. */
-  private def driverUnionFind(spark: SparkSession, e: DataFrame): DataFrame = {
+  private def driverUnionFind(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
     import spark.implicits._
-    val pairs = e.select(col("src"), col("dst")).as[(Long, Long)].collect()
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var root = x

@@ -34,6 +34,8 @@ object GroupRegistry {
   /** Auto-compact once this many registry segments accumulate. */
   final val CompactAfter = 32
 
+  private val MergedSegment = "seg_d(\\d+)".r
+
   private def fsOf(spark: SparkSession, path: String) = Store.fs(spark, path)
 
   private def segments(spark: SparkSession, path: String): Seq[String] = {
@@ -94,7 +96,13 @@ object GroupRegistry {
     // per run would still grow the count toward CompactAfter and trigger
     // periodic full-registry compactions with no data change
     if (delta.isEmpty) return
-    val segName = f"seg_d${segments(spark, path).size}%06d"
+    // one past the highest existing index, never the segment count: a
+    // compaction that crashed mid-delete leaves e.g. [seg_d3, seg_d4,
+    // seg_zc…], where the count would name the existing seg_d3 and
+    // writeSegment would keep the old segment and drop these rows
+    val next = segments(spark, path).map(new Path(_).getName)
+      .collect { case MergedSegment(i) => i.toInt + 1 }.maxOption.getOrElse(0)
+    val segName = f"seg_d$next%06d"
     writeSegment(delta, path, segName)
     if (segments(spark, path).size > CompactAfter) compact(spark, path)
   }

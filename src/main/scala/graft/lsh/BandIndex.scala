@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
  * per image are written once as a **range-partitioned, sorted** table;
  * a delta of new images expands its probe keys (8 dihedral variants ×
  * chunks × radius-tol masks — the reference's probe-side scheme,
- * scanner.rs:1729-1767) and equi-joins the index.
+ * scanner.rs:1729-1767) and equi-joins the index plus its own radius-0
+ * keys, so one probe finds every edge the delta brings.
  *
  * Why repartitionByRange on (band_idx, band_val) + sortWithinPartitions:
  * every parquet file then covers a tight contiguous key range, so file /
@@ -134,12 +135,11 @@ object BandIndex {
   private def bandValTyped(c: Column, chunkBits: Int) =
     if (chunkBits <= 16) c.cast("int") else c
 
-  /** Radius-0 band rows carrying the layout's hash columns beside each
-    * key (what the in-join Hamming verify needs). */
-  private def bandRows(sig: DataFrame, chunkBits: Int, algo: String): DataFrame = {
+  /** Radius-0 band rows of hash-carrying `rows`, with the layout's hash
+    * columns beside each key (what the in-join Hamming verify needs). */
+  private def bandRows(rows: DataFrame, chunkBits: Int, algo: String): DataFrame = {
     val hs = HashLayout.of(algo).hashCols.map(col)
-    sig.filter(col("has_pdq"))
-      .select(col("ord") +: col("low_conf") +: hs: _*)
+    rows.select(col("ord") +: col("low_conf") +: hs: _*)
       .select(col("*"),
         posexplode(BandJoin.chunksArrayB(hs, chunkBits))
           .as(Seq("band_idx", "band_val")))
@@ -191,7 +191,7 @@ object BandIndex {
       if (r.isNullAt(0)) -1L else r.getLong(0)
     }
     val staging = new Path(path, s".tmp_$segName")
-    bandRows(sig, chunkBitsOf(spark, path), algoOf(spark, path))
+    bandRows(sig.filter(col("has_pdq")), chunkBitsOf(spark, path), algoOf(spark, path))
       .repartitionByRange(numPartitions, col("band_idx"), col("band_val"))
       .sortWithinPartitions("band_idx", "band_val")
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
@@ -342,13 +342,22 @@ object BandIndex {
   }
 
   /**
-   * Probe the persisted index with a delta: verified duplicate edges
-   * (a = delta ord, b = index ord, dist), per-side low-confidence limits
-   * applied. The delta expands probe keys at the full chunk tolerance
-   * (pigeonhole over the chunks, exhaustive recall ≤ 63); low-confidence
-   * delta rows expand NO masks (exact-only per F2, so they pay one bucket
-   * per chunk, not the whole radius ball — scanner.rs:1579-1594 probes
-   * low-quality hashes at limit 0).
+   * Probe the persisted index with a delta: every verified duplicate edge
+   * a delta row has in corpus ∪ delta (a < b, min dist per pair),
+   * per-side low-confidence limits applied. Delta ords must be disjoint
+   * from the index's (a delta's ords start past the corpus max). The delta
+   * expands probe keys at the full chunk tolerance (pigeonhole over the
+   * chunks, exhaustive recall ≤ 63); low-confidence delta rows expand NO
+   * masks (exact-only per F2, so they pay one bucket per chunk, not the
+   * whole radius ball — scanner.rs:1579-1594 probes low-quality hashes at
+   * limit 0).
+   *
+   * The delta's own radius-0 rows join the index side, so a pair inside
+   * the delta is probed in both directions — each row sits on both sides
+   * — which is the batch join's symmetric probing; no second band join
+   * over the delta is needed. Delta rows sharing hash, variants and
+   * confidence collapse to one representative first ([[BandJoin.collapse]]),
+   * so k byte-identical copies cost one probe, not k² collisions.
    *
    * Index-side cost: when the probed key set is provably ≤
    * [[MaxKeyFilterRows]] AND below half the band-key space (so pruning
@@ -360,7 +369,8 @@ object BandIndex {
    */
   def probe(spark: SparkSession, path: String, deltaSig: DataFrame,
             threshold: Int): DataFrame = {
-    val layout = HashLayout.of(algoOf(spark, path))
+    val algo = algoOf(spark, path)
+    val layout = HashLayout.of(algo)
     val chunkBits = chunkBitsOf(spark, path)
     val numChunks = layout.numChunks(chunkBits)
     val tol = BandJoin.chunkTolerance(layout, threshold, chunkBits)
@@ -376,12 +386,14 @@ object BandIndex {
 
     val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
     val vCols = vNames.map(col)
-    val idx = read(spark, path)
-      .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
+    def indexSide(rows: DataFrame): DataFrame =
+      rows.select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
         col("low_conf").as("c_low") +:
         layout.hashCols.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
+    val idx = indexSide(read(spark, path))
 
-    val delta = deltaSig.filter(col("has_pdq"))
+    val (delta, mem) = BandJoin.collapse(deltaSig.filter(col("has_pdq")),
+      (layout.hashCols :+ layout.variantsCol :+ "low_conf").map(col))
     val prbBase = delta
       .select(col("ord"), col("low_conf").as("q_low"),
         explode(col(layout.variantsCol)).as("v"))
@@ -432,12 +444,16 @@ object BandIndex {
       }
 
     // per-side limit: either side low-confidence ⇒ exact only (F2)
-    prb.hint("shuffle_hash").join(idxSide, Seq("band_idx", "band_val"))
+    val repEdges = prb.hint("shuffle_hash")
+      .join(idxSide.unionByName(indexSide(bandRows(delta, chunkBits, algo))),
+        Seq("band_idx", "band_val"))
       .where(col("q_ord") =!= col("c_ord"))
       .withColumn("dist", BandJoin.hammingCols(vCols, cNames.map(col)))
       .where(col("dist") <=
         when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
-      .groupBy(col("q_ord").as("a"), col("c_ord").as("b"))
+      .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
+        greatest(col("q_ord"), col("c_ord")).as("rb"))
       .agg(min("dist").as("dist"))
+    BandJoin.expandReps(repEdges, mem)
   }
 }

@@ -361,24 +361,7 @@ object BandJoin {
                  chunkBits: Int = 0, nConfHint: Long = -1,
                  layout: HashLayout = HashLayout.Pdq): DataFrame = {
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
-    // Rep collapse (guide §2.3 "shuffle fewer bytes" / §8 "decide with
-    // small rows"): whether two rows collide in the band join, and the
-    // verified distance of the pair, depend ONLY on (hash, variants) —
-    // never on ord. Rows sharing them (lossless transcodes, exact copies,
-    // re-containered pixels) are collapsed to one REPRESENTATIVE before
-    // the ×(numChunks·masks) band explode; collision volume falls with the
-    // SQUARE of the distinct ratio. The edge set is then rebuilt exactly:
-    // intra-cluster pairs are all C(k,2) pairs at dist 0 (precondition,
-    // true of every producer here: the variants hold the hash itself —
-    // PDQ's identity variant, PHash.dihedral(h)(0) == h); cross-cluster
-    // member pairs inherit their rep pair's dist because dist is
-    // hash-determined.
-    val keyCols = (layout.hashCols :+ layout.variantsCol).map(col)
-    val members = conf.select(col("ord") +: keyCols: _*)
-      .withColumn("rep", min("ord").over(Window.partitionBy(keyCols: _*)))
-    val mem = members.select(col("rep"), col("ord"))
-    val reps = members.where(col("ord") === col("rep"))
-      .select(col("ord") +: keyCols: _*)
+    val (reps, mem) = collapse(conf, (layout.hashCols :+ layout.variantsCol).map(col))
     // ONE shared count feeds both auto knobs (width + salt), resolved over
     // the ORIGINAL conf rows so the auto width is the pre-collapse one; a
     // caller that pins both, or passes its already-known count (Pipeline's
@@ -395,18 +378,44 @@ object BandJoin {
       .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
         greatest(col("q_ord"), col("c_ord")).as("rb"))
       .agg(min("dist").as("dist"))
+    expandReps(repEdges, mem)
+  }
 
-    // all-pairs within an identical-(hash, variants) cluster, dist 0
-    val intra = mem.select(col("rep"), col("ord").as("a"))
-      .join(mem.select(col("rep"), col("ord").as("b")), "rep")
+  /** Rep collapse (guide §2.3 "shuffle fewer bytes" / §8 "decide with
+    * small rows"): whether two rows collide in a band join, and the
+    * verified distance of the pair, depend ONLY on `keys` (the hash and its
+    * variants) — never on ord. Rows sharing them (lossless transcodes,
+    * exact copies, re-containered pixels) collapse to one REPRESENTATIVE,
+    * the min ord, before the ×(numChunks·masks) band explode; collision
+    * volume falls with the SQUARE of the distinct ratio. Returns the reps
+    * (ord + `keys`) and the (rep, ord) membership of every row, from which
+    * [[expandReps]] rebuilds the member edges. */
+  private[lsh] def collapse(rows: DataFrame, keys: Seq[Column]): (DataFrame, DataFrame) = {
+    val members = rows.select(col("ord") +: keys: _*)
+      .withColumn("rep", min("ord").over(Window.partitionBy(keys: _*)))
+    (members.where(col("ord") === col("rep")).drop("rep"),
+      members.select(col("rep"), col("ord")))
+  }
+
+  /** Member edges (a < b) of the rep-level edges (ra, rb, dist) over the
+    * membership `mem` of [[collapse]]: intra-cluster pairs are all C(k,2)
+    * pairs at dist 0 (precondition, true of every producer here: the
+    * variants hold the hash itself — PDQ's identity variant,
+    * PHash.dihedral(h)(0) == h); cross-cluster member pairs inherit their
+    * rep pair's dist because dist is hash-determined. An endpoint that is
+    * no rep in `mem` (a persisted-index row beside a collapsed delta)
+    * stands for itself. */
+  private[lsh] def expandReps(repEdges: DataFrame, mem: DataFrame): DataFrame = {
+    def side(rep: String, ord: String) = mem.select(col("rep").as(rep), col("ord").as(ord))
+    val intra = side("rep", "a").join(side("rep", "b"), "rep")
       .where(col("a") < col("b"))
       .select(col("a"), col("b"), lit(0).as("dist"))
     // rep-level edges expanded to member pairs (linear joins on tiny keys)
+    val (oa, ob) = (coalesce(col("oa"), col("ra")), coalesce(col("ob"), col("rb")))
     val cross = repEdges
-      .join(mem.select(col("rep").as("ra"), col("ord").as("oa")), "ra")
-      .join(mem.select(col("rep").as("rb"), col("ord").as("ob")), "rb")
-      .select(least(col("oa"), col("ob")).as("a"),
-        greatest(col("oa"), col("ob")).as("b"), col("dist"))
+      .join(side("ra", "oa"), Seq("ra"), "left")
+      .join(side("rb", "ob"), Seq("rb"), "left")
+      .select(least(oa, ob).as("a"), greatest(oa, ob).as("b"), col("dist"))
     cross.unionByName(intra)
   }
 
@@ -515,10 +524,9 @@ object BandJoin {
   }
 
   /** Byte-identity star edges (hub = min ord per content_hash): linear
-    * edge count, same components as pairwise. Shared by the batch
-    * pipeline's contentStar flag and the incremental delta-internal star
-    * — one construction, so the chained-equals-batch invariant can't
-    * drift between copies. */
+    * edge count, same components as pairwise. The batch pipeline's
+    * contentStar edges; an incremental delta links each of its rows to
+    * the same hub over corpus ∪ delta in [[graft.Incremental]]. */
   def contentStarEdges(sig: DataFrame): DataFrame = {
     val hubs = sig.groupBy("content_hash").agg(min("ord").as("hub"))
     sig.join(hubs, Seq("content_hash"))

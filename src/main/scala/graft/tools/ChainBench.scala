@@ -56,7 +56,8 @@ object ChainBench {
     val layers = new java.io.File(corpusWork).listFiles()
       .map(_.getName).count(_.startsWith("state_v"))
     // flatness: mean of the last 3 deltas vs the first 3 — growth with
-    // version count would show here as a rising tail
+    // version count would show here as a rising tail. Below 6 deltas the
+    // two windows share deltas and the ratio means nothing: null
     val head3 = times.take(3).sum / 3
     val tail3 = times.takeRight(3).sum / 3
     val perImgFull = fullSec / nCorpusImgs
@@ -64,7 +65,7 @@ object ChainBench {
     Harness.emit("CHAINBENCH", "corpus_bases" -> nCorpus, "delta_bases" -> nDelta,
       "k" -> k, "per_delta_sec" -> times.map(Harness.dec(_, 1)),
       "head3_avg" -> Harness.dec(head3, 1), "tail3_avg" -> Harness.dec(tail3, 1),
-      "tail_over_head" -> Harness.dec(tail3 / head3, 2), "versions" -> ver,
+      "tail_over_head" -> Option.when(k >= 6)(Harness.dec(tail3 / head3, 2)), "versions" -> ver,
       "state_dirs_on_disk" -> layers, "full_sec" -> Harness.dec(fullSec, 1),
       "delta_ms_per_img" -> Harness.dec(perImgDelta * 1000, 2),
       "delta_vs_full_per_img" -> Harness.dec(perImgDelta / perImgFull, 2),

@@ -89,6 +89,7 @@ object Harness {
     case d: BigDecimal => d.bigDecimal.toPlainString
     case Obj(fs @ _*) => fs.map { case (k, x) => s""""$k":${render(x)}""" }.mkString("{", ",", "}")
     case xs: Seq[_] => xs.map(render).mkString("[", ",", "]")
+    case o: Option[_] => o.fold("null")(render)
     case x => x.toString
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import graft.kernel.{Pdq, SignatureKernel}
 import graft.lsh.BandIndex
-import graft.model.ImageRow
+import graft.model.{ImageRow, Signature}
 import graft.synth.Synth
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,8 +10,9 @@ import java.security.MessageDigest
 
 /** Persisted range-partitioned band index: probing a delta against the
   * corpus index must find exactly the pairs the full verification finds
-  * (reference probe semantics: query-side dihedral variants vs stored
-  * originals at the per-side low-quality limit). */
+  * over corpus ∪ delta (reference probe semantics: query-side dihedral
+  * variants vs stored originals at the per-side low-quality limit; a pair
+  * inside the delta is probed both ways). */
 class BandIndexSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val Threshold = Pipeline.DefaultThreshold
@@ -27,25 +28,53 @@ class BandIndexSpec extends AnyFunSuite {
   private lazy val corpus = sigs.filter(_.ord % 3 != 0)
   private lazy val delta = sigs.filter(_.ord % 3 == 0)
 
+  private def pdqDist(d: Signature, c: Signature): Int =
+    d.variants.map(v => Pdq.hammingLongs(v, Array(c.h0, c.h1, c.h2, c.h3))).min
+
+  /** The probe's contract by brute force: every pair a delta row has in
+    * corpus ∪ delta within the per-side limit, as (a < b) at the min dist
+    * over the directions it is probed in. */
+  private def oracle(thr: Int, dist: (Signature, Signature) => Int,
+                     delta: Seq[Signature] = delta): Map[(Long, Long), Int] =
+    (for {
+      d <- delta if d.has_pdq
+      c <- corpus ++ delta if c.has_pdq && c.ord != d.ord
+      limit = if (d.low_conf || c.low_conf) 0 else thr
+      dc = dist(d, c)
+      if dc <= limit
+    } yield (math.min(d.ord, c.ord), math.max(d.ord, c.ord)) -> dc)
+      .groupMapReduce(_._1)(_._2)(math.min)
+
   test("index probe == brute-force per-side-limit verification") {
     import spark.implicits._
+    // plus byte-identical copies of a confident and a low-confidence delta
+    // row: the probe collapses each set to one representative and must
+    // rebuild every member pair
+    val src = Seq(delta.find(d => d.has_pdq && !d.low_conf),
+      delta.find(d => d.has_pdq && d.low_conf)).flatten
+    assert(src.size == 2, "fixture lacks a confident or a low-confidence delta row")
+    val copies = for ((d, i) <- src.zipWithIndex; k <- 1 to 3)
+      yield d.copy(image_id = s"${d.image_id}-copy$k", ord = 1000L + 10 * i + k)
+    val withCopies = delta ++ copies
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex").toString
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index")
-    val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), Threshold)
+    val got = BandIndex.probe(spark, s"$dir/index", withCopies.toDS().toDF(), Threshold)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
 
-    val want = (for {
-      d <- delta if d.has_pdq
-      c <- corpus if c.has_pdq
-      limit = if (d.low_conf || c.low_conf) 0 else Threshold
-      dist = d.variants.map(v => Pdq.hammingLongs(v, Array(c.h0, c.h1, c.h2, c.h3))).min
-      if dist <= limit
-    } yield (d.ord, c.ord) -> dist).toMap
+    val want = oracle(Threshold, pdqDist, withCopies)
 
     assert(got.keySet == want.keySet,
       s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
     want.foreach { case (k, v) => assert(got(k) == v, s"pair $k dist ${got(k)} != $v") }
-    assert(want.nonEmpty, "oracle found no cross pairs — split broken")
+    val deltaOrds = withCopies.map(_.ord).toSet
+    assert(want.keySet.exists(p => !deltaOrds(p._1) || !deltaOrds(p._2)),
+      "oracle found no cross pairs — split broken")
+    assert(want.keySet.exists(p => deltaOrds(p._1) && deltaOrds(p._2) &&
+      p._2 < 1000L), "oracle found no pairs inside the delta")
+    src.foreach { d =>
+      val set = d.ord +: copies.filter(_.image_id.startsWith(s"${d.image_id}-copy")).map(_.ord)
+      for (x <- set; y <- set if x < y) assert(got.get((x, y)).contains(0), s"copy pair ($x, $y)")
+    }
   }
 
   test("append extends the index; re-probe finds pairs in the appended part") {
@@ -175,13 +204,8 @@ class BandIndexSpec extends AnyFunSuite {
     val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), thr)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
 
-    val want = (for {
-      d <- delta if d.has_pdq
-      c <- corpus if c.has_pdq
-      limit = if (d.low_conf || c.low_conf) 0 else thr
-      dist = d.phash_variants.map(v => java.lang.Long.bitCount(v ^ c.phash64)).min
-      if dist <= limit
-    } yield (d.ord, c.ord) -> dist).toMap
+    val want = oracle(thr, (d, c) =>
+      d.phash_variants.map(v => java.lang.Long.bitCount(v ^ c.phash64)).min)
 
     assert(got.keySet == want.keySet,
       s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
@@ -207,13 +231,7 @@ class BandIndexSpec extends AnyFunSuite {
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index")
     val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), thr)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val want = (for {
-      d <- delta if d.has_pdq
-      c <- corpus if c.has_pdq
-      limit = if (d.low_conf || c.low_conf) 0 else thr
-      dist = d.variants.map(v => Pdq.hammingLongs(v, Array(c.h0, c.h1, c.h2, c.h3))).min
-      if dist <= limit
-    } yield (d.ord, c.ord) -> dist).toMap
+    val want = oracle(thr, pdqDist)
     assert(got == want,
       s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
     assert(want.nonEmpty, "no tol-0 pairs — fixture lacks exact/near dups")

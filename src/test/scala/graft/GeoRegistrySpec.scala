@@ -205,4 +205,25 @@ class GeoRegistrySpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "u-a", 2L -> "u-b", 3L -> "u-c"), got)
   }
+
+  test("merge after a compaction that crashed mid-delete keeps the new rows") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-reg-crash").toString
+    def merge(h: Long, uuid: String): Unit = GroupRegistry.merge(spark, dir,
+      Seq((h, 0L, 0L, 0L, uuid)).toDF("h0", "h1", "h2", "h3", "group_uuid"))
+    (0 until 5).foreach(i => merge(i.toLong, s"u-$i"))
+    // compact deletes its inputs in name order; a crash after seg_d000000..2
+    // leaves [seg_d000003, seg_d000004, seg_zc…]
+    val keep = Seq("seg_d000003", "seg_d000004")
+    val aside = java.nio.file.Files.createTempDirectory("graft-reg-crash-aside")
+    keep.foreach(n => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/$n"), aside.resolve(n).toFile))
+    GroupRegistry.compact(spark, dir)
+    keep.foreach(n => org.apache.commons.io.FileUtils.copyDirectory(
+      aside.resolve(n).toFile, new java.io.File(s"$dir/$n")))
+    merge(5L, "u-5")
+    val got = GroupRegistry.read(spark, dir).select("h0", "group_uuid").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == (0 until 6).map(i => i.toLong -> s"u-$i").toMap, got)
+  }
 }

@@ -45,6 +45,11 @@ class IncrementalSpec extends AnyFunSuite {
     assert(wantGroups.exists(g =>
       g.exists(deltaIds) && g.exists(id => !deltaIds(id))),
       "no group straddles the boundary — split too coarse for this test")
+    // one probe finds every delta edge: no second band join stage
+    val stages = spark.read.parquet(s"$base/delta-work/_lineage")
+      .select("stage").collect().map(_.getString(0)).toSet
+    assert(stages.contains("delta_cross_edges") && !stages.contains("delta_internal_edges"),
+      s"delta lineage stages: $stages")
   }
 
   test("registry UUIDs survive the incremental merge (S11/J7 across runs)") {
@@ -319,9 +324,12 @@ class IncrementalSpec extends AnyFunSuite {
         .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash"))
     Pipeline.run(spark, corpusDf, s"$base/corpus-work", Threshold,
       contentStar = true)
+    // plus an undecodable twin pair that exists only in the delta
+    val twin = Array[Byte](0x55, 0x66, 0x77)
     val deltaDf = toDF(rows.slice(6, 10)).unionByName(
       Seq(brokenRow("zzz_corrupt_v2.jpg", corrupt),
-        brokenRow("zzz_other_corrupt.jpg", Array[Byte](1, 2, 3, 4)))
+        brokenRow("zzz_other_corrupt.jpg", Array[Byte](1, 2, 3, 4)),
+        brokenRow("zzz_twin_a.jpg", twin), brokenRow("zzz_twin_b.jpg", twin))
         .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash"))
     val inc = Incremental.run(spark, deltaDf, s"$base/corpus-work",
       s"$base/delta-work", Threshold, contentStar = true)
@@ -336,6 +344,8 @@ class IncrementalSpec extends AnyFunSuite {
       "byte-identical undecodable twins did not group across the boundary")
     assert(!groupsOf(inc).exists(_.contains("zzz_other_corrupt.jpg")),
       "a unique corrupt file must stay ungrouped")
+    assert(groupsOf(inc).contains(Set("zzz_twin_a.jpg", "zzz_twin_b.jpg")),
+      "byte-identical undecodable twins inside the delta did not group")
   }
 
   test("contentStar flag mismatch across the chain is refused (write-once stamp)") {

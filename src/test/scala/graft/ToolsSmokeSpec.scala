@@ -53,6 +53,8 @@ class ToolsSmokeSpec extends AnyFunSuite {
       "tail_over_head", "versions", "state_dirs_on_disk", "full_sec", "delta_ms_per_img",
       "delta_vs_full_per_img", "full_report_delta_sec", "cpus")
     assert(f("versions") == "4")
+    // 3 deltas: the first-3 and last-3 windows are the same deltas
+    assert(f("tail_over_head") == "null")
   }
 
   test("ProbeBench over a harness corpus") {
