@@ -131,9 +131,8 @@ object CorpusState {
   /** Latest version ≤ v carrying a compaction snapshot, if any. */
   private def latestSnapshot(spark: SparkSession, corpusWork: String,
                              v: Int): Option[Int] =
-    (v to 1 by -1).find(k =>
-      exists(spark, s"${snapSigPath(corpusWork, k)}/_SUCCESS") &&
-        exists(spark, s"${snapCompPath(corpusWork, k)}/_SUCCESS"))
+    (v to 1 by -1).find(k => Store.committed(spark, snapSigPath(corpusWork, k)) &&
+      Store.committed(spark, snapCompPath(corpusWork, k)))
 
   /** The live signatures table at version `v`: snapshot-or-base plus all
     * later delta segments (plain union — ords are disjoint, rows

@@ -18,12 +18,6 @@ import org.apache.spark.sql.functions._
 final class Ckpt(spark: SparkSession, workDir: String) {
   private def path(stage: String) = s"$workDir/$stage"
 
-  private def committed(stage: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path(stage), "_SUCCESS")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case scala.util.control.NonFatal(_) => false }
-
   private val pendingLineage =
     scala.collection.mutable.ArrayBuffer[(String, Long, Long, String)]()
   private val pendingMetrics =
@@ -38,7 +32,9 @@ final class Ckpt(spark: SparkSession, workDir: String) {
     * call flush() once per run so the side-table writes cost one job, not
     * one per stage. */
   def stage(stageName: String)(compute: => DataFrame): (DataFrame, Boolean) = {
-    if (committed(stageName)) {
+    // a filesystem error propagates: taken for "not committed", it would
+    // recompute the stage and overwrite frozen ords later stages refer to
+    if (Store.committed(spark, path(stageName))) {
       (spark.read.parquet(path(stageName)), true)
     } else {
       val t0 = System.nanoTime()

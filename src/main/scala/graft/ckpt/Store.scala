@@ -1,15 +1,28 @@
 package graft.ckpt
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import java.nio.charset.StandardCharsets.UTF_8
 
 /**
- * The small-file primitives the segment stores share ([[graft.lsh.BandIndex]],
- * [[graft.groups.GroupRegistry]], [[graft.CorpusState]], the incremental
- * run's `_base_version` pin): marker files read whole and created
- * exclusively, and the name of a compacted segment.
+ * The one commit protocol of every persisted store ([[graft.lsh.BandIndex]],
+ * [[graft.groups.GroupRegistry]], [[graft.CorpusState]], [[Ckpt]], the
+ * incremental run's `_base_version` pin):
+ *
+ *  - a store is a directory of immutable `seg_*` segment directories, read
+ *    as their union ([[segments]]);
+ *  - a segment commits by writing `.tmp_<name>` and renaming it into
+ *    place ([[commitSegment]]): a crash leaves only an invisible staging
+ *    dir, and a resumed commit under the same name is a no-op;
+ *  - compaction folds every segment into one named from its input set,
+ *    committed before any input is deleted ([[compactSegments]]);
+ *  - a parquet output is committed once its `_SUCCESS` marker exists
+ *    ([[committed]]);
+ *  - marker files are read whole and created exclusively.
+ *
+ * Filesystem errors propagate: an unreadable store is never taken for an
+ * empty or uncommitted one.
  */
 private[graft] object Store {
   def fs(spark: SparkSession, p: String) =
@@ -66,5 +79,67 @@ private[graft] object Store {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(names.getBytes(UTF_8)).map(b => f"$b%02x").mkString.take(12)
     s"seg_zc$hex"
+  }
+
+  /** True once the parquet output at `dir` has committed (`_SUCCESS`). */
+  def committed(spark: SparkSession, dir: String): Boolean =
+    fs(spark, dir).exists(new Path(dir, "_SUCCESS"))
+
+  /** The committed segments under `dir` (paths, sorted by name); empty
+    * when `dir` does not exist. */
+  def segments(spark: SparkSession, dir: String): Seq[String] = {
+    val f = fs(spark, dir)
+    val p = new Path(dir)
+    if (!f.exists(p)) Seq.empty
+    else f.listStatus(p).map(_.getPath).filter(_.getName.startsWith("seg_"))
+      .map(_.toString).sorted.toSeq
+  }
+
+  /** Commit `rows` as segment `name` under `dir`: written to `.tmp_<name>`,
+    * then renamed into place. Returns false, evaluating nothing, when the
+    * segment is already committed (a resumed run never double-appends). */
+  def commitSegment(spark: SparkSession, dir: String, name: String)(
+      rows: => DataFrame): Boolean = {
+    require(name.startsWith("seg_"), s"segment name must start with seg_: $name")
+    val f = fs(spark, dir)
+    val finalP = new Path(dir, name)
+    if (f.exists(finalP)) false
+    else {
+      val staging = new Path(dir, s".tmp_$name")
+      rows.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      if (!f.rename(staging, finalP))
+        throw new java.io.IOException(s"segment commit failed: rename $staging -> $finalP")
+      true
+    }
+  }
+
+  /** Fold every segment under `dir` into one named by [[compactedSegment]]:
+    * `merge` maps the union of the inputs to the merged rows.
+    * `beforeDelete(name, inputs)` runs once the merged segment is committed
+    * and before any input is deleted. A crash between commit and deletes
+    * leaves rows twice, which every reader resolves and the next
+    * compaction folds. Returns the merged name and the inputs it subsumed,
+    * or None when there is at most one segment. */
+  def compactSegments(spark: SparkSession, dir: String)(merge: DataFrame => DataFrame,
+      beforeDelete: (String, Seq[String]) => Unit = (_, _) => ()): Option[(String, Seq[String])] = {
+    val inputs = segments(spark, dir)
+    if (inputs.size <= 1) None
+    else {
+      val name = compactedSegment(inputs)
+      commitSegment(spark, dir, name)(merge(spark.read.parquet(inputs: _*)))
+      beforeDelete(name, inputs)
+      val f = fs(spark, dir)
+      inputs.foreach(s => f.delete(new Path(s), true))
+      Some(name -> inputs)
+    }
+  }
+
+  /** One past the highest `<prefix>NNNNNN` segment under `dir` (0 when
+    * none): never the segment count, which a compaction that crashed
+    * mid-delete would make name an existing segment. */
+  def nextSegment(spark: SparkSession, dir: String, prefix: String): Int = {
+    val Numbered = s"$prefix(\\d+)".r
+    segments(spark, dir).map(new Path(_).getName)
+      .collect { case Numbered(i) => i.toInt + 1 }.maxOption.getOrElse(0)
   }
 }

@@ -1,8 +1,7 @@
 package graft.groups
 
 import graft.ckpt.Store
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,15 +13,15 @@ import org.apache.spark.sql.functions._
  * derived from its minimum member hash — so re-running the same corpus
  * yields identical UUIDs (idempotent, unlike the reference's random v4).
  *
- * STORAGE (round 3): a directory of atomically-committed `seg_*` parquet
- * segments, merged on read — the same Iceberg-shaped commit protocol as
- * BandIndex/CorpusState. Each run appends only the (hash → uuid) rows it
- * newly produced (anti-join against the existing segments), so the commit
- * is O(delta); the round-2 design rewrote the whole table through one
- * `coalesce(1)` task per run — a single-task straggler writing O(corpus)
- * twice at 10⁸ groups. Reads resolve duplicate hashes with min(uuid)
- * (deterministic, order-independent), and [[compact]] folds segments into
- * one resolved, hash-clustered segment.
+ * STORAGE (round 3): a directory of `seg_*` parquet segments committed and
+ * compacted through [[graft.ckpt.Store]], merged on read. Each run
+ * appends only the (hash → uuid) rows it newly produced (anti-join
+ * against the existing segments), so the commit is O(delta); the round-2
+ * design rewrote the whole table through one `coalesce(1)` task per run —
+ * a single-task straggler writing O(corpus) twice at 10⁸ groups. Reads
+ * resolve duplicate hashes with min(uuid) (deterministic,
+ * order-independent), and [[compact]] folds segments into one resolved,
+ * hash-clustered segment.
  *
  * IGNORED GROUPS (S11 completion, db.rs:236-244 IgnoredEntry +
  * db.rs:1277-1336 suppression): a per-uuid `ignored` flag persists under
@@ -34,18 +33,6 @@ object GroupRegistry {
   /** Auto-compact once this many registry segments accumulate. */
   final val CompactAfter = 32
 
-  private val MergedSegment = "seg_d(\\d+)".r
-
-  private def fsOf(spark: SparkSession, path: String) = Store.fs(spark, path)
-
-  private def segments(spark: SparkSession, path: String): Seq[String] = {
-    val f = fsOf(spark, path)
-    val p = new Path(path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath).filter(_.getName.startsWith("seg_"))
-      .map(_.toString).sorted.toSeq
-  }
-
   private def emptyRegistry(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long, Long, Long, String)]
@@ -54,7 +41,7 @@ object GroupRegistry {
 
   /** Raw appended rows (may hold several uuids per hash across segments). */
   private def readRaw(spark: SparkSession, path: String): DataFrame = {
-    val segs = segments(spark, path)
+    val segs = Store.segments(spark, path)
     if (segs.isEmpty) emptyRegistry(spark)
     else spark.read.parquet(segs: _*)
       .select("h0", "h1", "h2", "h3", "group_uuid")
@@ -66,19 +53,6 @@ object GroupRegistry {
     readRaw(spark, path)
       .groupBy("h0", "h1", "h2", "h3")
       .agg(min("group_uuid").as("group_uuid"))
-
-  /** Stage-and-rename atomic segment commit (BandIndex protocol). */
-  private def writeSegment(rows: DataFrame, path: String, segName: String): Unit = {
-    val spark = rows.sparkSession
-    val f = fsOf(spark, path)
-    f.mkdirs(new Path(path))
-    val finalP = new Path(path, segName)
-    if (f.exists(finalP)) return
-    val staging = new Path(path, s".tmp_$segName")
-    rows.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    if (!f.rename(staging, finalP))
-      throw new java.io.IOException(s"registry commit failed: $staging -> $finalP")
-  }
 
   /**
    * O(delta) merge: append only (hash, uuid) rows not already present in
@@ -96,42 +70,21 @@ object GroupRegistry {
     // per run would still grow the count toward CompactAfter and trigger
     // periodic full-registry compactions with no data change
     if (delta.isEmpty) return
-    // one past the highest existing index, never the segment count: a
-    // compaction that crashed mid-delete leaves e.g. [seg_d3, seg_d4,
-    // seg_zc…], where the count would name the existing seg_d3 and
-    // writeSegment would keep the old segment and drop these rows
-    val next = segments(spark, path).map(new Path(_).getName)
-      .collect { case MergedSegment(i) => i.toInt + 1 }.maxOption.getOrElse(0)
-    val segName = f"seg_d$next%06d"
-    writeSegment(delta, path, segName)
-    if (segments(spark, path).size > CompactAfter) compact(spark, path)
+    val next = Store.nextSegment(spark, path, "seg_d")
+    Store.commitSegment(spark, path, f"seg_d$next%06d")(delta)
+    if (Store.segments(spark, path).size > CompactAfter) compact(spark, path)
   }
 
-  /** Fold all segments into one resolved segment (Iceberg rewrite-data-
-    * files analog), named from its input set like the band index's.
-    * Crash-safe: the merged segment commits before the subsumed ones
-    * delete; a crash in between leaves duplicate rows that read()
+  /** Fold all segments into one resolved, hash-clustered segment (Iceberg
+    * rewrite-data-files analog, [[Store.compactSegments]]); a crash
+    * between commit and deletes leaves duplicate rows that read()
     * resolves and the next compact removes. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val all = segments(spark, path)
-    if (all.size <= 1) return
-    val segName = Store.compactedSegment(all)
-    val f = fsOf(spark, path)
-    val finalP = new Path(path, segName)
-    if (!f.exists(finalP)) {
-      val staging = new Path(path, s".tmp_$segName")
-      spark.read.parquet(all: _*)
-        .groupBy("h0", "h1", "h2", "h3")
-        .agg(min("group_uuid").as("group_uuid"))
-        .repartitionByRange(math.max(spark.sparkContext.defaultParallelism, 1),
-          col("h0"), col("h1"))
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      if (!f.rename(staging, finalP))
-        throw new java.io.IOException(s"registry compact failed: $staging -> $finalP")
-    }
-    all.filterNot(_.endsWith(s"/$segName"))
-      .foreach(s => f.delete(new Path(s), true))
-  }
+  def compact(spark: SparkSession, path: String): Unit =
+    Store.compactSegments(spark, path)(_
+      .groupBy("h0", "h1", "h2", "h3")
+      .agg(min("group_uuid").as("group_uuid"))
+      .repartitionByRange(math.max(spark.sparkContext.defaultParallelism, 1),
+        col("h0"), col("h1")))
 
   // ======================= ignored groups =======================
 
@@ -145,15 +98,15 @@ object GroupRegistry {
     if (uuids.isEmpty) return
     import spark.implicits._
     val dir = ignoredDir(path)
-    val seq = segments(spark, dir).size
-    val rows = uuids.distinct.map(u => (u, ignored, seq.toLong))
-      .toDF("group_uuid", "ignored", "seq").coalesce(1)
-    writeSegment(rows, dir, f"seg_i$seq%06d")
+    val seq = Store.nextSegment(spark, dir, "seg_i")
+    Store.commitSegment(spark, dir, f"seg_i$seq%06d")(
+      uuids.distinct.map(u => (u, ignored, seq.toLong))
+        .toDF("group_uuid", "ignored", "seq").coalesce(1))
   }
 
   /** Currently-ignored uuids (latest mark per uuid, filtered true). */
   def ignoredUuids(spark: SparkSession, path: String): DataFrame = {
-    val segs = segments(spark, ignoredDir(path))
+    val segs = Store.segments(spark, ignoredDir(path))
     if (segs.isEmpty) {
       import spark.implicits._
       Seq.empty[String].toDF("group_uuid")

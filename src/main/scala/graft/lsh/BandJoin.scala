@@ -41,7 +41,6 @@ import org.apache.spark.sql.functions._
  * column and the chunk widths; [[BandJoin64]] and [[BandIndex]] bind it.
  */
 object BandJoin {
-  final val NumChunks = 16
   final val BitsPerChunk = 16
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -58,11 +57,6 @@ object BandJoin {
     * confident rows; 32 = the ≥10⁷ setting (identical edge set by
     * pigeonhole, proven by LshSpec width-equality). */
   def autoChunkBits(n: Long): Int = HashLayout.Pdq.autoChunkBits(n)
-
-  /** XOR masks within Hamming radius r of a 16-bit value (r ∈ 0..2 used;
-    * r=3 supported for threshold 48..63, scanner.rs:1755-1767). */
-  def masks(radius: Int): Array[Int] =
-    masksB(radius, BitsPerChunk).map(_.toInt)
 
   /** Hard cap on XOR masks materialized per explode side: the masks become
     * a `lit` array in the plan, so an unbounded radius×width combination
@@ -259,14 +253,6 @@ object BandJoin {
     rec(0, radius, 0L)
     out.distinct.toArray
   }
-
-  /** All 16 chunks of (h0..h3) as an array column: chunk k = little-endian
-    * u16 k of the 256-bit hash — static shifts, fully codegen'd. */
-  def chunksArray(h: Seq[Column]): Column =
-    array((0 until NumChunks).map { k =>
-      shiftrightunsigned(h(k / 4), (k % 4) * 16)
-        .bitwiseAND(lit(0xffffL)).cast("int")
-    }: _*)
 
   /** Generalized chunk extraction: 64·|h|/bits chunks of width `bits` (8,
     * 16, 32 or 64) of the hash held in the longs `h` (low word first) —

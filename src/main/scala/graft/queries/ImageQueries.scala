@@ -144,8 +144,9 @@ object ImageQueries {
     val s = sigs(spark).where(col("has_pdq"))
       .select(col("ord"), col("h0"), col("h1"), col("h2"), col("h3"))
     s.select(col("ord"),
-        posexplode(BandJoin.chunksArray(Seq("h0", "h1", "h2", "h3").map(col)))
+        posexplode(BandJoin.chunksArrayB(Seq("h0", "h1", "h2", "h3").map(col), 16))
           .as(Seq("band_idx", "band_val")))
+      .withColumn("band_val", col("band_val").cast("int"))
       .orderBy("ord", "band_idx")
   }
 

@@ -141,6 +141,37 @@ class BandIndexSpec extends AnyFunSuite {
     assert(BandIndex.maxOrd(spark, s"$dir/index") == wantMax)
   }
 
+  test("compaction crash window: merged segment committed, no input deleted yet") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bandindex-crash").toString
+    val idx = s"$dir/index"
+    val thirds = corpus.grouped(math.max(corpus.size / 3, 1)).toSeq
+    BandIndex.build(thirds.head.toDS().toDF(), idx)
+    BandIndex.append(thirds(1).toDS().toDF(), idx, "seg_delta_x")
+    BandIndex.append(thirds(2).toDS().toDF(), idx, "seg_delta_y")
+    def edges() = BandIndex.probe(spark, idx, delta.toDS().toDF(), Threshold)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val (wantEdges, wantMax) = (edges(), BandIndex.maxOrd(spark, idx))
+    // the inputs and their sidecars as they stand before the compaction
+    val inputs = new java.io.File(idx).listFiles().map(_.getName)
+      .filter(n => n.startsWith("seg_") || n.startsWith("_segmax_"))
+    val aside = java.nio.file.Files.createTempDirectory("graft-bandindex-crash-aside")
+    def copy(from: java.io.File, to: java.io.File): Unit =
+      if (from.isDirectory) org.apache.commons.io.FileUtils.copyDirectory(from, to)
+      else org.apache.commons.io.FileUtils.copyFile(from, to)
+    inputs.foreach(n => copy(new java.io.File(s"$idx/$n"), aside.resolve(n).toFile))
+    BandIndex.compact(spark, idx)
+    inputs.foreach(n => copy(aside.resolve(n).toFile, new java.io.File(s"$idx/$n")))
+    def segs = new java.io.File(idx).listFiles().map(_.getName).filter(_.startsWith("seg_"))
+    assert(segs.length == 4, segs.toSeq)
+    assert(edges() == wantEdges, "crash window changed probe edges")
+    assert(BandIndex.maxOrd(spark, idx) == wantMax)
+    BandIndex.compact(spark, idx)
+    assert(segs.length == 1, segs.toSeq)
+    assert(edges() == wantEdges, "compaction after the crash window changed probe edges")
+    assert(BandIndex.maxOrd(spark, idx) == wantMax)
+  }
+
   test("maxOrd is metadata-only: zero Spark jobs once sidecars exist") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex7").toString
@@ -240,7 +271,7 @@ class BandIndexSpec extends AnyFunSuite {
   test("range layout: files carry tight band_idx min-max (pruning basis)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex4").toString
-    BandIndex.build(corpus.toDS().toDF(), s"$dir/index", numPartitions = 8)
+    BandIndex.build(corpus.toDS().toDF(), s"$dir/index")
     // each physical file must cover a narrow slice of the key space:
     // read per-file min/max of band_idx via input_file_name grouping
     val stats = BandIndex.read(spark, s"$dir/index")

@@ -226,4 +226,30 @@ class GeoRegistrySpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == (0 until 6).map(i => i.toLong -> s"u-$i").toMap, got)
   }
+
+  test("compaction crash window: merged segment committed, no input deleted yet") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-reg-window").toString
+    def merge(h: Long, uuid: String): Unit = GroupRegistry.merge(spark, dir,
+      Seq((h, 0L, 0L, 0L, uuid)).toDF("h0", "h1", "h2", "h3", "group_uuid"))
+    (0 until 3).foreach(i => merge(i.toLong, s"u-$i"))
+    merge(0L, "u-0b") // a second uuid for hash 0: read resolves it to min
+    def read() = GroupRegistry.read(spark, dir).select("h0", "group_uuid").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val want = read()
+    assert(want == Map(0L -> "u-0", 1L -> "u-1", 2L -> "u-2"), want)
+    val inputs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("seg_"))
+    val aside = java.nio.file.Files.createTempDirectory("graft-reg-window-aside")
+    inputs.foreach(n => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$dir/$n"), aside.resolve(n).toFile))
+    GroupRegistry.compact(spark, dir)
+    inputs.foreach(n => org.apache.commons.io.FileUtils.copyDirectory(
+      aside.resolve(n).toFile, new java.io.File(s"$dir/$n")))
+    def segs = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("seg_"))
+    assert(segs.length == inputs.length + 1, segs.toSeq)
+    assert(read() == want, "crash window changed the resolved registry")
+    GroupRegistry.compact(spark, dir)
+    assert(segs.length == 1, segs.toSeq)
+    assert(read() == want, "compaction after the crash window changed the registry")
+  }
 }

@@ -98,7 +98,7 @@ class HammingPropertiesSpec extends AnyFunSuite {
 
   test("split-radius coverage: chunk dist ≤ 2 ⇒ some radius-2 index mask collides") {
     val gen16 = Gen.chooseNum(0, 65535)
-    val masksI = graft.lsh.BandJoin.masks(2)
+    val masksI = graft.lsh.BandJoin.masksB(2, 16)
     for ((c, flips) <- samples(gen16).zip(samples(Gen.listOfN(2, Gen.chooseNum(0, 15))))) {
       val c2 = flips.distinct.foldLeft(c)((v, b) => v ^ (1 << b))
       assert(masksI.exists(m => (c2 ^ m) == c),

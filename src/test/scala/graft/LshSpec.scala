@@ -36,10 +36,10 @@ class LshSpec extends AnyFunSuite {
   }
 
   test("probe masks sizes match the reference tiers (scanner.rs:1729-1767)") {
-    assert(BandJoin.masks(0).length == 1)
-    assert(BandJoin.masks(1).length == 17)
-    assert(BandJoin.masks(2).length == 137)
-    assert(BandJoin.masks(3).length == 697)
+    assert(BandJoin.masksB(0, 16).length == 1)
+    assert(BandJoin.masksB(1, 16).length == 17)
+    assert(BandJoin.masksB(2, 16).length == 137)
+    assert(BandJoin.masksB(3, 16).length == 697)
   }
 
   /** Build a minimal signature frame from raw 32-byte hashes (identity
