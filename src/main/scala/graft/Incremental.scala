@@ -253,9 +253,8 @@ object Incremental {
     * 32-byte SHA-256 values ≈ 3.2 MB raw / tens of MB as a hashed
     * relation — inside Spark's broadcast comfort zone on default-sized
     * drivers (round-4 ADVICE #4: the previous 500k cap permitted a
-    * low-hundreds-MB build right at the limit). Sized for the wider key,
-    * unlike [[BandIndex.MaxKeyFilterRows]] which budgets 12-byte band
-    * keys; past it the plain shuffled join is the right plan anyway. */
+    * low-hundreds-MB build right at the limit); past it the plain
+    * shuffled join is the right plan anyway. */
   final val MaxContentHashBroadcast = 100000L
 
   /** Filesystem-safe idempotency token for this delta (segment + marker). */

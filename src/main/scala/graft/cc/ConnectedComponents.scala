@@ -71,14 +71,20 @@ object ConnectedComponents {
    * it the O(log n)-round large-star/small-star iteration takes over.
    */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
-          driverPathMaxEdges: Long = DriverPathMaxEdges): DataFrame =
-    runWithStats(spark, edges, maxIter, driverPathMaxEdges)._1
+          driverPathMaxEdges: Long = DriverPathMaxEdges,
+          giantWarnSize: Long = GiantWarnSize): DataFrame =
+    labels(spark, edges, maxIter, driverPathMaxEdges, giantWarnSize)._1
 
   /** Like [[run]], plus execution stats for benching/monitoring:
     * (labels, largeStar/smallStar rounds used — 0 on the driver path —
     * and the deduplicated input edge count). */
   def runWithStats(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
                    driverPathMaxEdges: Long = DriverPathMaxEdges)
+      : (DataFrame, Int, Long) =
+    labels(spark, edges, maxIter, driverPathMaxEdges, GiantWarnSize)
+
+  private def labels(spark: SparkSession, edges: DataFrame, maxIter: Int,
+                     driverPathMaxEdges: Long, giantWarnSize: Long)
       : (DataFrame, Int, Long) = {
     import spark.implicits._
     val distinctEdges = edges.select(col("a").as("src"), col("b").as("dst"))
@@ -89,7 +95,7 @@ object ConnectedComponents {
     val head = (if (driverPathMaxEdges >= Int.MaxValue) distinctEdges
       else distinctEdges.limit(driverPathMaxEdges.toInt + 1)).as[(Long, Long)].collect()
     if (head.length <= driverPathMaxEdges)
-      return (driverUnionFind(spark, head), 0, head.length.toLong)
+      return (driverUnionFind(spark, head, giantWarnSize), 0, head.length.toLong)
     var e = distinctEdges.localCheckpoint()
     var prev = checksum(e)
     val nEdges = prev._1
@@ -106,13 +112,34 @@ object ConnectedComponents {
     // fixpoint edges are (node → component-min) stars; add the roots
     val children = e.select(col("src").as("id"), col("dst").as("comp"))
     val roots = e.select(col("dst").as("id"), col("dst").as("comp")).distinct()
-    (children.unionByName(roots)
-      .groupBy("id").agg(min("comp").as("comp")), i, nEdges)
+    val labels = children.unionByName(roots).groupBy("id").agg(min("comp").as("comp"))
+    warnGiants(labels.groupBy("comp").agg(count(lit(1)).as("n"))
+      .where(col("n") >= giantWarnSize).orderBy(col("n").desc).limit(10)
+      .as[(Long, Long)].collect())
+    (labels, i, nEdges)
   }
+
+  /** Components of at least this many members are logged loudly by
+    * [[run]], before any group analytics run over them. Dup groups are
+    * small by construction (they exist only where near-dup edges do), so
+    * a giant component means a misconfigured threshold or a degenerate
+    * corpus — the analytics still complete (they are groupBy-shaped, never
+    * one-task-per-component window sorts), but silently grinding through
+    * it would hide the misconfiguration. */
+  final val GiantWarnSize = 1000000L
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Warn about (comp, size) giants, largest first, at most 10. */
+  private def warnGiants(giants: Seq[(Long, Long)]): Unit =
+    if (giants.nonEmpty)
+      log.warn("giant components detected (threshold misconfiguration?): " +
+        giants.sortBy(-_._2).take(10).map { case (c, n) => s"comp=$c size=$n" }.mkString(", "))
 
   /** Exact union-find with path halving (scanner.rs:1781-1807 port) over
     * collected edges; comp canonicalized to the min member. */
-  private def driverUnionFind(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
+  private def driverUnionFind(spark: SparkSession, pairs: Array[(Long, Long)],
+                              giantWarnSize: Long): DataFrame = {
     import spark.implicits._
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
@@ -129,6 +156,8 @@ object ConnectedComponents {
     }
     val nodes = parent.keySet().toArray(new Array[java.lang.Long](0)).map(_.longValue())
     val byRoot = nodes.groupBy(find)
+    warnGiants(byRoot.valuesIterator.filter(_.length >= giantWarnSize)
+      .map(m => (m.min, m.length.toLong)).toSeq)
     val out = byRoot.iterator.flatMap { case (_, members) =>
       val mn = members.min
       members.iterator.map(m => (m, mn))

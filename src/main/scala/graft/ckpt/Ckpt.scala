@@ -1,5 +1,8 @@
 package graft.ckpt
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,24 +41,33 @@ final class Ckpt(spark: SparkSession, workDir: String) {
       (spark.read.parquet(path(stageName)), true)
     } else {
       val t0 = System.nanoTime()
-      compute.write.mode(SaveMode.Overwrite).parquet(path(stageName))
-      val out = spark.read.parquet(path(stageName))
-      // per-file lineage in ONE zero-column job: row counts keyed by the
-      // WRITTEN file (input_file_name is stable across re-reads, unlike
-      // spark_partition_id which reflects the reader's split assignment),
-      // summed for the stage total — the per-partition replacement for the
-      // reference's per-file last_seen rows (db.rs:909-911). The projection
-      // is empty, so only parquet batch row counts are scanned, no columns.
-      val parts = out.groupBy(input_file_name().as("file"))
-        .agg(count(lit(1)).as("rows")).collect()
-      parts.foreach { r =>
-        val leaf = r.getString(0).substring(r.getString(0).lastIndexOf('/') + 1)
-        pendingPartLineage += ((stageName, leaf, r.getLong(1)))
-      }
-      appendLineage(stageName, parts.map(_.getLong(1)).sum,
-        (System.nanoTime() - t0) / 1000000)
+      val df = compute
+      df.write.mode(SaveMode.Overwrite).parquet(path(stageName))
+      // the frame's own schema: no inference job on the read-back
+      val out = spark.read.schema(df.schema).parquet(path(stageName))
+      // per-file lineage from the footers of the files just committed —
+      // driver-side metadata, no Spark job — summed for the stage total:
+      // the per-file replacement for the reference's per-file last_seen
+      // rows (db.rs:909-911)
+      val parts = fileRows(path(stageName)).filter(_._2 > 0)
+      parts.foreach { case (leaf, rows) => pendingPartLineage += ((stageName, leaf, rows)) }
+      appendLineage(stageName, parts.map(_._2).sum, (System.nanoTime() - t0) / 1000000)
       (out, false)
     }
+  }
+
+  /** (leaf name, row count) of every data file of a parquet dir, read
+    * from the footers; `_`- and `.`-prefixed entries are not data, as for
+    * Spark's own reader. */
+  private def fileRows(dir: String): Seq[(String, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Store.fs(spark, dir).listStatus(new Path(dir)).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try (st.getPath.getName, reader.getRecordCount) finally reader.close()
+      }
   }
 
   /** Rows `stage` committed in THIS run (its pending lineage row), so a

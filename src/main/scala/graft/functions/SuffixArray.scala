@@ -181,10 +181,9 @@ object SuffixArray {
     * exact substring dedup (tail-anchored; the fingerprint operator
     * covers interior spans at scale). */
   /** Documents above which the per-doc length frame stops being
-    * broadcast (≈ tens of MB hashed at this cap — the same order as
-    * BandIndex.MaxKeyFilterRows). Above it, fall back to the shuffled
-    * join: skew-prone on a pathological document but bounded in driver/
-    * executor memory, which a blind broadcast is not. */
+    * broadcast (≈ tens of MB hashed at this cap). Above it, fall back
+    * to the shuffled join: skew-prone on a pathological document but
+    * bounded in driver/executor memory, which a blind broadcast is not. */
   private val MaxLensBroadcastDocs = 2000000L
 
   def dupClasses(docs: DataFrame, minLen: Int): DataFrame = {

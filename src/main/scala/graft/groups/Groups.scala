@@ -21,17 +21,6 @@ import org.apache.spark.sql.functions._
  *    desc (W1, scanner.rs:1561-1574)
  */
 object Groups {
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Components at or above this size are logged loudly before analytics
-    * run. Dup groups are small by construction (they only exist where
-    * near-dup edges exist), so a giant component means a misconfigured
-    * threshold or degenerate corpus — the analytics still complete
-    * (aggregates below are groupBy-based, partial-aggregated, never a
-    * one-task-per-component window sort), but silently grinding through
-    * it would hide the misconfiguration. */
-  final val DefaultGiantWarnSize = 1000000L
-
   /** sig: full signatures; comps: (id, comp). Returns one row per group
     * member with group-level analytics attached.
     *
@@ -40,8 +29,7 @@ object Groups {
     * — a window sorts every member of a component in a single task, which
     * turns one pathological giant component into a straggler/OOM; groupBy
     * combines map-side and distributes. */
-  def assemble(sig: DataFrame, comps: DataFrame,
-               giantWarnSize: Long = DefaultGiantWarnSize): DataFrame = {
+  def assemble(sig: DataFrame, comps: DataFrame): DataFrame = {
     val members = sig.join(comps, sig("ord") === comps("id"), "inner").drop("id")
 
     // A4: per-(comp, content_hash) duplicate counts; group rollup for A7.
@@ -55,15 +43,6 @@ object Groups {
       .agg(count(lit(1)).cast("int").as("n_distinct_content"),
         max(col("bit_count_dup") > 1).as("has_bit_dup"),
         sum("bit_count_dup").as("group_size"))
-    if (giantWarnSize > 0) {
-      // giant-component guard (A2 scale audit) off the same rollup
-      val giants = contentRollup.where(col("group_size") >= giantWarnSize)
-        .select("comp", "group_size")
-        .orderBy(col("group_size").desc).limit(10).collect()
-      if (giants.nonEmpty)
-        log.warn("giant components detected (threshold misconfiguration?): " +
-          giants.map(r => s"comp=${r.get(0)} size=${r.get(1)}").mkString(", "))
-    }
     // A5: per-(comp, pixel_hash) counts (null pixel hashes stay 0)
     val pixelCounts = members.where(col("pixel_hash").isNotNull)
       .groupBy("comp", "pixel_hash")

@@ -2,7 +2,7 @@ package graft.lsh
 
 import graft.ckpt.Store
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -25,17 +25,15 @@ import org.apache.spark.sql.functions._
  * per chunk per image, like the reference's MIH buckets); the multi-probe
  * masks stay on the small delta side.
  *
- * O(delta) PROBING (round 4): when the delta's probe-key set is small
- * relative to the band-key space, the index side is SEMI-FILTERED by a
- * broadcast of the exact probed keys before the join — the index is then
- * scanned (columnar, embarrassingly parallel, nothing materializes) but
- * only the rows in probed buckets are ever exchanged, which is precisely
- * the set of entries the reference's LMDB point lookups touch
- * (scanner.rs:1729-1767). When the probe ball saturates the key space
- * (high threshold over 16-bit chunks), every bucket genuinely holds
- * candidates — the reference's lookups touch every bucket too — and the
- * filter is skipped as pure overhead. The gate is arithmetic (no extra
- * jobs beyond one delta-sized count), see [[probe]].
+ * IN-MEMORY PROBING: a delta whose probe ball fits [[MaxProbeBallDraws]]
+ * (a delta of up to ~110 distinct images at the default threshold over 16-bit
+ * chunks) is never exploded into rows. Its representatives are collected
+ * once and broadcast; each index-scan task holds the ball as one sorted
+ * primitive table and looks every scanned row up in it — the reference's
+ * in-memory mask walk (hamminghash.rs:82-149, scanner.rs:1729-1767). The
+ * index is scanned (columnar, embarrassingly parallel) and only verified
+ * pairs leave the tasks. A larger ball takes the exploded sort-merge
+ * join, see [[probe]].
  *
  * Layout: a directory of SEGMENT subdirectories (`seg_*`) committed and
  * compacted through [[graft.ckpt.Store]] — the Iceberg-snapshot-commit
@@ -61,12 +59,11 @@ object BandIndex {
   final val AlgoPdq = "pdq"
   final val AlgoPhash64 = "phash64"
 
-  /** Broadcast-key-prefilter cap: the probed (band_idx, band_val) set is
-    * broadcast for an index semi-join only below this many keys (~24 MB of
-    * (int, long) rows). Above it the probe falls back to the full shuffled
-    * join — which is the right plan there, because a key set that large
-    * only arises when the probe ball covers most buckets anyway. */
-  final val MaxKeyFilterRows = 2000000L
+  /** Probe-ball budget: the most (variant × chunk × mask) draws a delta's
+    * probe ball may hold for the in-memory probe, whose table packs one
+    * draw per 8-byte word (~16 MB per executor at the cap). A larger ball
+    * takes the sort-merge join, which spills instead. */
+  final val MaxProbeBallDraws = 2000000L
 
   /** Range partitions per written segment (the file count of a base or
     * compacted segment). */
@@ -325,13 +322,19 @@ object BandIndex {
    * confidence collapse to one representative first ([[BandJoin.collapse]]),
    * so k byte-identical copies cost one probe, not k² collisions.
    *
-   * Index-side cost: when the probed key set is provably ≤
-   * [[MaxKeyFilterRows]] AND below half the band-key space (so pruning
-   * can actually bite), the exact key set is broadcast and the index is
-   * semi-joined BEFORE the main join — the full index is scanned but only
-   * rows in probed buckets shuffle, making the exchange O(touched
-   * entries) like the reference's LMDB lookups instead of O(corpus).
-   * Both gates are arithmetic from one delta-sized count.
+   * Two paths, chosen by one job that collects the representatives
+   * (limit + 1, as connected components decide theirs):
+   *  - IN MEMORY, when the probe ball holds at most [[MaxProbeBallDraws]]
+   *    draws ([[ballDraws]]): the collected reps are broadcast as a
+   *    [[ProbeBall]], and each task of a plain scan over the index
+   *    segments ∪ the delta's own radius-0 rows looks every scanned row up
+   *    in the ball's table and verifies it — the reference's in-memory
+   *    mask walk (hamminghash.rs:82-149, scanner.rs:1729-1767). The ball
+   *    is never exploded, shuffled or sorted as rows; no exchange precedes
+   *    the group-by.
+   *  - SORT-MERGE, past the budget: the ball is exploded into probe rows
+   *    and sort-merge joined with the index, which spills where a larger
+   *    ball's table or hash build would not fit.
    */
   def probe(spark: SparkSession, path: String, deltaSig: DataFrame,
             threshold: Int): DataFrame = {
@@ -344,11 +347,11 @@ object BandIndex {
     // delta — feasibility is arithmetic-checked BEFORE any mask array
     // materializes (at 32-bit chunks this limits threshold ≤ 31:
     // V(4,32) = 41k fits, V(5,32) = 242k does not)
-    require(BandJoin.maskCount(tol, chunkBits) <= BandJoin.MaxMasksPerSide,
+    val confMasks = BandJoin.maskCount(tol, chunkBits)
+    require(confMasks <= BandJoin.MaxMasksPerSide,
       s"threshold $threshold over a $chunkBits-bit index needs " +
-        s"${BandJoin.maskCount(tol, chunkBits)} probe masks/chunk " +
-        s"(> ${BandJoin.MaxMasksPerSide}) — rebuild the index with " +
-        "narrower chunks or lower the threshold")
+        s"$confMasks probe masks/chunk (> ${BandJoin.MaxMasksPerSide}) — " +
+        "rebuild the index with narrower chunks or lower the threshold")
 
     val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
     val vCols = vNames.map(col)
@@ -360,70 +363,187 @@ object BandIndex {
 
     val (delta, mem) = BandJoin.collapse(deltaSig.filter(col("has_pdq")),
       (layout.hashCols :+ layout.variantsCol :+ "low_conf").map(col))
-    val prbBase = delta
-      .select(col("ord"), col("low_conf").as("q_low"),
-        explode(col(layout.variantsCol)).as("v"))
-      .select(col("ord") +: col("q_low") +: layout.splitVariant(col("v"), vNames): _*)
+    // per rep: its variants as |variants| × hash-width longs (the ball)
+    // and its stored hash (its radius-0 rows)
+    val w = layout.hashCols.size
+    val repCols = delta.select(col("ord") +: col("low_conf") +:
+      (if (w == 1) col(layout.variantsCol) else flatten(col(layout.variantsCol))).as("vs") +:
+      layout.hashCols.map(col): _*)
+    val maxReps = (MaxProbeBallDraws / (8L * numChunks)).toInt
+    val reps = repCols.limit(maxReps + 1).collect()
+    val draws =
+      if (reps.length > maxReps) Long.MaxValue
+      else ballDraws(reps.iterator.map(r => (r.getSeq[Long](2).size / w, r.getBoolean(1))),
+        numChunks, confMasks)
 
-    // F2 split (scanner.rs:1579-1594): confident rows expand the full
-    // radius-tol ball; low-confidence rows match exact-only, so they probe
-    // a SINGLE bucket per chunk (mask 0) instead of paying V(tol, bits)
-    // exploded keys that the dist ≤ 0 filter would discard anyway
-    def expand(base: DataFrame, radius: Int): DataFrame =
-      BandJoin.bandKeys(base, vCols, radius, chunkBits)
-        .withColumn("band_val", bandValTyped(col("band_val"), chunkBits))
-        .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
-          col("q_low") +: vCols: _*)
-    val prb = expand(prbBase.filter(!col("q_low")), tol)
-      .unionByName(expand(prbBase.filter(col("q_low")), 0))
-
-    // O(delta) gate: expected probed keys, arithmetically (saturating).
-    // draws = variant rows × chunks × masks; distinct keys ≤ min(draws,
-    // key space). Engage the broadcast semi-filter only when the EXACT
-    // key set is broadcastable AND sparse in the key space (draws ≤
-    // space/2 ⇒ ≥39% of buckets provably untouched; past that the ball
-    // covers most buckets and filtering is overhead with no pruning).
-    val counts = delta.agg(count(lit(1)),
-      count(when(col("low_conf"), lit(1)))).head()
-    val (nDelta, nLow) = (counts.getLong(0), counts.getLong(1))
-    val confMasks = BandJoin.maskCount(tol, chunkBits)
-    val draws = {
-      val perConf = 8L * numChunks * confMasks
-      val perLow = 8L * numChunks
-      val conf = nDelta - nLow
-      if (conf > 0 && perConf > Long.MaxValue / conf) Long.MaxValue
-      else conf * perConf + nLow * perLow
+    val repEdges = if (draws <= MaxProbeBallDraws) {
+      log.info(s"band index probe: in memory (${reps.length} reps, $draws ball draws)")
+      val ball = spark.sparkContext.broadcast(new ProbeBall(reps.map(_.getLong(0)),
+        reps.map(_.getBoolean(1)), reps.map(_.getSeq[Long](2).toArray), w, numChunks,
+        chunkBits, BandJoin.masksB(tol, chunkBits), threshold))
+      val repRows = spark.createDataFrame(java.util.Arrays.asList(reps: _*), repCols.schema)
+      import spark.implicits._
+      idx.unionByName(indexSide(bandRows(repRows, chunkBits, algo)))
+        .select(col("band_idx") +: col("band_val").cast("long") +: col("c_ord") +:
+          col("c_low") +: cNames.map(col): _*)
+        .mapPartitions(rows => ball.value.probe(rows))
+        .toDF("ra", "rb", "dist")
+        .groupBy("ra", "rb").agg(min("dist").as("dist"))
+    } else {
+      log.info("band index probe: sort-merge join (" +
+        (if (reps.length > maxReps) s"over $maxReps reps" else s"$draws ball draws") +
+        s", budget $MaxProbeBallDraws draws)")
+      val prbBase = delta
+        .select(col("ord"), col("low_conf").as("q_low"),
+          explode(col(layout.variantsCol)).as("v"))
+        .select(col("ord") +: col("q_low") +: layout.splitVariant(col("v"), vNames): _*)
+      // F2 split (scanner.rs:1579-1594): confident rows expand the full
+      // radius-tol ball; low-confidence rows match exact-only, so they
+      // probe a SINGLE bucket per chunk (mask 0)
+      def expand(base: DataFrame, radius: Int): DataFrame =
+        BandJoin.bandKeys(base, vCols, radius, chunkBits)
+          .withColumn("band_val", bandValTyped(col("band_val"), chunkBits))
+          .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
+            col("q_low") +: vCols: _*)
+      val prb = expand(prbBase.filter(!col("q_low")), tol)
+        .unionByName(expand(prbBase.filter(col("q_low")), 0))
+      // per-side limit: either side low-confidence ⇒ exact only (F2)
+      // sort-merge, as in BandJoin.exactEdges: it keeps the planner from
+      // broadcasting the under-estimated explode and spills, where a hash
+      // build over the probe ball fails for a large delta
+      prb.hint("shuffle_merge")
+        .join(idx.unionByName(indexSide(bandRows(delta, chunkBits, algo))),
+          Seq("band_idx", "band_val"))
+        .where(col("q_ord") =!= col("c_ord"))
+        .withColumn("dist", BandJoin.hammingCols(vCols, cNames.map(col)))
+        .where(col("dist") <=
+          when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
+        .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
+          greatest(col("q_ord"), col("c_ord")).as("rb"))
+        .agg(min("dist").as("dist"))
     }
-    val keySpace =
-      if (chunkBits >= 62) Long.MaxValue
-      else numChunks.toLong * (1L << chunkBits)
-    val idxSide =
-      if (draws <= MaxKeyFilterRows && 2 * draws <= keySpace) {
-        log.info(s"band index probe: semi-filtering index by ~$draws probed " +
-          s"keys (space $keySpace) — exchange is O(touched buckets)")
-        val keys = prb.select("band_idx", "band_val").distinct()
-        idx.join(broadcast(keys), Seq("band_idx", "band_val"), "left_semi")
-      } else {
-        log.info(s"band index probe: full join (~$draws probe-key draws vs " +
-          s"key space $keySpace — ball covers most buckets, filter would not prune)")
-        idx
+    BandJoin.expandReps(repEdges, mem)
+  }
+
+  /** Draws of a probe ball over reps given as (|variants|, low_conf):
+    * Σ |variants| × m × (V(tol, b), or 1 for a low-confidence rep, which
+    * probes exact-only). */
+  private[graft] def ballDraws(reps: Iterator[(Int, Boolean)], numChunks: Int,
+                               confMasks: Long): Long =
+    reps.map { case (nv, low) => nv.toLong * numChunks * (if (low) 1L else confMasks) }.sum
+}
+
+/**
+ * A small delta's probe ball, held in memory by the index-scan tasks of
+ * [[BandIndex.probe]]. Entry e is one variant of one representative: its
+ * rep ord `ords(e)`, confidence `low(e)` and hash `hashes(e·w until
+ * (e+1)·w)`. The lookup table is one sorted `long[]` of packed
+ * (band_idx, chunk ⊕ mask, e) words — every mask of the radius-tol ball
+ * for a confident entry, mask 0 for a low-confidence one — built once per
+ * executor JVM on first use (the broadcast value is shared by its tasks).
+ */
+private[graft] final class ProbeBall(repOrds: Array[Long], repLow: Array[Boolean],
+                                     repVariants: Array[Array[Long]], w: Int,
+                                     numChunks: Int, chunkBits: Int,
+                                     masks: Array[Long], threshold: Int)
+    extends Serializable {
+  private val repOf = repVariants.indices.toArray.flatMap(i => Array.fill(repVariants(i).length / w)(i))
+  private val ords = repOf.map(repOrds)
+  private val low = repOf.map(repLow)
+  private val hashes = repVariants.flatten
+  private val entryBits = ProbeBall.entryBits(numChunks, chunkBits, ords.length)
+  private val entryMask = (1L << entryBits) - 1
+
+  @transient private lazy val table: Array[Long] = {
+    val perLong = 64 / chunkBits
+    val chunkMask = (1L << chunkBits) - 1
+    val out = new Array[Long](low.map(l => if (l) numChunks else numChunks * masks.length).sum)
+    var i = 0
+    for (e <- ords.indices; k <- 0 until numChunks) {
+      val chunk = (hashes(e * w + k / perLong) >>> (k % perLong) * chunkBits) & chunkMask
+      // masks(0) == 0: a low-confidence entry probes its own bucket only
+      for (m <- 0 until (if (low(e)) 1 else masks.length)) {
+        out(i) = key(k, chunk ^ masks(m)) | e
+        i += 1
+      }
+    }
+    java.util.Arrays.sort(out)
+    out
+  }
+
+  private def key(bandIdx: Int, value: Long): Long =
+    ((bandIdx.toLong << chunkBits) | value) << entryBits
+
+  /** Verified (ra < rb, dist) pairs of scanned radius-0 rows (band_idx,
+    * band_val as long, c_ord, c_low, the w hash longs): per-side limit —
+    * either side low-confidence ⇒ dist 0 — and never a rep with itself.
+    * Walks each row's run of equal-key table words; allocates only the
+    * emitted pairs. */
+  def probe(rows: Iterator[Row]): Iterator[(Long, Long, Int)] =
+    if (table.isEmpty) Iterator.empty
+    else new Iterator[(Long, Long, Int)] {
+      private[this] val t = table
+      private[this] val c = new Array[Long](w)
+      private[this] var run = 0L     // the current row's key, entry bits 0
+      private[this] var i = t.length // its next table word
+      private[this] var cOrd = 0L
+      private[this] var cLow = false
+      private[this] var pending: (Long, Long, Int) = null
+
+      def hasNext: Boolean = {
+        while (pending == null) {
+          if (i < t.length && (t(i) & ~entryMask) == run) {
+            val e = (t(i) & entryMask).toInt
+            i += 1
+            if (ords(e) != cOrd) {
+              var d = 0
+              var k = 0
+              while (k < w) { d += java.lang.Long.bitCount(hashes(e * w + k) ^ c(k)); k += 1 }
+              if (d <= (if (low(e) || cLow) 0 else threshold))
+                pending = (math.min(ords(e), cOrd), math.max(ords(e), cOrd), d)
+            }
+          } else if (rows.hasNext) {
+            val r = rows.next()
+            run = key(r.getInt(0), r.getLong(1))
+            i = lowerBound(t, run)
+            if (i < t.length && (t(i) & ~entryMask) == run) {
+              cOrd = r.getLong(2)
+              cLow = r.getBoolean(3)
+              var k = 0
+              while (k < w) { c(k) = r.getLong(4 + k); k += 1 }
+            }
+          } else return false
+        }
+        true
       }
 
-    // per-side limit: either side low-confidence ⇒ exact only (F2)
-    // sort-merge, as in BandJoin.exactEdges: it keeps the planner from
-    // broadcasting the under-estimated explode and spills, where a hash
-    // build over the probe ball (~17.5k rows per delta image at t = 40)
-    // fails for a large delta
-    val repEdges = prb.hint("shuffle_merge")
-      .join(idxSide.unionByName(indexSide(bandRows(delta, chunkBits, algo))),
-        Seq("band_idx", "band_val"))
-      .where(col("q_ord") =!= col("c_ord"))
-      .withColumn("dist", BandJoin.hammingCols(vCols, cNames.map(col)))
-      .where(col("dist") <=
-        when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
-      .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
-        greatest(col("q_ord"), col("c_ord")).as("rb"))
-      .agg(min("dist").as("dist"))
-    BandJoin.expandReps(repEdges, mem)
+      def next(): (Long, Long, Int) = {
+        if (!hasNext) throw new NoSuchElementException
+        val p = pending
+        pending = null
+        p
+      }
+    }
+
+  private def lowerBound(t: Array[Long], x: Long): Int = {
+    var (lo, hi) = (0, t.length)
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (t(mid) < x) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+}
+
+private[graft] object ProbeBall {
+  /** Bits of a table entry index, with the packed word's budget enforced:
+    * band_idx bits + chunk bits + entry bits ≤ 64. */
+  def entryBits(numChunks: Int, chunkBits: Int, entries: Int): Int = {
+    def bits(n: Long): Int = 64 - java.lang.Long.numberOfLeadingZeros(math.max(n - 1, 1L))
+    val eb = bits(entries.toLong)
+    require(bits(numChunks.toLong) + chunkBits + eb <= 64,
+      s"probe ball key: ${bits(numChunks.toLong)} band_idx bits + $chunkBits chunk " +
+        s"bits + $eb entry bits ($entries entries) exceed 64")
+    eb
   }
 }

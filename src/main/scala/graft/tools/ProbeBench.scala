@@ -8,24 +8,21 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
- * Incremental-probe scaling evidence (round-3 VERDICT #1): the one
- * O(corpus) term left in the delta path was the probe's index-side
- * scan+shuffle. BandIndex.probe now semi-filters the index with a
- * broadcast of the delta's probed keys whenever that key set is provably
- * sparse in the band-key space — this bench measures the SAME fixed
+ * Incremental-probe scaling evidence (round-3 VERDICT #1): the SAME fixed
  * delta probed against a corpus index at 1× and 10× size, at two
- * thresholds:
+ * thresholds, one per [[BandIndex.probe]] path:
  *
  *  - a daily-ops threshold whose chunk tolerance is 0 (threshold <
- *    numChunks): probe keys are sparse, the semi-filter engages, and the
- *    index exchange is O(touched buckets) — the wall should stay ~flat
- *    across 10× corpus growth (the scan itself is a columnar read).
- *  - the reference-default threshold 40 (tol 2, 137 masks/chunk): the
- *    probe ball covers most of the 16-bit key space, so EVERY bucket
- *    genuinely holds candidates — the reference's LMDB point lookups
- *    touch the same entries — and the cost is collision-volume-bound,
- *    growing with corpus on any engine. Reported for honesty, not as a
- *    regression.
+ *    numChunks): the probe ball is one key per chunk and variant, within
+ *    [[BandIndex.MaxProbeBallDraws]], so it is probed IN MEMORY — each
+ *    index-scan task looks its rows up in the broadcast ball and nothing
+ *    but verified pairs is exchanged; the wall should grow only with the
+ *    columnar index scan.
+ *  - the reference-default threshold 40 (tol 2, 137 masks/chunk): at 200
+ *    delta bases the ball is ≈ 1.1×10⁷ draws, past the budget, so it is
+ *    exploded and sort-merge joined with the index; the cost is
+ *    collision-volume-bound and grows with the corpus on any engine.
+ *    Reported for honesty, not as a regression.
  *
  * Usage: runMain graft.tools.ProbeBench [corpusDir] [smallBases] [deltaBases] [cpus]
  * Defaults: the cached bench corpus (40k bases, generated into
@@ -60,7 +57,7 @@ object ProbeBench {
       val idxRows = BandIndex.read(spark, idxPath).count()
       Seq(12, Pipeline.DefaultThreshold).map { thr =>
         // min-of-2 (shared host): each shot is the FULL probe incl. the
-        // key-set build, semi-filter decision, join, verify, dedup
+        // path decision, lookup or join, verify, dedup
         val (edges, sec) = (1 to 2).map(_ =>
           Harness.timed(BandIndex.probe(spark, idxPath, deltaSig, thr).count())).minBy(_._2)
         s"${label}_t$thr" -> Harness.Obj("probe_sec" -> Harness.dec(sec, 2),

@@ -1,9 +1,11 @@
 package graft
 
 import graft.kernel.{Pdq, SignatureKernel}
-import graft.lsh.BandIndex
+import graft.lsh.{BandIndex, BandJoin, ProbeBall}
 import graft.model.{ImageRow, Signature}
 import graft.synth.Synth
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.security.MessageDigest
@@ -45,6 +47,35 @@ class BandIndexSpec extends AnyFunSuite {
     } yield (math.min(d.ord, c.ord), math.max(d.ord, c.ord)) -> dc)
       .groupMapReduce(_._1)(_._2)(math.min)
 
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Probe edges as (a, b, dist), and whether the executed plan sort-merge
+    * joined the band key — the fallback path; the in-memory path has no
+    * band join at all. */
+  private def probeRun(path: String, thr: Int, d: Seq[Signature] = delta)
+      : (Set[(Long, Long, Int)], Boolean) = {
+    import spark.implicits._
+    val df = BandIndex.probe(spark, path, d.toDS().toDF(), thr)
+    val edges = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val bandSmj = Plans.collect(df.queryExecution.executedPlan) {
+      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band_idx")) => j
+    }.nonEmpty
+    (edges, bandSmj)
+  }
+
+  /** The probe ball's draws over the distinct (hash, variants, low_conf)
+    * representatives of `d`'s hash-carrying rows. */
+  private def ballDraws(numChunks: Int, tol: Int, chunkBits: Int, phash: Boolean = false,
+                        d: Seq[Signature] = delta): Long = {
+    val reps = d.filter(_.has_pdq).map(s =>
+      if (phash) (Seq(s.phash64), s.phash_variants.toSeq.map(Seq(_)), s.low_conf)
+      else (Seq(s.h0, s.h1, s.h2, s.h3), s.variants.toSeq.map(_.toSeq), s.low_conf)).distinct
+    BandIndex.ballDraws(reps.iterator.map(r => (r._2.size, r._3)), numChunks,
+      BandJoin.maskCount(tol, chunkBits))
+  }
+
+  private def asTriples(m: Map[(Long, Long), Int]) = m.map { case ((a, b), d) => (a, b, d) }.toSet
+
   test("index probe == brute-force per-side-limit verification") {
     import spark.implicits._
     // plus byte-identical copies of a confident and a low-confidence delta
@@ -58,8 +89,11 @@ class BandIndexSpec extends AnyFunSuite {
     val withCopies = delta ++ copies
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex").toString
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index")
-    val got = BandIndex.probe(spark, s"$dir/index", withCopies.toDS().toDF(), Threshold)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    // the copies collapse into their sources' reps: the ball is the delta's
+    assert(ballDraws(16, 2, 16, d = withCopies) == 649344L)
+    val (edges, bandSmj) = probeRun(s"$dir/index", Threshold, withCopies)
+    assert(!bandSmj, "a ball within the budget took the sort-merge join")
+    val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
 
     val want = oracle(Threshold, pdqDist, withCopies)
 
@@ -207,13 +241,24 @@ class BandIndexSpec extends AnyFunSuite {
     BandIndex.build(corpus.toDS().toDF(), s"$d16/index")
     BandIndex.build(corpus.toDS().toDF(), s"$d32/index", chunkBits = 32)
     assert(BandIndex.chunkBitsOf(spark, s"$d32/index") == 32)
-    def probe(p: String) = BandIndex.probe(spark, p, delta.toDS().toDF(), thr)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val e16 = probe(s"$d16/index")
-    val e32 = probe(s"$d32/index")
+    // 16-bit: V(1,16) = 17 masks, in memory; 32-bit: V(3,32) = 5,489
+    // masks, past the budget — so this is also the cross-path check
+    assert(ballDraws(16, 1, 16) == 81024L)
+    assert(ballDraws(8, 3, 32) == 12998208L)
+    val (e16, smj16) = probeRun(s"$d16/index", thr)
+    val (e32, smj32) = probeRun(s"$d32/index", thr)
+    assert(!smj16 && smj32, s"paths: 16-bit sort-merge $smj16, 32-bit sort-merge $smj32")
     assert(e16 == e32, s"width changed probe edges: only16=${(e16 -- e32).take(5)} " +
       s"only32=${(e32 -- e16).take(5)}")
+    assert(e16 == asTriples(oracle(thr, pdqDist)), "probe edges differ from brute force")
     assert(e16.nonEmpty, "no probe edges at threshold 24 — corpus too sparse")
+    // threshold 16: V(2,32) = 529 masks keep the 32-bit ball in memory,
+    // with its band_val read as long
+    assert(ballDraws(8, 2, 32) <= BandIndex.MaxProbeBallDraws)
+    val (m16, _) = probeRun(s"$d16/index", 16)
+    val (m32, smj32m) = probeRun(s"$d32/index", 16)
+    assert(!smj32m, "32-bit ball within the budget took the sort-merge join")
+    assert(m32 == m16 && m32 == asTriples(oracle(16, pdqDist)), "32-bit in-memory edges differ")
     // infeasible combination fails fast, arithmetically (no mask alloc)
     val err = intercept[IllegalArgumentException] {
       BandIndex.probe(spark, s"$d32/index", delta.toDS().toDF(), Threshold)
@@ -232,8 +277,11 @@ class BandIndexSpec extends AnyFunSuite {
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index",
       chunkBits = graft.lsh.BandJoin64.BitsPerChunk, algo = BandIndex.AlgoPhash64)
     assert(BandIndex.algoOf(spark, s"$dir/index") == BandIndex.AlgoPhash64)
-    val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), thr)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    // the u64 key collapses the delta to 38 reps (PDQ's 41): 34 × 8·8·9 + 4 × 8·8
+    assert(ballDraws(8, 1, 8, phash = true) == 19840L)
+    val (edges, bandSmj) = probeRun(s"$dir/index", thr)
+    assert(!bandSmj, "8-bit u64 ball took the sort-merge join")
+    val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
 
     val want = oracle(thr, (d, c) =>
       d.phash_variants.map(v => java.lang.Long.bitCount(v ^ c.phash64)).min)
@@ -247,21 +295,22 @@ class BandIndexSpec extends AnyFunSuite {
     val d16 = java.nio.file.Files.createTempDirectory("graft-bandindex-ph16").toString
     BandIndex.build(corpus.toDS().toDF(), s"$d16/index",
       chunkBits = 16, algo = BandIndex.AlgoPhash64)
-    val got16 = BandIndex.probe(spark, s"$d16/index", delta.toDS().toDF(), thr)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(got16 == got, "u64 chunk width changed probe edges")
+    assert(ballDraws(4, 3, 16, phash = true) == 758464L)
+    val (edges16, bandSmj16) = probeRun(s"$d16/index", thr)
+    assert(!bandSmj16, "16-bit u64 ball took the sort-merge join")
+    assert(edges16 == edges, "u64 chunk width changed probe edges")
   }
 
-  test("tol-0 probe (daily-ops threshold): semi-filtered index == brute force") {
+  test("tol-0 probe (daily-ops threshold): in-memory probe == brute force") {
     import spark.implicits._
-    // threshold < numChunks ⇒ tol 0 ⇒ one probe key per chunk: the probed
-    // key set is provably sparse, the broadcast semi-filter engages, and
-    // the index exchange is O(touched buckets) — results must be identical
+    // threshold < numChunks ⇒ tol 0 ⇒ one probe key per chunk and variant
     val thr = 8
     val dir = java.nio.file.Files.createTempDirectory("graft-bandindex-t0").toString
     BandIndex.build(corpus.toDS().toDF(), s"$dir/index")
-    val got = BandIndex.probe(spark, s"$dir/index", delta.toDS().toDF(), thr)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    assert(ballDraws(16, 0, 16) == 5248L)
+    val (edges, bandSmj) = probeRun(s"$dir/index", thr)
+    assert(!bandSmj, "tol-0 ball took the sort-merge join")
+    val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
     val want = oracle(thr, pdqDist)
     assert(got == want,
       s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
@@ -283,5 +332,14 @@ class BandIndexSpec extends AnyFunSuite {
     val avgSpan = stats.map(r => r.getInt(2) - r.getInt(1) + 1).sum.toDouble / stats.length
     assert(avgSpan <= 4.0,
       f"files span $avgSpan%.1f of 16 band indexes on average — not range-clustered")
+  }
+
+  test("probe ball key: the packed word's bit budget is enforced at 32-bit chunks") {
+    // 8 × 32-bit chunks: 3 band_idx bits + 32 chunk bits leave 29 entry bits
+    assert(ProbeBall.entryBits(8, 32, 1 << 29) == 29)
+    val err = intercept[IllegalArgumentException](ProbeBall.entryBits(8, 32, (1 << 29) + 1))
+    assert(err.getMessage.contains("exceed 64"), err.getMessage)
+    // the largest ball the budget admits at that width fits with room
+    assert(ProbeBall.entryBits(8, 32, (BandIndex.MaxProbeBallDraws / 8).toInt) <= 29)
   }
 }

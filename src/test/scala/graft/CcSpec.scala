@@ -66,4 +66,38 @@ class CcSpec extends AnyFunSuite {
     val edges = (0L until 63L).map(i => (i, i + 1))
     check(64, edges)
   }
+
+  test("a giant component is logged by either path, before any analytics") {
+    import spark.implicits._
+    val logger = org.apache.logging.log4j.core.LoggerContext.getContext(false)
+      .getLogger(ConnectedComponents.getClass.getName)
+    val warned = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "cc-giant", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      // a 6-member chain plus a pair: only the chain reaches the cap of 6
+      val df = (Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)) :+ ((8L, 9L)))
+        .toDF("a", "b")
+      for (cap <- Seq(0L, Long.MaxValue)) {
+        warned.clear()
+        ConnectedComponents.run(spark, df, driverPathMaxEdges = cap, giantWarnSize = 6)
+        val msgs = warned.toArray.map(_.toString).filter(_.contains("giant components"))
+        assert(msgs.length == 1 && msgs.head.contains("comp=0 size=6") &&
+          !msgs.head.contains("comp=8"), s"cap=$cap: ${warned.toArray.toSeq}")
+        warned.clear()
+        ConnectedComponents.run(spark, df, driverPathMaxEdges = cap, giantWarnSize = 7)
+        assert(!warned.toArray.exists(_.toString.contains("giant components")),
+          s"cap=$cap warned below the cap: ${warned.toArray.toSeq}")
+      }
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }

@@ -299,4 +299,25 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.run(spark, images, s"$dir/work", Threshold).count()
     assert(comparisons() == Seq(edgeRows.head.toDouble), "resumed run appended comparisons")
   }
+
+  test("_lineage_files is each stage's per-file row count (footers == input_file_name count)") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.input_file_name
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage-files").toString
+    val images = rows.take(30)
+      .map(r => (r.image_id, r.bytes, r.w, r.h, r.fmt, r.caption, r.phash))
+      .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+    Pipeline.run(spark, images, s"$dir/work", Threshold).count()
+    val got = spark.read.parquet(s"$dir/work/_lineage_files")
+      .as[(String, String, Long)].collect().toSet
+    val stages = spark.read.parquet(s"$dir/work/_lineage").select("stage").as[String].collect()
+    assert(stages.toSet == Set("signatures", "edges", "components", "groups"), stages.toSeq)
+    // the files' row counts by a scan of each stage, keyed by leaf name
+    val want = stages.flatMap { st =>
+      spark.read.parquet(s"$dir/work/$st").groupBy(input_file_name()).count()
+        .as[(String, Long)].collect()
+        .map { case (f, n) => (st, f.substring(f.lastIndexOf('/') + 1), n) }
+    }.toSet
+    assert(got == want, s"only lineage: ${got -- want}; only scan: ${want -- got}")
+  }
 }

@@ -53,4 +53,22 @@ class StoreSpec extends AnyFunSuite {
     })
     assert(!ran, "the stage was computed although its commit state was unknown")
   }
+
+  test("a stage reads back with the schema an inferred read gives") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft-ckpt-schema").toString
+    val ckpt = new Ckpt(spark, dir)
+    // non-nullable primitives, nested arrays, binary, a struct and a map
+    val df = Seq((1L, "a", Array(Array(1L, 2L)), Array[Byte](1, 2), true, 1.5))
+      .toDF("ord", "s", "variants", "bin", "flag", "x")
+      .withColumn("st", struct(col("ord"), col("s")))
+      .withColumn("m", map(col("s"), col("ord")))
+    val (out, hit) = ckpt.stage("s")(df)
+    assert(!hit)
+    val inferred = spark.read.parquet(s"$dir/s")
+    assert(out.schema == inferred.schema, s"${out.schema.treeString} vs ${inferred.schema.treeString}")
+    val (resumed, hit2) = ckpt.stage("s")(fail("a committed stage was recomputed"))
+    assert(hit2 && resumed.schema == inferred.schema)
+  }
 }
