@@ -98,9 +98,8 @@ object CorpusState {
 
   /** Write-once corpus-level flag marker (first writer wins; a later run
     * requesting a DIFFERENT value is refused): grouping semantics like
-    * content-star are a property of the corpus CHAIN, not of one run —
-    * the same contract `_meta_algo` enforces for the index. A pre-flag
-    * corpus adopts the first post-flag run's value. */
+    * content-star are a property of the corpus CHAIN, not of one run. A
+    * pre-flag corpus adopts the first post-flag run's value. */
   def stampFlag(spark: SparkSession, workDir: String, name: String,
                 value: String): Unit = {
     val prev = Store.writeOnce(spark, s"$workDir/_meta_$name", value)
@@ -112,21 +111,6 @@ object CorpusState {
   /** Current value of a write-once corpus flag, if stamped. */
   def flag(spark: SparkSession, workDir: String, name: String): Option[String] =
     Store.read(spark, s"$workDir/_meta_$name")
-
-  /** High-water-mark marker: monotonically raise `name` to `value`.
-    * Read-then-overwrite is safe here because the version-marker protocol
-    * refuses concurrent deltas (single writer per chain); a failed run
-    * leaving a higher mark errs in the safe direction (it only ever
-    * PREVENTS an index rebuild, never forces one). */
-  def bumpHwm(spark: SparkSession, workDir: String, name: String,
-              value: Int): Unit = {
-    val p = s"$workDir/_meta_$name"
-    val cur = Store.read(spark, p).flatMap(_.trim.toIntOption)
-    if (cur.forall(_ < value)) Store.write(spark, p, value.toString, overwrite = true)
-  }
-
-  def hwm(spark: SparkSession, workDir: String, name: String): Option[Int] =
-    Store.read(spark, s"$workDir/_meta_$name").flatMap(_.trim.toIntOption)
 
   /** Latest version ≤ v carrying a compaction snapshot, if any. */
   private def latestSnapshot(spark: SparkSession, corpusWork: String,
@@ -215,32 +199,31 @@ object CorpusState {
  *
  * Work is delta-proportional in BOTH compute and writes:
  *   1. kernel only on delta rows (ords offset past the corpus max)
- *   2. every delta edge from ONE probe of the persisted range-partitioned
- *      [[BandIndex]] (probe-side dihedral + multi-probe expansion on the
- *      small delta only); the delta's own radius-0 keys join the index
- *      side, so delta-internal pairs are probed in both directions like
- *      the batch join's. Delta → corpus pairs are probed in ONE direction
- *      only (delta variants vs stored corpus hashes), which is not exact:
- *      PDQ variants are re-binarised from sign-flipped DCT coefficients
- *      against their own median (Pdq.bitRows), not a bit-isometry of the
- *      hash, so dist(v(a), b) ≠ dist(a, v(b)) in general — a pair
- *      only the corpus side's variants would find is missed (BandJoin's
- *      symmetric-probing note). Measured on a 1,000-base Synth corpus
- *      with a one-third delta: 0 of 2,385 batch corpus × delta edges
- *      missed, identical components (CHANGES.md)
+ *   2. every delta edge from ONE [[BandIndex.probe]] of the corpus
+ *      signatures the run already reads (probe-side dihedral + multi-probe
+ *      expansion on the small delta only; the scanned side is one row per
+ *      image, its chunks cut in the scan task); the delta's own stored
+ *      hashes join the scanned side, so delta-internal pairs are probed in
+ *      both directions like the batch join's. Delta → corpus pairs are
+ *      probed in ONE direction only (delta variants vs stored corpus
+ *      hashes), which is not exact: PDQ variants are re-binarised from
+ *      sign-flipped DCT coefficients against their own median
+ *      (Pdq.bitRows), not a bit-isometry of the hash, so dist(v(a), b) ≠
+ *      dist(a, v(b)) in general — a pair only the corpus side's variants
+ *      would find is missed (BandJoin's symmetric-probing note). Measured
+ *      on a 1,000-base Synth corpus with a one-third delta: 0 of 2,385
+ *      batch corpus × delta edges missed, identical components
+ *      (CHANGES.md)
  *   3. ONLY the existing components touched by a delta edge re-enter
  *      connected components (as comp→member star edges), so merged labels
  *      stay min-ord-consistent with a full batch run while CC sees an
  *      affected-subgraph-sized input, not the corpus
  *   4. the state commit writes the delta signatures + the re-labeled
- *      patch for affected components ([[CorpusState]] merge-on-read),
- *      and the delta's band keys append to the index as an atomic
- *      segment — nothing O(corpus) is rewritten
- *
- * Consistency audit on every run: the index's max indexed ord must never
- * exceed the signatures' max ord (refused as corruption); an index LAGGING
- * the signatures (crash between state commit and index append) is
- * self-healed by re-appending the missing ord range.
+ *      patch for affected components ([[CorpusState]] merge-on-read) —
+ *      nothing O(corpus) is rewritten, and the signatures are the only
+ *      copy of the corpus hashes, so there is no second store to keep in
+ *      step with them (a `band_index*` dir an older build left under the
+ *      corpus work dir stays on disk, unread)
  *
  * All stages checkpoint through [[Ckpt]] — a crashed incremental run
  * resumes idempotently like the batch pipeline.
@@ -257,30 +240,22 @@ object Incremental {
     * shuffled join is the right plan anyway. */
   final val MaxContentHashBroadcast = 100000L
 
-  /** Filesystem-safe idempotency token for this delta (segment + marker). */
-  private def deltaToken(deltaWork: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    md.digest(deltaWork.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map("%02x".format(_)).mkString
-  }
-
   /** When `fullOutput` (default), the returned frame re-assembles EVERY
     * group in corpus ∪ delta (the reference's report-everything UX, and
     * what the equivalence specs compare). At 10¹²-scale pass false to
     * assemble only the groups the delta touched — the state commit is
     * identical either way. */
-  /** `compactEvery`: fold merge-on-read state + index segments into a
-    * snapshot every K committed versions (0 disables). Keeps the layer
-    * stack shallow in steady-state ingest without a manual maintenance
-    * call — the 32-layer read-path warning never fires in normal
-    * operation (round-2 VERDICT #7). */
+  /** `compactEvery`: fold merge-on-read state into a snapshot every K
+    * committed versions (0 disables). Keeps the layer stack shallow in
+    * steady-state ingest without a manual maintenance call — the
+    * 32-layer read-path warning never fires in normal operation (round-2
+    * VERDICT #7). */
   /** `algorithm` selects the hash the candidate probe bands on — "pdq"
     * (256-bit, reference default) or "phash" (64-bit DCT pHash,
-    * HammingHash<u64> semantics). The index is built algorithm-stamped
-    * ([[BandIndex]] `_meta_algo`); probing a corpus whose index was built
-    * for the other algorithm is refused (the band keys are incomparable).
-    * Algorithm and `threshold` resolve exactly as in [[Pipeline.run]],
-    * before anything is written. */
+    * HammingHash<u64> semantics); the corpus signatures carry both
+    * hashes, so either algorithm probes any corpus. Algorithm and
+    * `threshold` resolve exactly as in [[Pipeline.run]], before anything
+    * is written. */
   /** `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
     * counterpart — byte-identical files (including UNDECODABLE ones)
     * group across the corpus/delta boundary via content-hash star edges.
@@ -296,11 +271,6 @@ object Incremental {
           contentStar: Boolean = false): DataFrame = {
     val layout = HashLayout.forAlgorithm(algorithm)
     val thr = layout.threshold(threshold)
-    // record the chain's operating-threshold high-water mark so index
-    // maintenance can never widen past what this chain actually probes at
-    // (a 32-bit index cannot serve thresholds > 31; MaintenanceCli gates
-    // its rebuild on max(arg, this mark))
-    CorpusState.bumpHwm(spark, corpusWork, s"thr_hwm_${layout.algo}", thr)
     val ckpt = new Ckpt(spark, deltaWork)
 
     // Pin the base version at FIRST start of this deltaWork: a resumed run
@@ -312,7 +282,7 @@ object Incremental {
 
     // the content-star setting must match the corpus chain's (a corpus
     // built without it has no corpus-internal content groups for the
-    // cross-edge star to lean on) — same write-once contract as _meta_algo.
+    // cross-edge star to lean on) — a write-once stamp.
     // A PRE-STAMP chain (built before the flag existed) must not silently
     // write-once-lock whatever this run happened to request (round-4
     // ADVICE #1): derive the adopted value from evidence first — the
@@ -344,51 +314,16 @@ object Incremental {
     CorpusState.stampFlag(spark, corpusWork, "content_star", contentStar.toString)
 
     val corpusSig = CorpusState.readSignatures(spark, corpusWork, baseVer)
-    // algorithm-stamped index path: a corpus can carry BOTH a pdq and a
-    // phash index side by side (the reference's LMDB holds both hash
-    // columns per file, scanner.rs:1251-1294)
-    val indexPath = s"$corpusWork/${layout.indexDir}"
-    if (!BandIndex.exists(spark, indexPath)) {
-      // index chunk width: wide only when the corpus is past the parity
-      // width's degeneracy cutoff AND the probe ball still fits the mask
-      // cap at this threshold (radius-0 index ⇒ whole ball probe-side;
-      // 32-bit/256 needs threshold ≤ 31). Same auto rule as the batch joins.
-      val nConf = corpusSig.filter(col("has_pdq") && !col("low_conf")).count()
-      BandIndex.build(corpusSig, indexPath,
-        chunkBits = BandIndex.autoBuildBits(layout.algo, nConf, thr),
-        algo = layout.algo)
+    // one scan: the max ord (where delta ords start; -1 on an empty
+    // corpus) and the confident-row count, which picks the probe's chunk
+    // width by the batch joins' auto rule (wide only past the parity
+    // width's degeneracy cutoff, and only where the ball fits the mask cap)
+    val (maxOrd, chunkBits) = {
+      val r = corpusSig.agg(max("ord"),
+        count(when(col("has_pdq") && !col("low_conf"), true))).head()
+      (if (r.isNullAt(0)) -1L else r.getLong(0),
+        BandIndex.autoBuildBits(layout.algo, r.getLong(1), thr))
     }
-    require(BandIndex.algoOf(spark, indexPath) == layout.algo,
-      s"corpus index at $indexPath was built for " +
-        s"${BandIndex.algoOf(spark, indexPath)} — cannot probe as ${layout.algo}")
-
-    // max ord (where delta ords start; -1 on an empty corpus) and the
-    // has_pdq max ord (the audit ceiling below), from one scan
-    def maxOrds(sig: DataFrame): (Long, Long) = {
-      val r = sig.agg(max("ord"), max(when(col("has_pdq"), col("ord")))).head()
-      (if (r.isNullAt(0)) -1L else r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-    }
-    val (maxOrd, baseHashMax) = maxOrds(corpusSig)
-
-    // index/signature consistency audit against the CURRENT state version
-    // (a resumed run has already advanced the state + index past its own
-    // pinned base — that is consistent, not corrupt)
-    val curVer = CorpusState.version(spark, corpusWork)
-    val curSig = if (curVer == baseVer) corpusSig
-      else CorpusState.readSignatures(spark, corpusWork, curVer)
-    // audit ceiling over has_pdq rows ONLY: the index never contains
-    // hash-less rows, so a corpus whose highest ord is a decode failure
-    // would otherwise read as "index lagging" forever and append an empty
-    // seg_repair_* every run
-    val curMaxOrd = if (curVer == baseVer) baseHashMax else maxOrds(curSig)._2
-    val idxMax = BandIndex.maxOrd(spark, indexPath)
-    require(idxMax <= curMaxOrd,
-      s"band index max ord $idxMax exceeds signatures max ord $curMaxOrd — " +
-        s"the index contains rows missing from corpus state v$curVer " +
-        "(corrupt chained run); rebuild the index or restore the state")
-    if (idxMax < curMaxOrd)
-      BandIndex.append(curSig.where(col("ord") > idxMax), indexPath,
-        segName = s"seg_repair_$curMaxOrd")
 
     val (deltaSig, _) = ckpt.stage("delta_signatures")(
       Pipeline.signatures(spark, deltaImages, maxOrd + 1, known = Some(corpusSig)))
@@ -396,7 +331,7 @@ object Incremental {
     // every edge a delta row has — to the corpus AND inside the delta —
     // comes from the one probe; the stage keeps its historical name
     val (deltaEdges, _) = ckpt.stage("delta_cross_edges")({
-      val probed = BandIndex.probe(spark, indexPath, deltaSig, thr)
+      val probed = BandIndex.probe(corpusSig, deltaSig, thr, chunkBits, layout)
       if (!contentStar) probed
       else {
         // byte identity: link each delta row to the MIN ord holding its
@@ -406,8 +341,8 @@ object Incremental {
         // The corpus scan is semi-filtered by a broadcast of the delta's
         // DISTINCT hash set when small — gated on the distinct count
         // (what is actually broadcast) with a cap sized for 32-byte
-        // hashes, not BandIndex's 12-byte band keys. Past it, plain
-        // shuffled join (the right plan for corpus-sized deltas).
+        // hashes. Past it, plain shuffled join (the right plan for
+        // corpus-sized deltas).
         val deltaHashes = deltaSig.select("content_hash").distinct()
           .localCheckpoint() // one materialization: count + broadcast
         val corpusSide0 = corpusSig.select(col("content_hash"), col("ord"))
@@ -463,11 +398,7 @@ object Incremental {
     val (grouped, _) = ckpt.stage("groups")(
       Pipeline.groups(spark, allSig, comps, registryPath))
 
-    // --- commit the DELTA-SIZED state as the next corpus version, then
-    // append the delta's band keys as an atomic segment. Order matters
-    // for the audit above: state first (index may lag → self-heals),
-    // never the reverse (index leading state is unrecoverable without a
-    // rebuild).
+    // --- commit the DELTA-SIZED state as the next corpus version
     val newVer = baseVer + 1
     if (CorpusState.owner(spark, corpusWork, newVer).isEmpty) {
       deltaSig.write.mode(SaveMode.Overwrite)
@@ -476,25 +407,13 @@ object Incremental {
         .parquet(CorpusState.compPatchPath(corpusWork, newVer))
     }
     CorpusState.commit(spark, corpusWork, newVer, deltaWork)
-    // Re-check the index ceiling at append time: if this run crashed after
-    // its state commit and a LATER run's audit already self-healed the gap
-    // (seg_repair_*), the delta's ords are in the index under the repair
-    // segment — appending them again under the canonical name would break
-    // the keys-per-ord invariant (probe stays correct via groupBy/min, but
-    // probe cost inflates until compact). Only ords above the current
-    // ceiling append; ord assignment is monotone so a covering max means
-    // covered rows.
-    val coveredOrd = BandIndex.maxOrd(spark, indexPath)
-    BandIndex.append(deltaSig.where(col("ord") > coveredOrd), indexPath,
-      segName = s"seg_delta_${deltaToken(deltaWork)}")
 
     // periodic maintenance rides the ingest path: snapshot the merged
-    // state, expire folded versions, and fold index segments. All three
-    // are idempotent, so a resumed run re-entering here is harmless.
+    // state and expire folded versions. Both are idempotent, so a resumed
+    // run re-entering here is harmless.
     if (compactEvery > 0 && newVer % compactEvery == 0) {
       CorpusState.compact(spark, corpusWork)
       CorpusState.gc(spark, corpusWork)
-      BandIndex.compact(spark, indexPath)
     }
 
     ckpt.flush()

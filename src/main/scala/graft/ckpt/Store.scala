@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /**
- * The one commit protocol of every persisted store ([[graft.lsh.BandIndex]],
+ * The one commit protocol of every persisted store ([[graft.lsh.BandIndex]]'s export,
  * [[graft.groups.GroupRegistry]], [[graft.CorpusState]], [[Ckpt]], the
  * incremental run's `_base_version` pin):
  *
@@ -43,13 +43,6 @@ private[graft] object Store {
     }
   }
 
-  def write(spark: SparkSession, p: String, value: String, overwrite: Boolean): Unit = {
-    val f = fs(spark, p)
-    f.mkdirs(new Path(p).getParent)
-    val out = f.create(new Path(p), overwrite)
-    try out.write(value.getBytes(UTF_8)) finally out.close()
-  }
-
   /** Write-once marker: the committed value at `p` — the existing one, or
     * else `value`, created exclusively so two writers can't both believe
     * they won. A lost create race returns the winner's value; a failed
@@ -59,7 +52,13 @@ private[graft] object Store {
   def writeOnce(spark: SparkSession, p: String, value: => String): String =
     read(spark, p).getOrElse {
       val v = value
-      try { write(spark, p, v, overwrite = false); v }
+      try {
+        val f = fs(spark, p)
+        f.mkdirs(new Path(p).getParent)
+        val out = f.create(new Path(p), false)
+        try out.write(v.getBytes(UTF_8)) finally out.close()
+        v
+      }
       catch {
         case e: java.io.IOException =>
           read(spark, p).getOrElse(throw new IllegalStateException(
@@ -113,24 +112,17 @@ private[graft] object Store {
     }
   }
 
-  /** Fold every segment under `dir` into one named by [[compactedSegment]]:
-    * `merge` maps the union of the inputs to the merged rows.
-    * `beforeDelete(name, inputs)` runs once the merged segment is committed
-    * and before any input is deleted. A crash between commit and deletes
-    * leaves rows twice, which every reader resolves and the next
-    * compaction folds. Returns the merged name and the inputs it subsumed,
-    * or None when there is at most one segment. */
-  def compactSegments(spark: SparkSession, dir: String)(merge: DataFrame => DataFrame,
-      beforeDelete: (String, Seq[String]) => Unit = (_, _) => ()): Option[(String, Seq[String])] = {
+  /** Fold every segment under `dir` into one named by [[compactedSegment]]
+    * (a no-op with at most one segment): `merge` maps the union of the
+    * inputs to the merged rows, which commit before any input is deleted.
+    * A crash between commit and deletes leaves rows twice, which every
+    * reader resolves and the next compaction folds. */
+  def compactSegments(spark: SparkSession, dir: String)(merge: DataFrame => DataFrame): Unit = {
     val inputs = segments(spark, dir)
-    if (inputs.size <= 1) None
-    else {
-      val name = compactedSegment(inputs)
-      commitSegment(spark, dir, name)(merge(spark.read.parquet(inputs: _*)))
-      beforeDelete(name, inputs)
+    if (inputs.size > 1) {
+      commitSegment(spark, dir, compactedSegment(inputs))(merge(spark.read.parquet(inputs: _*)))
       val f = fs(spark, dir)
       inputs.foreach(s => f.delete(new Path(s), true))
-      Some(name -> inputs)
     }
   }
 

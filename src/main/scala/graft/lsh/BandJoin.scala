@@ -375,10 +375,14 @@ object BandJoin {
     * the min ord, before the ×(numChunks·masks) band explode; collision
     * volume falls with the SQUARE of the distinct ratio. Returns the reps
     * (ord + `keys`) and the (rep, ord) membership of every row, from which
-    * [[expandReps]] rebuilds the member edges. */
-  private[lsh] def collapse(rows: DataFrame, keys: Seq[Column]): (DataFrame, DataFrame) = {
-    val members = rows.select(col("ord") +: keys: _*)
-      .withColumn("rep", min("ord").over(Window.partitionBy(keys: _*)))
+    * [[expandReps]] rebuilds the member edges. Both derive from one
+    * membership frame, passed through `materialize` first (a caller that
+    * reads both more than once checkpoints it there). */
+  private[lsh] def collapse(rows: DataFrame, keys: Seq[Column],
+                            materialize: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val members = materialize(rows.select(col("ord") +: keys: _*)
+      .withColumn("rep", min("ord").over(Window.partitionBy(keys: _*))))
     (members.where(col("ord") === col("rep")).drop("rep"),
       members.select(col("rep"), col("ord")))
   }
@@ -389,8 +393,8 @@ object BandJoin {
     * variants hold the hash itself — PDQ's identity variant,
     * PHash.dihedral(h)(0) == h); cross-cluster member pairs inherit their
     * rep pair's dist because dist is hash-determined. An endpoint that is
-    * no rep in `mem` (a persisted-index row beside a collapsed delta)
-    * stands for itself. */
+    * no rep in `mem` (a corpus row beside a collapsed delta) stands for
+    * itself. */
   private[lsh] def expandReps(repEdges: DataFrame, mem: DataFrame): DataFrame = {
     def side(rep: String, ord: String) = mem.select(col("rep").as(rep), col("ord").as(ord))
     val intra = side("rep", "a").join(side("rep", "b"), "rep")
@@ -540,15 +544,14 @@ object BandJoin {
   * `variantsCol` its probe-side dihedral variants (an array of
   * `hashCols.size`-long arrays, or of plain longs for a one-long hash);
   * chunks are `parityBits` wide (reference parity) up to `wideCutoff`
-  * confident rows and `wideBits` past it. `algo` is the name a persisted
-  * [[BandIndex]] records and `name` the one a run is asked for; a run's
-  * threshold defaults to `defaultThreshold` and may not exceed
-  * `maxThreshold`; the corpus's persisted index lives in `indexDir`. */
+  * confident rows and `wideBits` past it. `algo` is the name a
+  * [[BandIndex]] export records and `name` the one a run is asked for; a
+  * run's threshold defaults to `defaultThreshold` and may not exceed
+  * `maxThreshold`. */
 final case class HashLayout(algo: String, name: String, hashCols: Seq[String],
                             variantsCol: String, parityBits: Int,
                             wideBits: Int, wideCutoff: Long,
-                            defaultThreshold: Int, maxThreshold: Int,
-                            indexDir: String) {
+                            defaultThreshold: Int, maxThreshold: Int) {
   def numChunks(chunkBits: Int): Int = 64 * hashCols.size / chunkBits
 
   def autoChunkBits(n: Long): Int = if (n <= wideCutoff) parityBits else wideBits
@@ -575,18 +578,17 @@ final case class HashLayout(algo: String, name: String, hashCols: Seq[String],
 
 object HashLayout {
   /** The 256-bit PDQ hash: 16×16-bit chunks, 32-bit past 10⁷ rows;
-    * threshold 40 by default (phdupes.rs:353-355), at most 63. The index
-    * keeps the unsuffixed dir pre-round-4 corpora already use. */
+    * threshold 40 by default (phdupes.rs:353-355), at most 63. */
   val Pdq: HashLayout = HashLayout(BandIndex.AlgoPdq, "pdq",
     Seq("h0", "h1", "h2", "h3"), "variants", BandJoin.BitsPerChunk, 32,
-    BandJoin.AutoWideCutoff, 40, 63, "band_index")
+    BandJoin.AutoWideCutoff, 40, 63)
 
   /** The 64-bit DCT pHash (hamminghash.rs:23-41): 8×8-bit chunks, 16-bit
     * past 10⁵ rows; threshold 15 by default and at most 15. */
   val Phash64: HashLayout = HashLayout(BandIndex.AlgoPhash64, "phash",
     Seq("phash64"), "phash_variants", BandJoin64.BitsPerChunk, 16,
     BandJoin64.AutoWideCutoff, BandJoin64.DefaultThreshold,
-    BandJoin64.DefaultThreshold, "band_index_phash")
+    BandJoin64.DefaultThreshold)
 
   val All: Seq[HashLayout] = Seq(Pdq, Phash64)
 
@@ -595,6 +597,6 @@ object HashLayout {
     All.find(_.name == algorithm).getOrElse(throw new IllegalArgumentException(
       s"unknown algorithm '$algorithm' (${All.map(_.name).mkString(" | ")})"))
 
-  /** The layout a persisted index's algorithm name stands for. */
+  /** The layout an algorithm name (`HashLayout.algo`) stands for. */
   def of(algo: String): HashLayout = if (algo == Phash64.algo) Phash64 else Pdq
 }

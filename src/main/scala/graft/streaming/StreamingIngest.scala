@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
  *  - the sink checkpoint replays a failed batch with the SAME batch id;
  *  - `Incremental.run` keyed by `batch_<id>` deltaWork resumes committed
  *    stages and re-commits its state version idempotently (owner-stamped
- *    markers, atomic index segments).
+ *    markers).
  * So a crash anywhere leaves the corpus state at version k, and the
  * replayed batch either completes version k+1 or re-observes it — never
  * double-merges.

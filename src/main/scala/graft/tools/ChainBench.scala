@@ -29,7 +29,7 @@ object ChainBench {
     val base = Harness.workDir("graft-chainbench")
     val corpusWork = s"$base/corpus-work"
     // disjoint base-id ranges → corpus and deltas share no dup families,
-    // but every delta still probes the whole corpus index
+    // but every delta still scans the whole corpus signatures
     def images(from: Long, until: Long) = {
       val df = Synth.imagesDF(spark, from, until).localCheckpoint()
       (df, df.count())

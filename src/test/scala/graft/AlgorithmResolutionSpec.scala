@@ -8,7 +8,7 @@ import java.io.File
 
 /** Both entry points, `Pipeline.run` and `Incremental.run`, resolve the
   * algorithm and threshold through [[graft.lsh.HashLayout]] before they
-  * write anything: a refused run leaves no stage, pin or high-water mark
+  * write anything: a refused run leaves no stage, pin or corpus marker
   * behind, and `threshold = -1` means the algorithm's own default. */
 class AlgorithmResolutionSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -21,10 +21,11 @@ class AlgorithmResolutionSpec extends AnyFunSuite {
 
   private val refused = Seq(("dhash", -1), ("phash", 16), ("pdq", 64))
 
-  private def marker(p: String): Option[String] = {
-    val f = new File(p)
-    if (f.exists()) Some(new String(java.nio.file.Files.readAllBytes(f.toPath))) else None
-  }
+  /** The corpus work dir's entries, with the content of its marker files
+    * (`_meta_*` stamps, `_state_v*` version markers). */
+  private def markers(work: String): Map[String, Option[String]] =
+    new File(work).listFiles().map(f => f.getName -> (if (f.isFile)
+      Some(new String(java.nio.file.Files.readAllBytes(f.toPath))) else None)).toMap
 
   test("refused algorithm/threshold leaves nothing behind; -1 resolves to the pHash default 15") {
     val base = java.nio.file.Files.createTempDirectory("graft-algo").toString
@@ -53,10 +54,9 @@ class AlgorithmResolutionSpec extends AnyFunSuite {
 
     val delta = toDF(Seq(Synth.rowsForBase(20L).head))
     Incremental.run(spark, delta, work, s"$base/delta-ok", algorithm = "phash")
-    assert(CorpusState.hwm(spark, work, "thr_hwm_phash64").contains(15))
 
-    val hwms = Seq("pdq", "phash64").map(a => s"$work/_meta_thr_hwm_$a")
-    val before = hwms.map(marker)
+    val before = markers(work)
+    assert(before.keySet("_meta_content_star") && before.keySet("_state_v1"), before.keySet)
     refused.zipWithIndex.foreach { case ((algo, thr), i) =>
       val batchWork = s"$base/refused-batch-$i"
       intercept[IllegalArgumentException] {
@@ -70,7 +70,7 @@ class AlgorithmResolutionSpec extends AnyFunSuite {
       }
       assert(!new File(s"$deltaWork/delta_signatures").exists(), s"$algo/$thr")
       assert(!new File(s"$deltaWork/_base_version").exists(), s"$algo/$thr")
-      assert(hwms.map(marker) == before, s"$algo/$thr moved a threshold high-water mark")
+      assert(markers(work) == before, s"$algo/$thr changed the corpus work dir")
     }
   }
 }

@@ -92,12 +92,14 @@ class IncrementalSpec extends AnyFunSuite {
     val lineage2 = spark.read.parquet(s"$base/delta-work/_lineage").count()
     assert(first == second)
     assert(lineage1 == lineage2, "resume recomputed a committed stage")
-    // the index must contain exactly corpus + delta keys (no double append)
-    import org.apache.spark.sql.functions._
-    val idxOrds = graft.lsh.BandIndex.read(spark, s"$base/corpus-work/band_index")
-      .groupBy("ord").agg(count(lit(1)).as("n"))
-    assert(idxOrds.where(col("n") =!= 16).count() == 0,
-      "some ord has != 16 band keys — double append or truncation")
+    // the merged state holds each delta ord exactly once (no double commit)
+    val work = s"$base/corpus-work"
+    val deltaOrds = spark.read.parquet(s"$base/delta-work/delta_signatures")
+      .select("ord").collect().map(_.getLong(0)).toSet
+    val ords = CorpusState.readSignatures(spark, work, CorpusState.version(spark, work))
+      .select("ord").collect().map(_.getLong(0)).toSeq
+    assert(deltaOrds.size == delta.size && deltaOrds.forall(o => ords.count(_ == o) == 1),
+      "a delta ord is missing from the merged state or appears twice")
   }
 
   test("incremental into an EMPTY corpus behaves like a batch run") {
@@ -135,68 +137,36 @@ class IncrementalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("concurrent"), e.getMessage)
   }
 
-  test("width lifecycle: widen past a (lowered) cutoff mid-chain, chain == batch") {
-    // round-4 VERDICT #4: chunkBits is frozen at first build; maintenance
-    // must rebuild at the auto width once the corpus crosses the cutoff.
-    // thr ≤ 31 so the 32-bit probe ball fits the mask cap.
-    val thr = 24
-    val base = java.nio.file.Files.createTempDirectory("graft-widen").toString
-    val byIdx = rows.zipWithIndex
-    val corpus = byIdx.filter(_._2 % 3 == 0).map(_._1)
-    val delta1 = byIdx.filter(_._2 % 3 == 1).map(_._1)
-    val delta2 = byIdx.filter(_._2 % 3 == 2).map(_._1)
-    val idx = s"$base/corpus-work/band_index"
-
-    Pipeline.run(spark, toDF(corpus), s"$base/corpus-work", thr)
-    Incremental.run(spark, toDF(delta1),
-      s"$base/corpus-work", s"$base/delta1-work", thr)
-    assert(graft.lsh.BandIndex.chunkBitsOf(spark, idx) == 16)
-    // the chain records its operating-threshold high-water mark, so a
-    // mistyped low MaintenanceCli arg can never widen past serviceability
-    assert(CorpusState.hwm(spark, s"$base/corpus-work",
-      s"thr_hwm_${graft.lsh.BandIndex.AlgoPdq}").contains(thr))
-    val curSig = CorpusState.readSignatures(spark, s"$base/corpus-work",
-      CorpusState.version(spark, s"$base/corpus-work"))
-    // real cutoff not crossed → no rebuild
-    assert(graft.lsh.BandIndex.maybeWiden(spark, idx, curSig, thr).isEmpty)
-    assert(graft.lsh.BandIndex.chunkBitsOf(spark, idx) == 16)
-    // lowered cutoff crossed → rebuilt at the wide width, _meta updated
-    assert(graft.lsh.BandIndex.maybeWiden(spark, idx, curSig, thr,
-      wideCutoff = 1).contains(32))
-    assert(graft.lsh.BandIndex.chunkBitsOf(spark, idx) == 32)
-    // the chain continues over the widened index and still equals batch
-    val inc2 = Incremental.run(spark, toDF(delta2),
-      s"$base/corpus-work", s"$base/delta2-work", thr)
-    val full = Pipeline.run(spark, toDF(rows), s"$base/full-work", thr)
-    assert(groupsOf(inc2) == groupsOf(full),
-      s"chain over widened index diverged: " +
-        s"only-inc=${(groupsOf(inc2) -- groupsOf(full)).take(3)} " +
-        s"only-full=${(groupsOf(full) -- groupsOf(inc2)).take(3)}")
-  }
-
-  test("missing index mid-chain self-heals from corpus signatures (rebuild crash window)") {
-    // rebuildWidth's two-rename swap has a crash window with NO live
-    // index; its contract says the next incremental run rebuilds from
-    // corpus signatures rather than serving wrong results. Simulate the
-    // window by deleting the live index between deltas.
-    val base = java.nio.file.Files.createTempDirectory("graft-heal").toString
+  test("a corpus with a garbage band_index dir groups as one without it") {
+    // an older build kept a band index under the corpus work dir; the
+    // probe scans the signatures, so such a dir is left as it is, unread
+    val base = java.nio.file.Files.createTempDirectory("graft-stale-index").toString
     val byIdx = rows.zipWithIndex
     val corpus = byIdx.filter(_._2 % 3 == 0).map(_._1)
     val delta1 = byIdx.filter(_._2 % 3 == 1).map(_._1)
     val delta2 = byIdx.filter(_._2 % 3 == 2).map(_._1)
     Pipeline.run(spark, toDF(corpus), s"$base/corpus-work", Threshold)
+    val stale = new java.io.File(s"$base/corpus-work/band_index")
+    val junk = Map("_meta_algo" -> "nonsense", "_meta_chunk_bits" -> "garbage",
+      "seg_base/part-00000.parquet" -> "not a parquet file")
+    junk.foreach { case (name, text) =>
+      val f = new java.io.File(stale, name)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, text.getBytes("UTF-8"))
+    }
     Incremental.run(spark, toDF(delta1),
       s"$base/corpus-work", s"$base/delta1-work", Threshold)
-    val idx = new org.apache.hadoop.fs.Path(s"$base/corpus-work/band_index")
-    val fsys = idx.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fsys.delete(idx, true), "test setup: index dir should exist")
     val inc2 = Incremental.run(spark, toDF(delta2),
       s"$base/corpus-work", s"$base/delta2-work", Threshold)
-    assert(graft.lsh.BandIndex.exists(spark, idx.toString),
-      "index was not rebuilt after the simulated crash window")
     val full = Pipeline.run(spark, toDF(rows), s"$base/full-work", Threshold)
     assert(groupsOf(inc2) == groupsOf(full),
-      "self-healed chain diverged from batch")
+      s"chain over a stale index dir diverged: " +
+        s"only-inc=${(groupsOf(inc2) -- groupsOf(full)).take(3)} " +
+        s"only-full=${(groupsOf(full) -- groupsOf(inc2)).take(3)}")
+    junk.foreach { case (name, text) =>
+      assert(new String(java.nio.file.Files.readAllBytes(
+        new java.io.File(stale, name).toPath), "UTF-8") == text, s"$name was rewritten")
+    }
   }
 
   test("chained deltas: two sequential increments == one full batch run") {
@@ -219,13 +189,8 @@ class IncrementalSpec extends AnyFunSuite {
     assert(groupsOf(inc2) == groupsOf(full),
       s"chained incremental diverged: only-inc=${(groupsOf(inc2) -- groupsOf(full)).take(3)} " +
         s"only-full=${(groupsOf(full) -- groupsOf(inc2)).take(3)}")
-    // state advanced twice and every indexed ord exists in the signatures
+    // state advanced twice
     assert(CorpusState.version(spark, s"$base/corpus-work") == 2)
-    import org.apache.spark.sql.functions._
-    val sigMax = CorpusState.readSignatures(spark, s"$base/corpus-work", 2)
-      .agg(max("ord")).head().getLong(0)
-    val idxMax = graft.lsh.BandIndex.maxOrd(spark, s"$base/corpus-work/band_index")
-    assert(idxMax <= sigMax, s"index ord $idxMax leads signatures $sigMax")
 
     // merge-on-read invariants: each version dir holds only its DELTA
     // (not a corpus rewrite), and compaction + gc fold them into a
@@ -251,9 +216,9 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("phash-mode chained deltas == full phash batch run (u64 persisted index)") {
-    // round-3 VERDICT #4: a phash-mode corpus must ingest deltas through a
-    // width-parameterized persisted index (8-bit pHash chunk keys,
-    // hamminghash.rs:23-41 semantics), not just the batch join
+    // round-3 VERDICT #4: a phash-mode corpus must ingest deltas through
+    // the u64 probe (8-bit pHash chunks, hamminghash.rs:23-41 semantics),
+    // not just the batch join
     val base = java.nio.file.Files.createTempDirectory("graft-chain-ph").toString
     val byIdx = rows.zipWithIndex
     val corpus = byIdx.filter(_._2 % 3 == 0).map(_._1)
@@ -271,19 +236,12 @@ class IncrementalSpec extends AnyFunSuite {
       s"phash chain diverged: only-inc=${(groupsOf(inc2) -- groupsOf(full)).take(3)} " +
         s"only-full=${(groupsOf(full) -- groupsOf(inc2)).take(3)}")
     assert(groupsOf(full).exists(_.size > 1), "no multi-member phash groups")
-    // the index is algorithm-stamped u64: 8 chunks per image, not 16
-    val idxPath = s"$base/corpus-work/band_index_phash"
-    assert(graft.lsh.BandIndex.algoOf(spark, idxPath) ==
-      graft.lsh.BandIndex.AlgoPhash64)
-    import org.apache.spark.sql.functions._
-    assert(graft.lsh.BandIndex.read(spark, idxPath)
-      .agg(max("band_idx")).head().getInt(0) == 7)
   }
 
-  test("non-hashable top-ord row never triggers perpetual repair segments") {
-    // round-3 ADVICE: the audit ceiling is over has_pdq rows only — a
-    // corpus whose HIGHEST ord is a decode failure must not make every
-    // later run append an empty seg_repair_* segment
+  test("a chained delta writes nothing under band_index*") {
+    // the probe scans the corpus signatures: no delta builds, appends to
+    // or compacts an index — also over a corpus whose HIGHEST ord is a
+    // decode failure, and through an auto-compaction
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft-inc-repair").toString
     val good = rows.take(8)
@@ -292,21 +250,18 @@ class IncrementalSpec extends AnyFunSuite {
         .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash"))
     Pipeline.run(spark, corpusDf, s"$base/corpus-work", Threshold)
     // a delta of ONLY undecodable rows: every one of its ords is above the
-    // corpus max and none is hashable, so the index ceiling would lag the
-    // all-rows signature ceiling forever if the audit ignored has_pdq
+    // corpus max and none is hashable
     val badDelta = Seq(
       ("zzz_bad1.jpg", Array[Byte](9, 9), 4, 4, "jpg", "bad", 0L),
       ("zzz_bad2.jpg", Array[Byte](8, 8), 4, 4, "jpg", "bad", 0L))
       .toDF("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
-    Incremental.run(spark, badDelta, s"$base/corpus-work", s"$base/delta1", Threshold)
-    Incremental.run(spark, toDF(rows.slice(8, 12)), s"$base/corpus-work",
-      s"$base/delta2", Threshold)
-    Incremental.run(spark, toDF(rows.slice(12, 16)), s"$base/corpus-work",
-      s"$base/delta3", Threshold)
-    val repairSegs = new java.io.File(s"$base/corpus-work/band_index").listFiles()
-      .map(_.getName).filter(_.startsWith("seg_repair"))
-    assert(repairSegs.isEmpty,
-      s"spurious repair segments: ${repairSegs.mkString(",")}")
+    Seq(badDelta, toDF(rows.slice(8, 12)), toDF(rows.slice(12, 16))).zipWithIndex.foreach {
+      case (d, i) => Incremental.run(spark, d, s"$base/corpus-work", s"$base/delta$i",
+        Threshold, compactEvery = 2)
+    }
+    assert(CorpusState.version(spark, s"$base/corpus-work") == 3)
+    val written = new java.io.File(s"$base/corpus-work").list().filter(_.startsWith("band_index"))
+    assert(written.isEmpty, s"a delta wrote ${written.mkString(",")}")
   }
 
   test("contentStar crosses the corpus/delta boundary (undecodable twins group)") {
@@ -407,8 +362,8 @@ class IncrementalSpec extends AnyFunSuite {
 
   test("auto-compact every K deltas keeps the layer stack shallow") {
     // 9 chained deltas with compactEvery=3: snapshots at v3/v6/v9 + gc
-    // must keep on-disk state_v* dirs bounded by K and index segments
-    // folded, while the merged result still equals a full batch run
+    // must keep on-disk state_v* dirs bounded by K, while the merged
+    // result still equals a full batch run
     val base = java.nio.file.Files.createTempDirectory("graft-autocompact").toString
     val all = (0L until 23L).flatMap(Synth.rowsForBase)
     val corpus = all.take(5)
@@ -427,10 +382,6 @@ class IncrementalSpec extends AnyFunSuite {
       .map(_.getName).filter(_.startsWith("state_v"))
     assert(stateDirs.length <= 3,
       s"auto-compact left ${stateDirs.length} state dirs: ${stateDirs.mkString(",")}")
-    val idxSegs = new java.io.File(s"$base/corpus-work/band_index").listFiles()
-      .map(_.getName).filter(_.startsWith("seg_"))
-    assert(idxSegs.length <= 2,
-      s"auto-compact left ${idxSegs.length} index segments: ${idxSegs.mkString(",")}")
 
     val full = Pipeline.run(spark, toDF(corpus ++ deltas.flatten),
       s"$base/full-work", Threshold)

@@ -60,7 +60,7 @@ class ToolsSmokeSpec extends AnyFunSuite {
   test("ProbeBench over a harness corpus") {
     val f = fields(ProbeBench.measure(spark, corpus, smallBases = 10, deltaBases = 5),
       "PROBEBENCH", "x1_t12", "x1_t40", "x10_t12", "x10_t40", "delta_bases", "cpus")
-    assert(f("x10_t40").contains("\"index_rows\":"))
+    assert(f("x10_t40").contains("\"corpus_rows\":"))
   }
 
   test("EdgeDiff: two dumps of one corpus diff to 0/0") {
