@@ -244,19 +244,22 @@ object Incremental {
     * group in corpus ∪ delta (the reference's report-everything UX, and
     * what the equivalence specs compare). At 10¹²-scale pass false to
     * assemble only the groups the delta touched — the state commit is
-    * identical either way. */
-  /** `compactEvery`: fold merge-on-read state into a snapshot every K
+    * identical either way.
+    *
+    * `compactEvery`: fold merge-on-read state into a snapshot every K
     * committed versions (0 disables). Keeps the layer stack shallow in
     * steady-state ingest without a manual maintenance call — the
     * 32-layer read-path warning never fires in normal operation (round-2
-    * VERDICT #7). */
-  /** `algorithm` selects the hash the candidate probe bands on — "pdq"
+    * VERDICT #7).
+    *
+    * `algorithm` selects the hash the candidate probe bands on — "pdq"
     * (256-bit, reference default) or "phash" (64-bit DCT pHash,
     * HammingHash<u64> semantics); the corpus signatures carry both
     * hashes, so either algorithm probes any corpus. Algorithm and
     * `threshold` resolve exactly as in [[Pipeline.run]], before anything
-    * is written. */
-  /** `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
+    * is written.
+    *
+    * `contentStar`: the [[Pipeline.run]] opt-in flag's incremental
     * counterpart — byte-identical files (including UNDECODABLE ones)
     * group across the corpus/delta boundary via content-hash star edges.
     * Use the SAME setting across a chain as the batch run used: a corpus

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
  * once and broadcast; each signature-scan task holds the ball as one sorted
  * primitive table and looks each chunk of every scanned row up in it —
  * the reference's in-memory mask walk. Only verified pairs leave the
- * tasks. A larger ball takes the exploded sort-merge join, see [[probe]].
+ * tasks. A larger ball takes the exploded band join, see [[probe]].
  *
  * TWO HASH ALGORITHMS: the 256-bit PDQ hash (h0..h3, chunk widths 16/32)
  * or the 64-bit DCT pHash (`phash64`, widths 8/16 — HammingHash<u64>
@@ -45,17 +45,10 @@ object BandIndex {
   /** Probe-ball budget: the most (variant × chunk × mask) draws a delta's
     * probe ball may hold for the in-memory probe, whose table packs one
     * draw per 8-byte word (~16 MB per executor at the cap). A larger ball
-    * takes the sort-merge join, which spills instead. */
+    * takes the batch's band join, whose hash build is the scanned side. */
   final val MaxProbeBallDraws = 2000000L
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Radius-0 band rows of (ord, low_conf, the layout's hash columns)
-    * rows, with the hash longs beside each key (what the in-join Hamming
-    * verify needs). */
-  private def bandRows(rows: DataFrame, chunkBits: Int, layout: HashLayout): DataFrame =
-    rows.select(col("*"), posexplode(BandJoin.chunksArrayB(layout.hashCols.map(col),
-      chunkBits)).as(Seq("band_idx", "band_val")))
 
   /** Export of a corpus's radius-0 band keys as an index dir: one
     * committed segment (`seg_base`) of the hash-carrying rows' band
@@ -72,9 +65,9 @@ object BandIndex {
       val committed = Store.writeOnce(spark, s"$path/_meta_$name", value).trim
       require(committed == value, s"band index $name is $committed; cannot use $value")
     }
-    val layout = HashLayout.of(algo)
-    Store.commitSegment(spark, path, "seg_base")(bandRows(sig.filter(col("has_pdq"))
-      .select(col("ord") +: col("low_conf") +: layout.hashCols.map(col): _*), chunkBits, layout))
+    val hs = HashLayout.of(algo).hashCols.map(col)
+    Store.commitSegment(spark, path, "seg_base")(BandJoin.bandKeys(
+      sig.filter(col("has_pdq")).select(col("ord") +: col("low_conf") +: hs: _*), hs, 0, chunkBits))
   }
 
   /** Auto chunk width of a probe over `nConf` confident corpus rows: wide
@@ -118,10 +111,13 @@ object BandIndex {
    *    it — the reference's in-memory mask walk (hamminghash.rs:82-149,
    *    scanner.rs:1729-1767). Neither side is exploded, shuffled or sorted
    *    as rows; no exchange precedes the group-by.
-   *  - SORT-MERGE, past the budget: the scanned side is exploded into its
-   *    radius-0 band rows and the ball into probe rows, and the two are
-   *    sort-merge joined, which spills where a larger ball's table or hash
-   *    build would not fit.
+   *  - BAND JOIN, past the budget: the batch's [[BandJoin.bandJoin]] core
+   *    with the scanned rows as its stored side at radius 0 and the reps
+   *    as its probe side at the full tolerance. At tol ≥ 1 the scanned
+   *    side has the smaller radius, so the shuffled hash join builds on
+   *    it — the corpus's m band rows per image, never the ball, whatever
+   *    the delta's size (SCALING.md gives the build's ceiling); at tol 0
+   *    it builds the reps' variant rows, as the batch does.
    */
   def probe(corpusSig: DataFrame, deltaSig: DataFrame, threshold: Int,
             chunkBits: Int, layout: HashLayout = HashLayout.Pdq): DataFrame = {
@@ -138,8 +134,6 @@ object BandIndex {
         s"$confMasks probe masks/chunk (> ${BandJoin.MaxMasksPerSide}) — " +
         "use narrower chunks or lower the threshold")
 
-    val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
-    val vCols = vNames.map(col)
     val hashRow = col("ord") +: col("low_conf") +: layout.hashCols.map(col)
     val corpus = corpusSig.filter(col("has_pdq")).select(hashRow: _*)
 
@@ -172,39 +166,12 @@ object BandIndex {
         .toDF("ra", "rb", "dist")
         .groupBy("ra", "rb").agg(min("dist").as("dist"))
     } else {
-      log.info("band probe: sort-merge join (" +
+      log.info("band probe: band join (" +
         (if (reps.length > maxReps) s"over $maxReps reps" else s"$draws ball draws") +
         s", budget $MaxProbeBallDraws draws)")
-      val prbBase = delta
-        .select(col("ord"), col("low_conf").as("q_low"),
-          explode(col(layout.variantsCol)).as("v"))
-        .select(col("ord") +: col("q_low") +: layout.splitVariant(col("v"), vNames): _*)
-      // F2 split (scanner.rs:1579-1594): confident rows expand the full
-      // radius-tol ball; low-confidence rows match exact-only, so they
-      // probe a SINGLE bucket per chunk (mask 0)
-      def expand(base: DataFrame, radius: Int): DataFrame =
-        BandJoin.bandKeys(base, vCols, radius, chunkBits)
-          .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
-            col("q_low") +: vCols: _*)
-      val prb = expand(prbBase.filter(!col("q_low")), tol)
-        .unionByName(expand(prbBase.filter(col("q_low")), 0))
-      val scanned = bandRows(corpus.unionByName(delta.select(hashRow: _*)), chunkBits, layout)
-        .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
-          col("low_conf").as("c_low") +:
-          layout.hashCols.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
-      // per-side limit: either side low-confidence ⇒ exact only (F2)
-      // sort-merge, as in BandJoin.exactEdges: it keeps the planner from
-      // broadcasting the under-estimated explode and spills, where a hash
-      // build over the probe ball fails for a large delta
-      prb.hint("shuffle_merge")
-        .join(scanned, Seq("band_idx", "band_val"))
-        .where(col("q_ord") =!= col("c_ord"))
-        .withColumn("dist", BandJoin.hammingCols(vCols, cNames.map(col)))
-        .where(col("dist") <=
-          when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
-        .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
-          greatest(col("q_ord"), col("c_ord")).as("rb"))
-        .agg(min("dist").as("dist"))
+      BandJoin.bandJoin(layout, corpus.unionByName(delta.select(hashRow: _*)), 0,
+        delta.select(col("ord"), col("low_conf"), col(layout.variantsCol)), tol,
+        threshold, chunkBits, 1, None)
     }
     BandJoin.expandReps(repEdges, mem)
   }

@@ -52,12 +52,6 @@ object BandJoin {
     * Norouzi m ≈ 256/log₂n, CVPR'12). */
   final val AutoWideCutoff = 10000000L
 
-  /** MIH chunk width from corpus size — used when callers pass
-    * `chunkBits = 0` (auto). 16 = reference parity, right up to ~10⁷
-    * confident rows; 32 = the ≥10⁷ setting (identical edge set by
-    * pigeonhole, proven by LshSpec width-equality). */
-  def autoChunkBits(n: Long): Int = HashLayout.Pdq.autoChunkBits(n)
-
   /** Hard cap on XOR masks materialized per explode side: the masks become
     * a `lit` array in the plan, so an unbounded radius×width combination
     * (e.g. 64-bit chunks at tol 15 → ~10¹³ masks) must fail fast instead of
@@ -276,14 +270,17 @@ object BandJoin {
   def hammingCols(a: Seq[Column], b: Seq[Column]): Column =
     a.zip(b).map { case (x, y) => bit_count(x.bitwiseXOR(y)) }.reduce(_ + _)
 
-  /** Explode a hash-carrying frame into (band_idx, band_val) keys with
-    * radius-r multi-probe masks: band_val = chunk ⊕ mask for every mask of
-    * the radius-r ball. `hs` are the hash longs to band on. */
+  /** Explode a hash-carrying frame with a `low_conf` column into
+    * (band_idx, band_val) keys with radius-r multi-probe masks: band_val =
+    * chunk ⊕ mask for every mask of the radius-r ball, and mask 0 alone
+    * for a low_conf row, which matches exact-only (scanner.rs:1579-1594).
+    * `hs` are the hash longs to band on. */
   private[lsh] def bandKeys(df: DataFrame, hs: Seq[Column], radius: Int,
                             chunkBits: Int): DataFrame =
     df.select(col("*"),
         posexplode(chunksArrayB(hs, chunkBits)).as(Seq("band_idx", "chunk")))
-      .withColumn("mask", explode(lit(masksB(radius, chunkBits))))
+      .withColumn("mask", explode(when(col("low_conf"), lit(Array(0L)))
+        .otherwise(lit(masksB(radius, chunkBits)))))
       .withColumn("band_val", col("chunk").bitwiseXOR(col("mask")))
       .drop("chunk", "mask")
 
@@ -327,10 +324,11 @@ object BandJoin {
   }
 
   /**
-   * Fuzzy duplicate edges among confident rows: band join + Hamming ≤
-   * threshold verify + canonical a<b + distinct. Matches the reference's
-   * probe semantics: the PROBE side expands all 8 dihedral variant hashes
-   * (store-1/query-8, scanner.rs:1700-1724), the INDEX side holds originals.
+   * Fuzzy duplicate edges among confident rows: the [[bandJoin]] of the
+   * collapsed reps with themselves, at [[radiusSplit]]'s radii, expanded
+   * back to member pairs. Matches the reference's probe semantics: the
+   * PROBE side expands all 8 dihedral variant hashes (store-1/query-8,
+   * scanner.rs:1700-1724), the INDEX (stored) side holds originals.
    *
    * `saltFactor` > 1 splits every band bucket into S sub-buckets on the
    * index side (salt = pmod(ord, S)) and replicates the probe side ×S —
@@ -346,6 +344,10 @@ object BandJoin {
   def fuzzyEdges(sig: DataFrame, threshold: Int, saltFactor: Int = 0,
                  chunkBits: Int = 0, nConfHint: Long = -1,
                  layout: HashLayout = HashLayout.Pdq): DataFrame = {
+    // the packed band key holds the salt (0..S-1) in 6 bits: a factor
+    // past 64 would make distinct (band_val, salt) pairs share a key
+    require(saltFactor >= 0 && saltFactor <= 64,
+      s"salt factor $saltFactor outside 0..64 (the packed band key's 6 salt bits)")
     val conf = sig.filter(col("has_pdq") && !col("low_conf"))
     val (reps, mem) = collapse(conf, (layout.hashCols :+ layout.variantsCol).map(col))
     // ONE shared count feeds both auto knobs (width + salt), resolved over
@@ -356,14 +358,25 @@ object BandJoin {
       if (nConfHint >= 0) nConfHint
       else if (chunkBits == 0 || saltFactor == 0) conf.count()
       else -1L
+    val bits = if (chunkBits != 0) chunkBits else {
+      val auto = layout.autoChunkBits(nConf)
+      log.info(s"${layout.algo} band join auto chunk width: $nConf confident " +
+        s"rows -> $auto-bit chunks")
+      auto
+    }
+    val (rIdx, rPrb) = radiusSplit(layout, threshold, bits)
+    val (saltF, hotKeys) =
+      if (saltFactor != 0) (saltFactor, None)
+      else if (nConf <= AutoSaltMinRows) (1, None)
+      else autoSalt(layout, reps, bits, rIdx, SaltBucketCap)
 
-    val repEdges = bandMatches(layout, reps, threshold, saltFactor, chunkBits, nConf)
-      .withColumn("dist", hammingCols(layout.hashNames("v").map(col),
-        layout.hashNames("c").map(col)))
-      .where(col("dist") <= threshold)
-      .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
-        greatest(col("q_ord"), col("c_ord")).as("rb"))
-      .agg(min("dist").as("dist"))
+    // every row here is confident: the literal folds the core's per-row
+    // low-confidence masks and limit away
+    val confident = lit(false).as("low_conf")
+    val repEdges = bandJoin(layout,
+      reps.select(col("ord") +: confident +: layout.hashCols.map(col): _*), rIdx,
+      reps.select(col("ord"), confident, col(layout.variantsCol)), rPrb,
+      threshold, bits, saltF, hotKeys)
     expandReps(repEdges, mem)
   }
 
@@ -409,32 +422,25 @@ object BandJoin {
     cross.unionByName(intra)
   }
 
-  /** The raw band-collision rows (post-join, pre-verify) of `conf` — rows
-    * already filtered to the confident ones — with the probe variant in
-    * v0.. and the stored hash in c0..; the verify step above reads them
-    * (their volume is measured in BASELINE.md "Band-join candidate
-    * volume"). `nConf` feeds the auto
-    * width (`chunkBits0 = 0`) and auto salt (`saltFactor = 0`). */
-  private def bandMatches(layout: HashLayout, conf: DataFrame,
-                          threshold: Int, saltFactor: Int,
-                          chunkBits0: Int, nConf: Long): DataFrame = {
-    // the packed key below holds the salt (0..S-1) in 6 bits: a factor
-    // past 64 would make distinct (band_val, salt) pairs share a key
-    require(saltFactor >= 0 && saltFactor <= 64,
-      s"salt factor $saltFactor outside 0..64 (the packed band key's 6 salt bits)")
-    val chunkBits = if (chunkBits0 != 0) chunkBits0 else {
-      val bits = layout.autoChunkBits(nConf)
-      log.info(s"${layout.algo} band join auto chunk width: $nConf confident " +
-        s"rows -> $bits-bit chunks")
-      bits
-    }
-    val (rIdx, rPrb) = radiusSplit(layout, threshold, chunkBits)
-
-    val (saltF, hotKeySet) =
-      if (saltFactor != 0) (saltFactor, None)
-      else if (nConf <= AutoSaltMinRows) (1, None)
-      else autoSalt(layout, conf, chunkBits, rIdx, SaltBucketCap)
-
+  /**
+   * The band join both callers share — the batch's [[fuzzyEdges]] and the
+   * delta probe's fallback ([[BandIndex.probe]]): verified rep pairs
+   * (ra < rb, min dist) between a STORED side of (ord, low_conf, the
+   * layout's hash columns), banded at radius `rStored`, and a PROBE side
+   * of (ord, low_conf, the layout's variants column), banded at `rProbe`
+   * — every dihedral variant of a probe row against the stored originals
+   * (store-1/query-8, scanner.rs:1700-1724). rStored + rProbe must cover
+   * the chunk tolerance ⌊t/m⌋. A low_conf row, on either side, expands
+   * mask 0 only, and a pair with a low_conf side verifies at limit 0
+   * (scanner.rs:1579-1594). `saltF` > 1 splits the stored side's buckets
+   * (on `hotKeys`, or everywhere when None) and replicates the probe
+   * side's; recall-neutral. The raw collisions the verify reads are
+   * measured in BASELINE.md "Band-join candidate volume".
+   */
+  private[lsh] def bandJoin(layout: HashLayout, stored: DataFrame, rStored: Int,
+                            probe: DataFrame, rProbe: Int, threshold: Int,
+                            chunkBits: Int, saltF: Int,
+                            hotKeys: Option[Array[Long]]): DataFrame = {
     // Packed single-long join key (guide §2.3 narrower types): band_idx
     // (< 32) ∙ band_val (< 2^chunkBits ≤ 2^32) ∙ salt (< 64) fold into one
     // non-overlapping long — one 8-byte key instead of three columns
@@ -450,26 +456,24 @@ object BandJoin {
 
     val hs = layout.hashCols
     val (cNames, vNames) = (layout.hashNames("c"), layout.hashNames("v"))
-    val idx0 = bandKeys(conf.select(col("ord") +: hs.map(col): _*),
-      hs.map(col), rIdx, chunkBits)
+    val idx = keyed(bandKeys(stored, hs.map(col), rStored, chunkBits)
       .select(col("band_idx") +: col("band_val") +: col("ord").as("c_ord") +:
-        hs.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
-    val idx = keyed(if (saltF <= 1) idx0.withColumn("salt", lit(0))
-      else idx0.withColumn("salt", saltIndexCol(saltF, hotKeySet, col("c_ord"))),
-      "c_ord" +: cNames)
+        col("low_conf").as("c_low") +: hs.zip(cNames).map { case (h, c) => col(h).as(c) }: _*)
+      .withColumn("salt", if (saltF <= 1) lit(0) else saltIndexCol(saltF, hotKeys, col("c_ord"))),
+      "c_ord" +: "c_low" +: cNames)
 
     // array_distinct: symmetric images repeat dihedral hashes (rot180 ==
     // id etc.); duplicate variant rows would generate duplicate collisions
     // that the verify pays for and the groupBy then discards
-    val prbBase = conf
-      .select(col("ord"), explode(array_distinct(col(layout.variantsCol))).as("v"))
-      .select(col("ord") +: layout.splitVariant(col("v"), vNames): _*)
-    val prb0 = bandKeys(prbBase, vNames.map(col), rPrb, chunkBits)
+    val prbBase = probe
+      .select(col("ord"), col("low_conf"),
+        explode(array_distinct(col(layout.variantsCol))).as("v"))
+      .select(col("ord") +: col("low_conf") +: layout.splitVariant(col("v"), vNames): _*)
+    val prb = keyed(bandKeys(prbBase, vNames.map(col), rProbe, chunkBits)
       .select(col("band_idx") +: col("band_val") +: col("ord").as("q_ord") +:
-        vNames.map(col): _*)
-    val prb = keyed(if (saltF <= 1) prb0.withColumn("salt", lit(0))
-      else prb0.withColumn("salt", explode(saltProbeCol(saltF, hotKeySet))),
-      "q_ord" +: vNames)
+        col("low_conf").as("q_low") +: vNames.map(col): _*)
+      .withColumn("salt", if (saltF <= 1) lit(0) else explode(saltProbeCol(saltF, hotKeys))),
+      "q_ord" +: "q_low" +: vNames)
 
     // Symmetric probing (vs the reference's scan-order-dependent i<j,
     // scanner.rs:1714-1717): a pair is an edge when EITHER side's dihedral
@@ -480,13 +484,25 @@ object BandJoin {
     // bit permutation of the hash, so dist(v(a), b) ≠ dist(v⁻¹(b), a) in
     // general — a round-6 directed-probing attempt changed 7.7k of 185k
     // edges on the bench corpus and was reverted.
-    // SHUFFLE_HASH, build side = probe: the planner must not broadcast
-    // either side — Catalyst estimates relation size from the pre-explode
-    // scan, which under-counts the band explosion by 100-2000×, and a
-    // broadcast of the exploded index is a GB-scale driver build. A
-    // partitioned hash join needs no sort and scales with executors.
-    prb.hint("shuffle_hash").join(idx, joinKeys)
-      .where(col("q_ord") =!= col("c_ord"))
+    // SHUFFLE_HASH, built on the stored side when its radius is below the
+    // probe side's, else on the probe side. radiusSplit never puts less
+    // radius on the index side, so every batch split builds the probe side,
+    // as it always has; at tol ≥ 1 the delta probe's radius-0 scanned rows
+    // (m per image) are the build, never the ball. The planner must not
+    // broadcast either side — Catalyst estimates relation size from the
+    // pre-explode scan, which under-counts the band explosion by
+    // 100-2000×, and a broadcast of the exploded index is a GB-scale build
+    // in the one JVM that plans the query. A partitioned hash join needs
+    // no sort and scales with executors.
+    val joined =
+      if (rStored < rProbe) prb.join(idx.hint("shuffle_hash"), joinKeys)
+      else prb.hint("shuffle_hash").join(idx, joinKeys)
+    joined.where(col("q_ord") =!= col("c_ord"))
+      .withColumn("dist", hammingCols(vNames.map(col), cNames.map(col)))
+      .where(col("dist") <= when(col("q_low") || col("c_low"), lit(0)).otherwise(lit(threshold)))
+      .groupBy(least(col("q_ord"), col("c_ord")).as("ra"),
+        greatest(col("q_ord"), col("c_ord")).as("rb"))
+      .agg(min("dist").as("dist"))
   }
 
   /**

@@ -20,7 +20,6 @@ import org.apache.spark.sql.DataFrame
  * hash is being banded, so low-confidence rows match exact-only here too.
  */
 object BandJoin64 {
-  final val NumChunks = 8      // hamminghash.rs:25
   final val BitsPerChunk = 8   // hamminghash.rs:39-41
   final val DefaultThreshold = 15 // MAX_SIMILARITY_64, hamminghash.rs:5
 
@@ -29,11 +28,6 @@ object BandJoin64 {
     * 1M random u64s = 99.9 s at 8-bit vs 10.02 s at 16-bit, identical
     * edge set by pigeonhole. */
   final val AutoWideCutoff = 100000L
-
-  /** u64 chunk width from corpus size — used when callers pass
-    * `chunkBits = 0` (auto). 8 = reference parity (hamminghash.rs:39-41),
-    * right at n≲10⁵; 16 = the corpus-scale setting. */
-  def autoChunkBits(n: Long): Int = HashLayout.Phash64.autoChunkBits(n)
 
   /** All verified duplicate edges (a < b, minimal dist per pair).
     * `sig` needs: ord, phash64, phash_variants, low_conf, has_pdq.

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.{Pipeline, SparkEntry}
-import graft.lsh.{BandJoin, BandJoin64}
+import graft.lsh.{BandIndex, BandJoin, BandJoin64}
 import graft.queries.ImageQueries
 import graft.synth.Synth
 import java.nio.file.{Files, Paths}
@@ -17,9 +17,12 @@ import org.apache.spark.sql.functions._
   * the verify corpus (the one q_img_* reads): `img_signatures` (kernel),
   * `img_groups`, `pdq_band_join`, `phash_band_join` (`BandJoin64.edges`
   * itself — q_phash_groups shows only a scan of the edges its
-  * components step already materialized) and `multimodal_cosine`. Check
-  * that scans prune to the columns the join needs and that the band joins
-  * stay ShuffledHashJoin, never Broadcast.
+  * components step already materialized), `pdq_band_probe` (`BandIndex.probe`
+  * of the rows with `ord % 3 == 0` against the rest, at 16-bit t = 48, a
+  * ball past the in-memory budget, so the plan is the fallback band join)
+  * and `multimodal_cosine`. Check that scans prune to the columns the join
+  * needs and that the band joins — the probe's too, built on its scanned
+  * side — stay ShuffledHashJoin, never Broadcast.
   *
   * `--time` runs a query `reps` times and prints each wall and the best.
   *
@@ -37,6 +40,10 @@ object PlanDump {
     "pdq_band_join" -> (s => BandJoin.edges(ImageQueries.sigs(s), Pipeline.DefaultThreshold)),
     "phash_band_join" -> (s =>
       BandJoin64.edges(ImageQueries.sigs(s), BandJoin64.DefaultThreshold)),
+    "pdq_band_probe" -> { s =>
+      val sig = ImageQueries.sigs(s)
+      BandIndex.probe(sig.where(col("ord") % 3 =!= 0), sig.where(col("ord") % 3 === 0), 48, 16)
+    },
     "multimodal_cosine" -> { s =>
       val feats = ImageQueries.sigs(s).select(col("ord").cast("string").as("media_id"),
         lit(true).as("ok"),

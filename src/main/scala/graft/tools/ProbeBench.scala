@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
  *    grow only with the columnar scan (one row per corpus image).
  *  - the reference-default threshold 40 (tol 2, 137 masks/chunk): at 200
  *    delta bases the ball is ≈ 1.1×10⁷ draws, past the budget, so it is
- *    exploded and sort-merge joined with the corpus's radius-0 band
- *    rows; the cost is collision-volume-bound and grows with the corpus
- *    on any engine.
+ *    exploded into the batch's band join, hash-built on the corpus's
+ *    radius-0 band rows; the cost is collision-volume-bound and grows
+ *    with the corpus on any engine.
  *    Reported for honesty, not as a regression.
  *
  * Usage: runMain graft.tools.ProbeBench [corpusDir] [smallBases] [deltaBases] [cpus]

@@ -4,8 +4,9 @@ import graft.kernel.{Pdq, SignatureKernel}
 import graft.lsh.{BandIndex, BandJoin, HashLayout, ProbeBall}
 import graft.model.{ImageRow, Signature}
 import graft.synth.Synth
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, ShuffledHashJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.security.MessageDigest
@@ -49,19 +50,20 @@ class BandIndexSpec extends AnyFunSuite {
 
   private object Plans extends AdaptiveSparkPlanHelper
 
-  /** Probe edges as (a, b, dist), and whether the executed plan sort-merge
-    * joined the band key — the fallback path; the in-memory path has no
-    * band join at all. */
+  /** Probe edges as (a, b, dist), and the executed plan's join on the band
+    * key (`bkey`, or `band_idx` past 32-bit chunks), if any — the fallback
+    * path; the in-memory path has no band join at all. */
   private def probeRun(chunkBits: Int, thr: Int, d: Seq[Signature] = delta,
                        layout: HashLayout = HashLayout.Pdq)
-      : (Set[(Long, Long, Int)], Boolean) = {
+      : (Set[(Long, Long, Int)], Option[BaseJoinExec]) = {
     import spark.implicits._
     val df = BandIndex.probe(corpus.toDS().toDF(), d.toDS().toDF(), thr, chunkBits, layout)
     val edges = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val bandSmj = Plans.collect(df.queryExecution.executedPlan) {
-      case j: SortMergeJoinExec if j.leftKeys.exists(_.references.exists(_.name == "band_idx")) => j
-    }.nonEmpty
-    (edges, bandSmj)
+    val bandJoin = Plans.collect(df.queryExecution.executedPlan) {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(a =>
+        a.name == "bkey" || a.name == "band_idx")) => j
+    }.headOption
+    (edges, bandJoin)
   }
 
   /** The probe ball's draws over the distinct (hash, variants, low_conf)
@@ -89,8 +91,8 @@ class BandIndexSpec extends AnyFunSuite {
     val withCopies = delta ++ copies
     // the copies collapse into their sources' reps: the ball is the delta's
     assert(ballDraws(16, 2, 16, d = withCopies) == 649344L)
-    val (edges, bandSmj) = probeRun(16, Threshold, withCopies)
-    assert(!bandSmj, "a ball within the budget took the sort-merge join")
+    val (edges, band) = probeRun(16, Threshold, withCopies)
+    assert(band.isEmpty, "a ball within the budget took the band join")
     val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
 
     val want = oracle(Threshold, pdqDist, withCopies)
@@ -118,9 +120,18 @@ class BandIndexSpec extends AnyFunSuite {
     // masks, past the budget — so this is also the cross-path check
     assert(ballDraws(16, 1, 16) == 81024L)
     assert(ballDraws(8, 3, 32) == 12998208L)
-    val (e16, smj16) = probeRun(16, thr)
-    val (e32, smj32) = probeRun(32, thr)
-    assert(!smj16 && smj32, s"paths: 16-bit sort-merge $smj16, 32-bit sort-merge $smj32")
+    val (e16, band16) = probeRun(16, thr)
+    val (e32, band32) = probeRun(32, thr)
+    assert(band16.isEmpty, s"16-bit ball took the band join: $band16")
+    // the fallback hash-joins with the scanned side (c_ord, radius 0) as
+    // its build, never the exploded ball
+    band32 match {
+      case Some(j: ShuffledHashJoinExec) =>
+        val build = if (j.buildSide == BuildLeft) j.left else j.right
+        assert(build.output.exists(_.name == "c_ord") &&
+          !build.output.exists(_.name == "q_ord"), s"build side: ${j.buildSide}")
+      case other => fail(s"32-bit ball: expected a shuffled hash join, got $other")
+    }
     assert(e16 == e32, s"width changed probe edges: only16=${(e16 -- e32).take(5)} " +
       s"only32=${(e32 -- e16).take(5)}")
     assert(e16 == asTriples(oracle(thr, pdqDist)), "probe edges differ from brute force")
@@ -129,8 +140,8 @@ class BandIndexSpec extends AnyFunSuite {
     // with its band_val read as long
     assert(ballDraws(8, 2, 32) <= BandIndex.MaxProbeBallDraws)
     val (m16, _) = probeRun(16, 16)
-    val (m32, smj32m) = probeRun(32, 16)
-    assert(!smj32m, "32-bit ball within the budget took the sort-merge join")
+    val (m32, band32m) = probeRun(32, 16)
+    assert(band32m.isEmpty, "32-bit ball within the budget took the band join")
     assert(m32 == m16 && m32 == asTriples(oracle(16, pdqDist)), "32-bit in-memory edges differ")
     // infeasible combination fails fast, arithmetically (no mask alloc)
     val err = intercept[IllegalArgumentException] {
@@ -143,8 +154,8 @@ class BandIndexSpec extends AnyFunSuite {
     val thr = graft.lsh.BandJoin64.DefaultThreshold
     // the u64 key collapses the delta to 38 reps (PDQ's 41): 34 × 8·8·9 + 4 × 8·8
     assert(ballDraws(8, 1, 8, phash = true) == 19840L)
-    val (edges, bandSmj) = probeRun(8, thr, layout = HashLayout.Phash64)
-    assert(!bandSmj, "8-bit u64 ball took the sort-merge join")
+    val (edges, band) = probeRun(8, thr, layout = HashLayout.Phash64)
+    assert(band.isEmpty, "8-bit u64 ball took the band join")
     val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
 
     val want = oracle(thr, (d, c) =>
@@ -157,8 +168,8 @@ class BandIndexSpec extends AnyFunSuite {
 
     // 16-bit u64 chunks (the ≥10⁵-row width): identical probe edges
     assert(ballDraws(4, 3, 16, phash = true) == 758464L)
-    val (edges16, bandSmj16) = probeRun(16, thr, layout = HashLayout.Phash64)
-    assert(!bandSmj16, "16-bit u64 ball took the sort-merge join")
+    val (edges16, band16) = probeRun(16, thr, layout = HashLayout.Phash64)
+    assert(band16.isEmpty, "16-bit u64 ball took the band join")
     assert(edges16 == edges, "u64 chunk width changed probe edges")
   }
 
@@ -166,13 +177,30 @@ class BandIndexSpec extends AnyFunSuite {
     // threshold < numChunks ⇒ tol 0 ⇒ one probe key per chunk and variant
     val thr = 8
     assert(ballDraws(16, 0, 16) == 5248L)
-    val (edges, bandSmj) = probeRun(16, thr)
-    assert(!bandSmj, "tol-0 ball took the sort-merge join")
+    val (edges, band) = probeRun(16, thr)
+    assert(band.isEmpty, "tol-0 ball took the band join")
     val got = edges.map { case (a, b, d) => (a, b) -> d }.toMap
     val want = oracle(thr, pdqDist)
     assert(got == want,
       s"missing=${(want.keySet -- got.keySet).take(5)} extra=${(got.keySet -- want.keySet).take(5)}")
     assert(want.nonEmpty, "no tol-0 pairs — fixture lacks exact/near dups")
+  }
+
+  test("16-bit fallback at threshold 48 (ball past the budget) == brute force") {
+    // tol 3 over 16-bit chunks: V(3,16) = 697 masks; 296 confident
+    // variants × 16 × 697 + 32 low-confidence ones × 16 draws
+    val thr = 48
+    assert(ballDraws(16, 3, 16) == 3301504L)
+    // plus a low-confidence delta row 3 bits from a confident corpus row:
+    // it shares 15 of its 16 chunks, so it collides, and the per-side
+    // limit 0 must drop the pair
+    val c = corpus.find(r => r.has_pdq && !r.low_conf).get
+    val lowNear = c.copy(image_id = s"${c.image_id}-lownear", ord = 2000L, low_conf = true,
+      h0 = c.h0 ^ 7L, variants = c.variants.map(v => v.updated(0, v(0) ^ 7L)))
+    val d = delta :+ lowNear
+    val (edges, band) = probeRun(16, thr, d)
+    assert(band.nonEmpty, "a ball past the budget probed in memory")
+    assert(edges == asTriples(oracle(thr, pdqDist, d)), "probe edges differ from brute force")
   }
 
   test("build exports one base segment beside its meta files") {

@@ -42,6 +42,20 @@ class LshSpec extends AnyFunSuite {
     assert(BandJoin.masksB(3, 16).length == 697)
   }
 
+  test("radius split never puts less radius on the index side (batch builds its probe side)") {
+    // the band join hash-builds its stored side only when rStored < rProbe;
+    // for the batch that must never hold, so its plans keep the probe build
+    val splits = for {
+      layout <- HashLayout.All; bits <- Seq(layout.parityBits, layout.wideBits)
+      t <- 0 to layout.maxThreshold
+      split <- scala.util.Try(BandJoin.radiusSplit(layout, t, bits)).toOption
+    } yield (layout.name, bits, t, split)
+    assert(splits.size > 100)
+    splits.foreach { case (name, bits, t, (rIdx, rPrb)) =>
+      assert(rIdx >= rPrb, s"$name $bits-bit t=$t split ($rIdx, $rPrb)")
+    }
+  }
+
   /** Build a minimal signature frame from raw 32-byte hashes (identity
     * variant only — hash-level test, no dihedral). */
   private def sigFrame(hashes: Seq[Array[Byte]], lowConf: Set[Int] = Set.empty) = {
@@ -263,13 +277,13 @@ class LshSpec extends AnyFunSuite {
   test("auto chunk width resolves by corpus size (chunkBits = 0 default)") {
     import graft.lsh.{BandJoin, BandJoin64}
     // 256-bit path: 16-bit parity up to the measured cutoff, then 32
-    assert(BandJoin.autoChunkBits(1000) == 16)
-    assert(BandJoin.autoChunkBits(BandJoin.AutoWideCutoff) == 16)
-    assert(BandJoin.autoChunkBits(BandJoin.AutoWideCutoff + 1) == 32)
+    assert(HashLayout.Pdq.autoChunkBits(1000) == 16)
+    assert(HashLayout.Pdq.autoChunkBits(BandJoin.AutoWideCutoff) == 16)
+    assert(HashLayout.Pdq.autoChunkBits(BandJoin.AutoWideCutoff + 1) == 32)
     // u64 path: 8-bit parity to 1e5 (measured 10x degeneracy past it)
-    assert(BandJoin64.autoChunkBits(1000) == 8)
-    assert(BandJoin64.autoChunkBits(BandJoin64.AutoWideCutoff) == 8)
-    assert(BandJoin64.autoChunkBits(BandJoin64.AutoWideCutoff + 1) == 16)
+    assert(HashLayout.Phash64.autoChunkBits(1000) == 8)
+    assert(HashLayout.Phash64.autoChunkBits(BandJoin64.AutoWideCutoff) == 8)
+    assert(HashLayout.Phash64.autoChunkBits(BandJoin64.AutoWideCutoff + 1) == 16)
     // the Pipeline-facing default: explicit 0 behaves like tiny-corpus
     // parity on a small frame (same edges as pinned widths)
     val r = new java.util.Random(21)
